@@ -168,13 +168,12 @@ object IO {
 
   /** Small-file compaction — the `OPTIMIZE` maintenance pass in plain
     * parquet. Streaming appends (every micro-batch is ≥1 file) and
-    * bucketed upserts accrete small files until scans drown in per-file
+    * per-batch layer writes accrete small files until scans drown in per-file
     * open costs; this rewrites `path` into `ceil(bytes / targetFileBytes)`
     * files, optionally z-order-clustered ([[graft.operators.ZOrder]]) so
     * the rewrite also buys statistics locality. Rewrite goes to a staging
-    * directory first and swaps in only after it is fully written — the
-    * same pattern as the bucketed upsert; Delta's `OPTIMIZE` is the
-    * transactional form. Returns the output file count. */
+    * directory first and swaps in only after it is fully written; Delta's
+    * `OPTIMIZE` is the transactional form. Returns the output file count. */
   def compact(
       spark: SparkSession,
       path: String,

@@ -1210,133 +1210,35 @@ object DeltaTable {
     ).getOrElse(true) // no stats → conservatively in range
 
   /** MERGE (upsert by key) through the log — the Delta operation the
-    * reference's CDC-upsert pipeline maps to (`MERGE INTO` in
-    * delta-spark). Candidate selection is two-phase, like upstream's
-    * findTouchedFiles: (1) the batch's key [min, max] evaluated against
-    * add-action stats AND partitionValues ([[DataSkipping
-    * .mayMatchWithPartitions]] — integral keys use the long bounds,
-    * string keys the string bounds, and a merge keyed on a partition
-    * column prunes to its partitions from the log alone); (2) the
-    * survivors are PROBED with a key-column-only semi-join scan so only
-    * files that actually CONTAIN a batch key are rewritten — straddling
-    * files with no real match carry over with no action. The commit is
-    * remove(touched) + add(rewritten ∪ inserts), atomic, O(files with
-    * matches) not O(table). Matched keys are replaced by their update
-    * row, unmatched update keys insert. Partitioned tables re-stage
-    * rewritten rows into their Hive dirs (an update that changes a
-    * row's partition value MOVES it atomically in the same commit).
-    * Under the CDF flag ([[changeFeedEnabled]]) the commit also stages
-    * precise row changes: `update_preimage`/`update_postimage` for
-    * matched keys, `insert` for new keys. Conflicting concurrent
-    * writers lose the commit race, clean up their staged files, and
-    * recompute against the new head. `updates` must be key-unique
-    * (dedup upstream — e.g. newest-per-key, as the CDC pipeline does),
-    * matching MERGE's source-uniqueness requirement; duplicate source
-    * keys would all insert. */
+    * reference's CDC-upsert pipeline maps to (`MERGE INTO ... WHEN
+    * MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *` in
+    * delta-spark). This is [[mergeInto]] with one unconditional update
+    * clause (every column that is neither generated nor identity — those
+    * recompute or keep their value) and one unconditional insert clause
+    * (every column), so candidate selection, the probe, CDF capture,
+    * deletion vectors, generated-column checks, partition moves and the
+    * commit retry are [[mergeInto]]'s. Two contracts are this entry
+    * point's own: an empty table is bootstrapped with a plain append, and
+    * `updates` must have exactly the table's schema. Source keys must be
+    * unique over non-null values ([[mergeInto]] refuses duplicates before
+    * staging; dedup upstream — e.g. newest-per-key, as the CDC pipeline
+    * does). */
   def merge(updates: DataFrame, table: String, keyCol: String): Unit = {
-    import org.apache.spark.sql.functions.{col, input_file_name, lit, max, min}
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val spark = updates.sparkSession
-    val tbl = new Path(table)
-    val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // keys must have add-action stats to skip on: integral types use the
-    // long bounds, strings (UUID/natural CDC keys) the string bounds —
-    // any other type would silently never skip.
-    val keyType = updates.schema(keyCol).dataType
-    val integral = Set[org.apache.spark.sql.types.DataType](
-      ByteType, ShortType, IntegerType, LongType).contains(keyType)
-    require(integral || keyType == org.apache.spark.sql.types.StringType,
-      s"delta: merge key `$keyCol` must be an integral or string type for " +
-        s"stats skipping, got ${keyType.catalogString}")
-    val range = updates.agg(min(col(keyCol)), max(col(keyCol))).head()
-    if (range.isNullAt(0)) return // empty batch: nothing to merge
-    val rangePred = col(keyCol) >= lit(range.get(0)) &&
-      col(keyCol) <= lit(range.get(1))
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      require(attempts <= 50, s"delta: merge gave up after $attempts conflicts")
-      // metadata-only head + distributed candidate selection past the
-      // replay threshold (see [[dml]]); full replay below it
-      val distributed = chooseDistributedReplay(spark, table)
-      val head =
-        if (distributed) DeltaLog.metaSnapshot(spark, table)
-        else snapshot(spark, table)
-      if (!head.isEmpty) DeltaLog.checkWritable(table, head)
-      if (head.isEmpty) { write(updates, table, SaveMode.Append); return }
-      val schema = logSchema(head, table)
-      // schema contract BEFORE staging, on every path: when data skipping
-      // leaves `touched` empty the union below never runs, and a drifted
-      // `updates` schema would otherwise commit files the reader silently
-      // NULL-poisons under the log's schema (same guard as append's)
-      require(schema.catalogString == updates.schema.catalogString,
-        s"delta: merge schema ${updates.schema.catalogString} does not match " +
-          s"the table schema ${schema.catalogString}")
-      val predExpr = DataSkipping.resolvePredicate(spark, schema, rangePred)
-      val candidates = selectCandidates(spark, table, head, distributed,
-        mappedSkipper(predExpr, schema), "MERGE")
-      val keys = updates.select(col(keyCol)).distinct()
-      // phase 2: probe which candidates CONTAIN a batch key — a scan of
-      // the key column only (Catalyst prunes the rest). File names are
-      // fresh UUIDs by construction, so name equality identifies files.
-      val touched =
-        if (candidates.isEmpty) Seq.empty[AddFile]
-        else {
-          // input_file_name() must bind BEFORE the join — projected over
-          // the scan it has one unambiguous source; after the semi-join
-          // the plan has two (updates may itself read files) and the
-          // analyzer rejects it
-          val probe = readFiles(spark, table, schema, head.partitionColumns, candidates)
-            .select(col(keyCol), input_file_name().as("__graft_file"))
-          val names = probe.join(keys, Seq(keyCol), "left_semi")
-            .select(col("__graft_file")).distinct().collect()
-            .map(r => new Path(r.getString(0)).getName).toSet
-          candidates.filter(f => names.contains(new Path(f.path).getName))
-        }
-      // rewriting touched files REMOVES their old incarnations — the
-      // append-only contract refuses exactly then (an upsert batch that
-      // matches nothing is a plain append and passes)
-      if (touched.nonEmpty) checkAppendOnly(table, head, "MERGE")
-      val touchedDf =
-        if (touched.isEmpty) None
-        else Some(readFiles(spark, table, schema, head.partitionColumns, touched))
-      val merged = enforceConstraints(touchedDf match {
-        case None => updates
-        case Some(t) => t.join(keys, Seq(keyCol), "left_anti").unionByName(updates)
-      }, head.configuration, Some(schema))
-      val cdc =
-        if (!changeFeedEnabled(spark, head)) Seq.empty
-        else {
-          val changes = touchedDf match {
-            case None => updates.withColumn("_change_type", lit("insert"))
-            case Some(t) =>
-              val oldKeys = t.select(col(keyCol)).distinct()
-              t.join(keys, Seq(keyCol), "left_semi")
-                .withColumn("_change_type", lit("update_preimage"))
-                .unionByName(updates.join(oldKeys, Seq(keyCol), "left_semi")
-                  .withColumn("_change_type", lit("update_postimage")))
-                .unionByName(updates.join(oldKeys, Seq(keyCol), "left_anti")
-                  .withColumn("_change_type", lit("insert")))
-          }
-          stageChangeData(changes, schema, tbl, fs,
-            partitionBy = head.partitionColumns, rebalance = true)
-        }
-      val adds = stageData(merged, schema, tbl, fs,
-        partitionBy = head.partitionColumns, rebalance = true)
-      val now = System.currentTimeMillis()
-      // rewrite retires the inputs' vectors: removes carry them (CDF
-      // pre-image exactness), retired sidecars get retention tombstones
-      val removes = touched.map(f => removeAction(f.path, now, dv = f.dv)) ++
-        touched.flatMap(_.dv).flatMap(d => DeletionVectors.tombstonePath(d))
-          .map(p => removeAction(p, now, dataChange = false))
-      done = commit(spark, table, head.version + 1,
-        commitInfoAction("MERGE", now) +: (cdc ++ removes ++ adds),
-        Some(head.configuration))
-      if (!done) (cdc ++ adds).foreach { a =>
-        fs.delete(new Path(tbl, actionPath(a)), false)
-      }
-    }
+    val head = DeltaLog.metaSnapshot(updates.sparkSession, table)
+    if (head.isEmpty) { write(updates, table, SaveMode.Append); return }
+    val schema = logSchema(head, table)
+    // mergeInto casts assigned values to the table's types; a drifted
+    // batch must fail loudly instead of being cast silently
+    require(schema.catalogString == updates.schema.catalogString,
+      s"delta: merge schema ${updates.schema.catalogString} does not match " +
+        s"the table schema ${schema.catalogString}")
+    val derived = GeneratedColumns.generatedOf(schema).map(_._1.name).toSet ++
+      GeneratedColumns.identityOf(schema).map(_.name)
+    def assign(cols: Seq[String]) = cols.map(c => c -> src(c)).toMap
+    val all = schema.fieldNames.toSeq
+    mergeInto(updates, table, keyCol, keyCol,
+      matched = Seq(MergeClause.Update(None, assign(all.filterNot(derived)))),
+      notMatched = Seq(MergeClause.Insert(None, assign(all))))
   }
 
   /** Column-name prefix distinguishing SOURCE columns from target
@@ -1352,8 +1254,9 @@ object DeltaTable {
 
   /** Multi-clause MERGE through the log — the full `MERGE INTO` shape
     * (delta-spark's `whenMatched(cond).update/delete`,
-    * `whenNotMatched(cond).insert`), generalizing [[merge]]'s canonical
-    * upsert. Clauses apply IN ORDER: for each matched (target row, source
+    * `whenNotMatched(cond).insert`), and the one MERGE engine: [[merge]]'s
+    * canonical upsert, every SQL `MERGE INTO` and the CDC merge sink all
+    * run here. Clauses apply IN ORDER: for each matched (target row, source
     * row) pair the FIRST matched clause whose condition holds fires
     * (update or delete); unfired matched rows carry over. Source rows
     * matching no target row run the notMatched clauses in order; rows
@@ -1361,13 +1264,17 @@ object DeltaTable {
     * "not applied" (SQL three-valued truth), and a missing condition
     * means always.
     *
-    * Candidate selection is [[merge]]'s two-phase shape — source-key
-    * [min,max] against add-action stats AND partitionValues, then a
-    * key-column-only probe — so the commit stays O(files containing a
-    * source key), not O(table). An update clause may assign partition
-    * columns: the rewritten row re-stages into its new Hive dir in the
-    * same atomic commit (the q89 cross-partition move). Under CDF
-    * ([[changeFeedEnabled]]) the commit stages precise row changes:
+    * Candidate selection is two-phase, like upstream's findTouchedFiles:
+    * the source-key [min,max] against add-action stats AND
+    * partitionValues (integral keys use the long bounds, string keys the
+    * string bounds; a merge keyed on a partition column prunes to its
+    * partitions from the log alone), then a key-column-only probe that
+    * keeps only files actually CONTAINING a source key — so the commit
+    * stays O(files containing a source key), not O(table). An update
+    * clause may assign partition columns: the rewritten row re-stages
+    * into its new Hive dir in the same atomic commit (the q89
+    * cross-partition move). Under CDF ([[changeFeedEnabled]]) the
+    * commit stages precise row changes:
     * `update_preimage`/`update_postimage` for update-clause rows,
     * `delete` for delete-clause rows, `insert` for inserted rows.
     *
@@ -1386,7 +1293,8 @@ object DeltaTable {
     * matching key would duplicate its target row through the join,
     * which is the "multiple source rows matched" error delta-spark
     * raises. NULL source keys never match and flow to the notMatched
-    * clauses. Optimistic-concurrency retry like [[merge]].
+    * clauses. Conflicting concurrent writers lose the commit race, clean
+    * up their staged files, and recompute against the new head.
     *
     * `txn = Some((appId, version))` makes the merge EXACTLY-ONCE for
     * streaming callers ([[graft.streaming.CdcIngest
@@ -1400,7 +1308,7 @@ object DeltaTable {
                 notMatched: Seq[MergeClause.Insert],
                 notMatchedBySource: Seq[MergeClause] = Seq.empty,
                 txn: Option[(String, Long)] = None): Unit = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, count_distinct, input_file_name, lit, max, min, when}
+    import org.apache.spark.sql.functions.{coalesce, col, count, count_distinct, input_file_name, lit, max, min, octet_length, sum, when}
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
     (matched ++ notMatchedBySource).foreach {
       case _: MergeClause.Update | _: MergeClause.Delete => ()
@@ -1417,9 +1325,14 @@ object DeltaTable {
     require(integral || keyType == StringType,
       s"delta: merge key `$sourceKey` must be an integral or string type for " +
         s"stats skipping, got ${keyType.catalogString}")
-    // one pass over the source: skip bounds + the uniqueness contract
+    // one pass over the source: skip bounds, the uniqueness contract and
+    // the observed bytes of its string columns (broadcast gate below)
+    val strCols = source.schema.fields.toSeq.filter(_.dataType == StringType)
+    val strBytes = strCols.map(f => coalesce(octet_length(col(f.name)), lit(0)))
+      .foldLeft(lit(0L))(_ + _)
     val srcStats = source.agg(min(col(sourceKey)), max(col(sourceKey)),
-      count(col(sourceKey)), count_distinct(col(sourceKey)), count(lit(1))).head()
+      count(col(sourceKey)), count_distinct(col(sourceKey)), count(lit(1)),
+      sum(strBytes)).head()
     // empty source: matched/insert clauses are vacuous, but by-source
     // clauses fire on EVERY target row (nothing matches) — and a txn'd
     // merge must still fall through so the loop commits the high-water
@@ -1441,12 +1354,15 @@ object DeltaTable {
     // joins default to shuffling BOTH sides — for the common
     // CDC-batch-into-big-table merge that shuffles the TARGET's touched
     // files to match a tiny source. srcStats carries the source's exact
-    // row count; when (rows × schema width estimate) fits the session's
-    // own autoBroadcastJoinThreshold (and a 4M-row sanity cap), hint
-    // broadcast on the source side of all three joins: the target side
-    // is then never shuffled. A huge source keeps today's shuffle joins.
+    // row count and string bytes; when (rows × fixed-width estimate +
+    // string bytes) fits the session's own autoBroadcastJoinThreshold
+    // (and a 4M-row sanity cap), hint broadcast on the source side of all
+    // three joins: the target side is then never shuffled. A large source
+    // — many rows, or a few rows of long text — keeps shuffle joins.
     val srcRows = srcStats.getLong(4)
-    val srcBytesEst = srcRows * math.max(1, source.schema.defaultSize)
+    val fixedWidth = source.schema.defaultSize - strCols.map(_.dataType.defaultSize).sum
+    val srcBytesEst = srcRows * math.max(1, fixedWidth) +
+      (if (srcStats.isNullAt(5)) 0L else srcStats.getLong(5))
     val bcThreshold = spark.sessionState.conf.autoBroadcastJoinThreshold
     val bcSource = bcThreshold > 0 && srcRows <= (4L << 20) &&
       srcBytesEst <= bcThreshold
@@ -2506,7 +2422,7 @@ object DeltaTable {
     * rewritten rows into their Hive dirs. With
     * `spark.graft.delta.changeDataFeed=true` the deleted rows are also
     * staged as a CDF file (`_change_type='delete'`) and committed as a
-    * `cdc` action. Optimistic-concurrency retry like [[merge]]. */
+    * `cdc` action. Optimistic-concurrency retry like [[mergeInto]]. */
   def delete(spark: SparkSession, table: String, predicate: Column): Unit =
     dml(spark, table, predicate, None)
 

@@ -70,13 +70,11 @@ case class SqlUpdateRule(spark: SparkSession) extends Rule[LogicalPlan] {
           GraftUpdateCommand(t.path, set, cond)
       }
 
-    // SQL MERGE. The CANONICAL upsert — ON t.k = s.k, WHEN MATCHED THEN
-    // UPDATE SET * / WHEN NOT MATCHED THEN INSERT * (the
-    // resolution-expanded forms) — routes to the engine's schema-equal
-    // fast path ([[DeltaTable.merge]]); every other clause combination
-    // over (matched UPDATE/DELETE, not-matched INSERT, not-matched-
-    // by-source UPDATE/DELETE, each optionally conditional) translates
-    // clause-by-clause to [[DeltaTable.mergeInto]]. MERGE WITH SCHEMA
+    // SQL MERGE. Every clause combination over (matched UPDATE/DELETE,
+    // not-matched INSERT, not-matched-by-source UPDATE/DELETE, each
+    // optionally conditional; `SET *` / `INSERT *` arrive as their
+    // resolution-expanded assignments) translates clause-by-clause to
+    // [[DeltaTable.mergeInto]], the engine's one MERGE. MERGE WITH SCHEMA
     // EVOLUTION needs no clause-side handling here: by post-hoc
     // resolution time Spark's ResolveMergeIntoSchemaEvolution has
     // already widened the table through GraftCatalog.alterTable
@@ -103,14 +101,7 @@ case class SqlUpdateRule(spark: SparkSession) extends Rule[LogicalPlan] {
                              matchedActions: Seq[MergeAction],
                              notMatchedActions: Seq[MergeAction],
                              notMatchedBySourceActions: Seq[MergeAction]): Option[LogicalPlan] = {
-    val targetCols = rel.output.map(_.name)
     val sourceAttrs = source.output
-    def isStar(assigns: Seq[Assignment]): Boolean =
-      assigns.size == targetCols.size && assigns.forall {
-        case Assignment(k: AttributeReference, v: AttributeReference) =>
-          k.name == v.name && sourceAttrs.exists(_.exprId == v.exprId)
-        case _ => false
-      }
     // the engine skips files on the key equality: ON t.k = s.k (either
     // side order, any names)
     val keys = cond match {
@@ -123,43 +114,36 @@ case class SqlUpdateRule(spark: SparkSession) extends Rule[LogicalPlan] {
         else None
       case _ => None
     }
-    keys.flatMap { case (targetKey, sourceKey) =>
-      (matchedActions, notMatchedActions, notMatchedBySourceActions) match {
-        // canonical star upsert with same-named key: schema-equal fast path
-        case (Seq(UpdateAction(None, upd, _)), Seq(InsertAction(None, ins)), Seq())
-            if targetKey == sourceKey && isStar(upd) && isStar(ins) =>
-          Some(GraftMergeCommand(t.path, source, targetCols, targetKey))
-        case _ =>
-          def assignMap(assigns: Seq[Assignment]): Map[String, Column] =
-            assigns.map { a =>
-              a.key match {
-                case attr: AttributeReference =>
-                  attr.name -> ColumnBridge.column(unresolveMerge(a.value, sourceAttrs))
-                case other => throw new UnsupportedOperationException(
-                  s"graft-delta: MERGE assignment to nested field $other is not supported")
-              }
-            }.toMap
-          def condCol(c: Option[Expression]): Option[Column] =
-            c.map(e => ColumnBridge.column(unresolveMerge(e, sourceAttrs)))
-          def updateOrDelete(a: MergeAction, clause: String): MergeClause = a match {
-            case UpdateAction(c, assigns, _) =>
-              MergeClause.Update(condCol(c), assignMap(assigns))
-            case DeleteAction(c) => MergeClause.Delete(condCol(c))
+    keys.map { case (targetKey, sourceKey) =>
+      def assignMap(assigns: Seq[Assignment]): Map[String, Column] =
+        assigns.map { a =>
+          a.key match {
+            case attr: AttributeReference =>
+              attr.name -> ColumnBridge.column(unresolveMerge(a.value, sourceAttrs))
             case other => throw new UnsupportedOperationException(
-              s"graft-delta: unsupported $clause action $other")
+              s"graft-delta: MERGE assignment to nested field $other is not supported")
           }
-          val matched = matchedActions.map(updateOrDelete(_, "WHEN MATCHED"))
-          val inserts = notMatchedActions.map {
-            case InsertAction(c, assigns) =>
-              MergeClause.Insert(condCol(c), assignMap(assigns))
-            case other => throw new UnsupportedOperationException(
-              s"graft-delta: unsupported WHEN NOT MATCHED action $other")
-          }
-          val bySource = notMatchedBySourceActions.map(
-            updateOrDelete(_, "WHEN NOT MATCHED BY SOURCE"))
-          Some(GraftMergeIntoCommand(t.path, source, targetKey, sourceKey,
-            matched, inserts, bySource))
+        }.toMap
+      def condCol(c: Option[Expression]): Option[Column] =
+        c.map(e => ColumnBridge.column(unresolveMerge(e, sourceAttrs)))
+      def updateOrDelete(a: MergeAction, clause: String): MergeClause = a match {
+        case UpdateAction(c, assigns, _) =>
+          MergeClause.Update(condCol(c), assignMap(assigns))
+        case DeleteAction(c) => MergeClause.Delete(condCol(c))
+        case other => throw new UnsupportedOperationException(
+          s"graft-delta: unsupported $clause action $other")
       }
+      val matched = matchedActions.map(updateOrDelete(_, "WHEN MATCHED"))
+      val inserts = notMatchedActions.map {
+        case InsertAction(c, assigns) =>
+          MergeClause.Insert(condCol(c), assignMap(assigns))
+        case other => throw new UnsupportedOperationException(
+          s"graft-delta: unsupported WHEN NOT MATCHED action $other")
+      }
+      val bySource = notMatchedBySourceActions.map(
+        updateOrDelete(_, "WHEN NOT MATCHED BY SOURCE"))
+      GraftMergeIntoCommand(t.path, source, targetKey, sourceKey,
+        matched, inserts, bySource)
     }
   }
 
@@ -200,22 +184,6 @@ case class GraftGeneratedInsertCommand(path: String, query: LogicalPlan)
   override def run(spark: SparkSession): Seq[Row] = {
     DeltaTable.write(ColumnBridge.ofRows(spark, query), path,
       org.apache.spark.sql.SaveMode.Append)
-    Seq.empty
-  }
-}
-
-/** Driver command executing the engine's MERGE (upsert by key) with the
-  * resolved SOURCE sub-plan as the updates relation, columns reordered
-  * to the target's order (the engine enforces schema equality). */
-case class GraftMergeCommand(path: String, source: LogicalPlan,
-                             targetCols: Seq[String], keyCol: String)
-    extends LeafRunnableCommand {
-  override def innerChildren: Seq[LogicalPlan] = Seq(source)
-  override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.col
-    val updates = ColumnBridge.ofRows(spark, source)
-      .select(targetCols.map(col): _*)
-    DeltaTable.merge(updates, path, keyCol)
     Seq.empty
   }
 }

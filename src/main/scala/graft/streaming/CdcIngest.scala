@@ -187,7 +187,7 @@ object CdcIngest {
     * (c/r/u) or before (d) and carries a known op. Well-formed c/r/u
     * rows decode to the data sink; well-formed DELETES are consumed
     * (this is the reference-parity append pipeline — an upsert sink is
-    * [[startUpsertIngest]]) but are NOT dead letters; only envelopes
+    * [[startIngestDeltaMerge]]) but are NOT dead letters; only envelopes
     * that parse to nothing usable reach the DLQ. */
   def startIngestWithDlq(
       raw: DataFrame,
@@ -231,185 +231,15 @@ object CdcIngest {
       }
       .start()
 
-  /** CDC MERGE semantics (the reference appends the after-image for every
-    * op — `SaveDelta.scala:160` — so updates/deletes pile up as extra
-    * rows; SURVEY §7.1 names the upsert path as the natural extension):
-    * per micro-batch, keep the NEWEST event per key (ts_ms, then op, for a
-    * deterministic pick), upsert c/r/u after-images and apply d as row
-    * removal.
-    *
-    * Plain-parquet implementation is BUCKETED so the merge is O(batch),
-    * not O(table): the keyed table lives as `bucket=<pmod(xxhash64(id),
-    * nBuckets)>` partition directories; a micro-batch reads ONLY the
-    * buckets containing touched keys (partition pruning on the directory
-    * column), anti-joins the touched keys, and swaps ONLY those bucket
-    * directories via staging + per-bucket rename — untouched buckets are
-    * never read or rewritten. Size nBuckets so table/nBuckets ≈ a few
-    * hundred MB at the target scale; Delta's `MERGE INTO` (a one-line
-    * foreachBatch body with delta-spark on the classpath) is the
-    * transactional form of exactly this file-pruned rewrite. */
-  def upsertBatch(batch: DataFrame, path: String, nBuckets: Int = 16): Unit = {
-    val spark = batch.sparkSession
-    import org.apache.hadoop.fs.Path
-    val fsEarly = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // complete any interrupted swap BEFORE reading current state: a
-    // replay against a half-swapped table would merge against missing
-    // buckets and persist the loss
-    recoverUpsert(fsEarly, path)
-    def bucketOf(c: org.apache.spark.sql.Column) =
-      pmod(xxhash64(c), lit(nBuckets.toLong)).cast("int")
-    // newest-per-key pick: ts_ms, then the connector SEQUENCE (Debezium
-    // lsn — the only intra-millisecond order signal; a same-ms
-    // delete+re-create is unordered by ts_ms alone), then op as the
-    // deterministic last resort for sequence-less envelopes
-    val seqOrd =
-      if (batch.columns.contains("seq")) col("seq").desc_nulls_last else lit(0)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("key_id"))
-      .orderBy(col("ts_ms").desc, seqOrd, col("op").desc)
-    // consumed by upserts, the touched-key relation, AND the bucket
-    // collect — persist for the batch, released before returning (the
-    // imperative foreachBatch context allows a clean unpersist)
-    val latest = batch
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
-      .withColumn("bucket", bucketOf(col("key_id")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rowCols = batch.columns.filterNot(Set("key_id", "op", "ts_ms", "seq")).toSeq
-    val upserts = latest.filter(col("op") =!= "d")
-      .select((rowCols.map(col) :+ col("bucket")): _*)
-    val touched = latest.select(col("key_id"), col("bucket"))
-    // bounded by nBuckets — a tiny driver-side list, not table data
-    val touchedBuckets: Seq[Int] =
-      touched.select(col("bucket")).distinct().collect().map(_.getInt(0)).toSeq
-    val target = new Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries =
-      if (fs.exists(target)) fs.listStatus(target).toSeq else Seq.empty
-    val hasBucketed = entries.exists(_.getPath.getName.startsWith("bucket="))
-    // a table written before bucketing (flat part-files at the root) gets a
-    // one-time O(table) migration: merge EVERYTHING and rewrite bucketed —
-    // silently ignoring legacy rows would lose updates/deletes against
-    // them and leave a mixed layout partition discovery rejects
-    val legacyFlat = entries.exists(e =>
-      e.isFile && e.getPath.getName.endsWith(".parquet"))
-    val merged =
-      if (legacyFlat) {
-        // recursiveFileLookup reads flat files AND any bucket=N leaves
-        // uniformly (the bucket column is directory-derived, not stored
-        // in the files) — recompute it from the key
-        val current = spark.read
-          .option("recursiveFileLookup", "true").parquet(path)
-        current.join(touched, current("id") === touched("key_id"), "left_anti")
-          .withColumn("bucket", bucketOf(col("id")))
-          .unionByName(upserts)
-      } else if (hasBucketed) {
-        // steady state: only touched bucket directories are listed/read
-        val current = spark.read.parquet(path)
-          .filter(col("bucket").isin(touchedBuckets: _*))
-        current.join(touched, current("id") === touched("key_id"), "left_anti")
-          .unionByName(upserts)
-      } else upserts
-    val staged = new Path(path + ".staged")
-    try {
-      fs.delete(staged, true)
-      merged.write.mode("overwrite").partitionBy("bucket").parquet(staged.toString)
-      // pending marker AFTER the staged table is durable: the point of no
-      // return — a crash anywhere inside the swap leaves marker + staged,
-      // and recoverUpsert redoes the swap forward from the durable stage
-      // (the LayerStore protocol; without it, a crash in any
-      // delete-then-rename window loses the bucket/table permanently and
-      // the replay persists the loss). Single-writer per table, like
-      // every upsert sink.
-      val plan =
-        if (legacyFlat) "full"
-        else touchedBuckets.map { b =>
-          val kind =
-            if (fs.exists(new Path(staged, s"bucket=$b"))) "swap"
-            else "drop" // bucket whose rows were all deleted stages no dir
-          s"$b=$kind"
-        }.mkString(",")
-      LayerStore.writeMarkerAtomic(fs, upsertMarker(path), plan)
-      finishUpsertSwap(fs, path, plan)
-    } finally latest.unpersist()
-  }
-
-  private def upsertMarker(path: String) =
-    new org.apache.hadoop.fs.Path(path + ".upsert.pending")
-
-  /** Complete an interrupted [[upsertBatch]] swap, if one is pending —
-    * called at every upsertBatch entry (the single writer), so a crashed
-    * swap heals on the next batch/replay instead of merging against a
-    * half-swapped table. */
-  private[streaming] def recoverUpsert(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val marker = upsertMarker(path)
-    if (!fs.exists(marker)) return
-    val in = fs.open(marker)
-    val plan = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    finishUpsertSwap(fs, path, plan)
-  }
-
-  /** Forward-redo swap: the marker is written only after the staged table
-    * is fully durable, so every step re-executes idempotently — a staged
-    * dir that is gone was already renamed into place. */
-  private def finishUpsertSwap(
-      fs: org.apache.hadoop.fs.FileSystem, path: String, plan: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    val staged = new org.apache.hadoop.fs.Path(path + ".staged")
-    if (plan == "full") {
-      if (fs.exists(staged)) {
-        fs.delete(target, true)
-        require(fs.rename(staged, target), s"upsert swap rename failed: $target")
-      }
-    } else {
-      if (!fs.exists(target)) fs.mkdirs(target)
-      plan.split(",").filter(_.nonEmpty).foreach { ent =>
-        val Array(b, kind) = ent.split("=")
-        val src = new org.apache.hadoop.fs.Path(staged, s"bucket=$b")
-        val dst = new org.apache.hadoop.fs.Path(target, s"bucket=$b")
-        kind match {
-          case "swap" =>
-            if (fs.exists(src)) { // gone = a prior attempt already swapped
-              fs.delete(dst, true)
-              require(fs.rename(src, dst), s"upsert swap rename failed: $dst")
-            }
-          case "drop" => fs.delete(dst, true)
-        }
-      }
-      fs.delete(staged, true)
-    }
-    fs.delete(upsertMarker(path), true)
-  }
-
-  /** K1 upsert variant: decode WITH op handling and maintain the current
-    * row per key at `path` (vs [[startIngest]]'s reference-parity append).
-    * foreachBatch is at-least-once; replaying a batch is idempotent
-    * because the merge is keyed and newest-wins. */
-  def startUpsertIngest(
-      raw: DataFrame,
-      path: String,
-      checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
-    Ops.decodeCdcOps(raw).writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        upsertBatch(batch.toDF(), path)
-      }
-      .start()
-
-  /** CDC MERGE into the from-scratch Delta LOG — the transactional form
-    * of [[startUpsertIngest]]'s bucketed-parquet rewrite, and the
-    * upsert sink SURVEY §7.1 names as the extension of the reference's
-    * append-only pipeline (`SaveDelta.scala:160` appends the
-    * after-image for every op, piling updates and all-null deletes into
-    * the table). Per micro-batch: decode ops, keep the NEWEST event per
-    * key (ts_ms → Debezium lsn → op, [[upsertBatch]]'s deterministic
-    * pick), then ONE multi-clause [[graft.sources.delta.DeltaTable
+  /** CDC MERGE into the from-scratch Delta LOG — the upsert sink SURVEY
+    * §7.1 names as the extension of the reference's append-only pipeline
+    * (`SaveDelta.scala:160` appends the after-image for every op, piling
+    * updates and all-null deletes into the table). Per micro-batch:
+    * decode ops, keep the NEWEST event per key — ts_ms, then the
+    * connector SEQUENCE (Debezium lsn, the only intra-millisecond order
+    * signal: a same-ms delete + re-create is unordered by ts_ms alone),
+    * then op as the deterministic last resort for sequence-less
+    * envelopes — then ONE multi-clause [[graft.sources.delta.DeltaTable
     * .mergeInto]] — matched `d` rows DELETE, other matched ops UPDATE
     * from the after-image, unmatched non-`d` ops INSERT (a delete for a
     * key the table never saw is a no-op, matching upsert semantics).

@@ -19,8 +19,8 @@ object LayerStore {
     * create+write can crash mid-body and leave a half-written plan that
     * wedges every recovery parse until manual repair; with the rename the
     * marker is either absent (recovery no-ops, the staged dir is orphan)
-    * or complete. Shared by [[compact]] and CdcIngest's upsert swap. */
-  private[streaming] def writeMarkerAtomic(
+    * or complete. */
+  private def writeMarkerAtomic(
       fs: org.apache.hadoop.fs.FileSystem, marker: Path, body: String): Unit = {
     val tmp = new Path(marker.getParent,
       s".${marker.getName}.tmp-${java.util.UUID.randomUUID()}")

@@ -31,8 +31,8 @@ import graft.operators.{ConnectedComponents, TextDedup}
   * Replay-idempotent by construction: each micro-batch writes BOTH its
   * accepted docs and their signatures under `batch=<id>` directories with
   * overwrite — a replayed batch overwrites its own outputs instead of
-  * appending duplicates (same pattern as the CDC upsert sink; on Delta
-  * both writes become one transaction).
+  * appending duplicates (the [[LayerStore]] pattern; on Delta both writes
+  * become one transaction).
   *
   * Scale shape: per batch, one band-bucket join of |batch| × bands rows
   * against the store's band relation — linear in batch size; the store

@@ -713,10 +713,12 @@ class DeletionVectorSpec extends SparkSpec {
     assert(got === expected)
     // protocol upgraded by the merge (first DV on the table)
     assert(head.readerFeatures.contains("deletionVectors"))
-    // and a rewrite-path upsert (DeltaTable.merge) touching the DV'd
-    // file retires the vector cleanly: the remove carries it (CDF
-    // pre-image exactness), the rewritten file is vector-free, reads
-    // stay exact (id 7 still lives in the original file)
+    // and a rewrite-path upsert touching the DV'd file retires the
+    // vector cleanly: the remove carries it (CDF pre-image exactness),
+    // the rewritten file is vector-free, reads stay exact (id 7 still
+    // lives in the original file). With the property on, the upsert
+    // would take the DV path, so it is unset first.
+    DeltaTable.unsetProperties(spark, t, Set("delta.enableDeletionVectors"))
     DeltaTable.merge(Seq((7, "uu7")).toDF("id", "s"), t, "id")
     val afterUpsert = DeltaTable.read(spark, t).collect()
       .map(r => (r.getInt(0), r.getString(1))).toSet

@@ -312,4 +312,51 @@ class DeltaMergeIntoSpec extends SparkSpec {
         Map("id" -> src("id"), "s" -> src("s"), "n" -> src("n")))))
     assert(rows(t) === Set((7L, "only", 70L)))
   }
+
+  test("broadcast gate sizes the source by its observed string bytes") {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, LogicalPlan}
+    import org.apache.spark.sql.catalyst.rules.Rule
+    // records whether any optimized plan carries a broadcast join hint
+    val hinted = new java.util.concurrent.atomic.AtomicBoolean(false)
+    object HintRecorder extends Rule[LogicalPlan] {
+      def apply(p: LogicalPlan): LogicalPlan = {
+        if (p.exists {
+            case j: Join => (j.hint.leftHint ++ j.hint.rightHint)
+              .exists(_.strategy.contains(BROADCAST))
+            case _ => false
+          }) hinted.set(true)
+        p
+      }
+    }
+    // three source rows; the threshold sits between their fixed-width
+    // estimate (3 × (8 + 20 + 8) bytes) and their real size
+    def mergeWithText(t: String, len: Int): Boolean = {
+      val text = "x" * len
+      hinted.set(false)
+      DeltaTable.mergeInto(
+        Seq((1L, text, 1L), (2L, text, 2L), (9L, text, 9L)).toDF("id", "s", "n"),
+        t, "id", "id",
+        matched = Seq(MergeClause.Update(None, Map("s" -> src("s")))),
+        notMatched = Seq(MergeClause.Insert(None,
+          Map("id" -> src("id"), "s" -> src("s"), "n" -> src("n")))))
+      hinted.get()
+    }
+    val threshold = "autoBroadcastJoinThreshold"
+    spark.conf.set(s"spark.sql.$threshold", "4096")
+    spark.experimental.extraOptimizations = Seq(HintRecorder)
+    try {
+      val t1 = tmp()
+      base(t1)
+      assert(mergeWithText(t1, 10), "a short-text source must broadcast")
+      val t2 = tmp()
+      base(t2)
+      assert(!mergeWithText(t2, 5000),
+        "15 KB of observed text is over the 4 KB threshold: no broadcast")
+      assert(rows(t2).map(r => (r._1, r._2.length)) ===
+        Set((1L, 5000), (2L, 5000), (3L, 1), (4L, 1), (9L, 5000)))
+    } finally {
+      spark.experimental.extraOptimizations = Nil
+      spark.conf.unset(s"spark.sql.$threshold")
+    }
+  }
 }

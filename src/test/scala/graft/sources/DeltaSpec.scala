@@ -168,6 +168,20 @@ class DeltaSpec extends SparkSpec {
     assert(DeltaTable.read(spark, t).collect().map(_.getInt(0)).toSeq === Seq(1))
   }
 
+  test("merge refuses duplicate source keys and leaves the table unchanged") {
+    val t = tmp()
+    DeltaTable.write(Seq((1, "a"), (2, "b")).toDF("id", "s"), t, SaveMode.Append)
+    val v = DeltaLog.snapshot(spark, t).version
+    // a duplicated key would insert (or update) one key twice
+    val e = intercept[IllegalArgumentException] {
+      DeltaTable.merge(Seq((2, "x"), (2, "y"), (3, "z")).toDF("id", "s"), t, "id")
+    }
+    assert(e.getMessage.contains("duplicate"), e.getMessage)
+    assert(DeltaLog.snapshot(spark, t).version === v)
+    assert(DeltaTable.read(spark, t).collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSet === Set((1, "a"), (2, "b")))
+  }
+
   test("add actions carry protocol-shaped stats; readRange skips excluded files") {
     val t = tmp()
     DeltaTable.write((1 to 100).map(i => (i, i.toLong * 2)).toDF("id", "v")

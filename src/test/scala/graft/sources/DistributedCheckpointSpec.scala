@@ -129,7 +129,10 @@ class DistributedCheckpointSpec extends SparkSpec {
         .getOrElse(fail("expected at least one file-backed ('u') vector")))
     // a rewrite-path upsert retires ONE file's vector: the removed data
     // file and its retired sidecar are tombstone-referenced — the
-    // orphan walk must keep both (they belong to vacuumRemoved's clock)
+    // orphan walk must keep both (they belong to vacuumRemoved's clock).
+    // With the property on, the upsert would take the DV path, so it is
+    // unset first.
+    DeltaTable.unsetProperties(spark, t, Set("delta.enableDeletionVectors"))
     DeltaTable.merge(Seq(2L).toDF("id"), t, "id")
     val lastCommit = DeltaLog.readCommit(spark, t,
       DeltaLog.snapshot(spark, t).version)
@@ -185,7 +188,10 @@ class DistributedCheckpointSpec extends SparkSpec {
         .getOrElse(fail("expected a file-backed vector")))
     // a rewrite-path upsert tombstones ONE data file AND retires its
     // sidecar reference (dataChange=false remove) — the retention walk
-    // may reclaim both once expired, but must never touch live state
+    // may reclaim both once expired, but must never touch live state.
+    // With the property on, the upsert would take the DV path, so it is
+    // unset first.
+    DeltaTable.unsetProperties(spark, t, Set("delta.enableDeletionVectors"))
     DeltaTable.merge(Seq(2L).toDF("id"), t, "id")
     val lastCommit = DeltaLog.readCommit(spark, t,
       DeltaLog.snapshot(spark, t).version)

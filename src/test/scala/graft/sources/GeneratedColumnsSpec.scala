@@ -174,6 +174,30 @@ class GeneratedColumnsSpec extends SparkSpec {
     assert(e.getMessage.contains("identity column"), e.getMessage)
   }
 
+  test("DeltaTable.merge recomputes generated columns on update, checks them on insert") {
+    initCatalog()
+    spark.sql("""CREATE TABLE ggen.db.mg (
+      k BIGINT, n BIGINT, n2 BIGINT GENERATED ALWAYS AS (n * 2))""")
+    spark.sql("INSERT INTO ggen.db.mg (k, n) VALUES (1, 10), (2, 20)")
+    val path = s"$warehouse/db/mg"
+    def rows() = spark.sql("SELECT k, n, n2 FROM ggen.db.mg ORDER BY k")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    // matched key: the source's contradicting n2 is not written, the
+    // update recomputes it from the new n
+    DeltaTable.merge(Seq((1L, 15L, 999L)).toDF("k", "n", "n2"), path, "k")
+    assert(rows() === Seq((1L, 15L, 30L), (2L, 20L, 40L)))
+    // new key: a contradicting n2 refuses the whole merge
+    val v = DeltaLog.snapshot(spark, path).version
+    val e = intercept[Exception] {
+      DeltaTable.merge(Seq((9L, 90L, 7L)).toDF("k", "n", "n2"), path, "k")
+    }
+    assert(e.getMessage.contains("must equal"), e.getMessage)
+    assert(DeltaLog.snapshot(spark, path).version === v)
+    // a consistent value inserts
+    DeltaTable.merge(Seq((9L, 90L, 180L)).toDF("k", "n", "n2"), path, "k")
+    assert(rows() === Seq((1L, 15L, 30L), (2L, 20L, 40L), (9L, 90L, 180L)))
+  }
+
   test("identity + deletion vectors: DV DML keeps ids, later allocation stays unique") {
     initCatalog()
     spark.sql("""CREATE TABLE ggen.db.idv (

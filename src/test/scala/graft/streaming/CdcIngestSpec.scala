@@ -213,157 +213,60 @@ class CdcIngestSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("cdc_lsn").toString
-    val s = MemoryStream[String]
-    s.addData(
-      envLsn("c", 1, "run", 1000, 1),
+    val t = s"$dir/t"
+    // batch 1 bootstraps ids 1 and 2; batch 2 is MERGED, so the lsn tie
+    // must order events for the matched-update and matched-delete clauses
+    val s1 = MemoryStream[String]
+    s1.addData(envLsn("c", 1, "run", 1000, 1), envLsn("c", 2, "walk", 1000, 1))
+    CdcIngest.startIngestDeltaMerge(s1.toDF(), t, s"$dir/chk1", appId = "lsn1",
+      trigger = Trigger.AvailableNow()).awaitTermination(60000)
+    val s2 = MemoryStream[String]
+    s2.addData(
       // id 1: delete then RE-CREATE inside one millisecond — only the
       // lsn orders them; an op-letter tiebreak would pick the delete
       // and lose a row that exists in the source
       envLsn("d", 1, "run", 2000, 2), envLsn("c", 1, "swim", 2000, 3),
-      // id 2: create then delete at one ts — newest-by-lsn is the delete
-      envLsn("c", 2, "walk", 1000, 1),
-      envLsn("c", 2, "hike", 2000, 4), envLsn("d", 2, "hike", 2000, 5))
-    CdcIngest.startUpsertIngest(s.toDF(), s"$dir/data", s"$dir/chk",
+      // id 2: update then delete at one ts — newest-by-lsn is the delete
+      envLsn("u", 2, "hike", 2000, 4), envLsn("d", 2, "hike", 2000, 5))
+    CdcIngest.startIngestDeltaMerge(s2.toDF(), t, s"$dir/chk2", appId = "lsn2",
       trigger = Trigger.AvailableNow()).awaitTermination(60000)
-    val out = spark.read.parquet(s"$dir/data")
+    val out = graft.sources.delta.DeltaTable.read(spark, t)
     assert(out.select("id").collect().map(_.getInt(0)).toSet === Set(1))
     assert(out.filter(col("id") === 1).select("sport_type").head().getString(0)
       === "swim", "the re-created row must win the same-ms tie via lsn")
-  }
-
-  test("upsert ingest: an interrupted bucket swap heals at the next batch") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cdc_crash").toString
-    val s1 = MemoryStream[String]
-    s1.addData((1 to 8).map(i => env("c", i, "run", 1000L + i)): _*)
-    CdcIngest.startUpsertIngest(s1.toDF(), s"$dir/data", s"$dir/chk1",
-      trigger = Trigger.AvailableNow()).awaitTermination(60000)
-    // simulate the mid-swap crash: id-1's bucket renamed into the staged
-    // tree (durable), destination deleted, pending marker on disk — the
-    // state a kill between delete(dst) and rename(src, dst) leaves
-    val b1 = Seq(1).toDF("key_id")
-      .select(pmod(xxhash64(col("key_id")), lit(16L)).cast("int")).head().getInt(0)
-    val fs = new org.apache.hadoop.fs.Path(s"$dir/data")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/data.staged"))
-    assert(fs.rename(
-      new org.apache.hadoop.fs.Path(s"$dir/data/bucket=$b1"),
-      new org.apache.hadoop.fs.Path(s"$dir/data.staged/bucket=$b1")))
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$dir/data.upsert.pending"), true)
-    out.write(s"$b1=swap".getBytes("UTF-8")); out.close()
-    // next batch recovers BEFORE merging — without it, the replay would
-    // read the missing bucket as empty and persist the loss
-    val s2 = MemoryStream[String]
-    s2.addData(env("u", 2, "swim", 9999))
-    CdcIngest.startUpsertIngest(s2.toDF(), s"$dir/data", s"$dir/chk2",
-      trigger = Trigger.AvailableNow()).awaitTermination(60000)
-    val rows = spark.read.parquet(s"$dir/data")
-    assert(rows.select("id").collect().map(_.getInt(0)).toSet === (1 to 8).toSet,
-      "the interrupted bucket's rows must survive")
-    assert(rows.filter(col("id") === 2).select("sport_type").head().getString(0) === "swim")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/data.upsert.pending")))
   }
 
   test("upsert ingest: replayed updates + deletes converge to the source end-state") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("cdc_upsert").toString
+    val t = s"$dir/t"
+    def read() = graft.sources.delta.DeltaTable.read(spark, t)
     // batch 1: three inserts
     val s1 = MemoryStream[String]
     s1.addData(env("c", 1, "run", 1000), env("c", 2, "walk", 1001), env("c", 3, "bike", 1002))
-    CdcIngest.startUpsertIngest(s1.toDF(), s"$dir/data", s"$dir/chk1",
+    CdcIngest.startIngestDeltaMerge(s1.toDF(), t, s"$dir/chk1", appId = "up1",
       trigger = Trigger.AvailableNow()).awaitTermination(60000)
-    assert(spark.read.parquet(s"$dir/data").count() === 3)
+    assert(read().count() === 3)
     // batch 2: update id 2 (with an older stale image that must lose to the
     // newer one inside the same batch), delete id 3, insert id 4
-    val s2 = MemoryStream[String]
-    s2.addData(env("u", 2, "stale", 1500), env("u", 2, "swim", 2000),
+    val batch2 = Seq(env("u", 2, "stale", 1500), env("u", 2, "swim", 2000),
       env("d", 3, "bike", 2001), env("c", 4, "hike", 2002))
-    CdcIngest.startUpsertIngest(s2.toDF(), s"$dir/data", s"$dir/chk2",
+    val s2 = MemoryStream[String]
+    s2.addData(batch2: _*)
+    CdcIngest.startIngestDeltaMerge(s2.toDF(), t, s"$dir/chk2", appId = "up2",
       trigger = Trigger.AvailableNow()).awaitTermination(60000)
-    val out = spark.read.parquet(s"$dir/data")
+    // the same events delivered again under a fresh checkpoint (an
+    // at-least-once redelivery the txn mark cannot recognise) re-apply
+    // to the same end state: the merge is keyed and newest-wins
+    val s3 = MemoryStream[String]
+    s3.addData(batch2: _*)
+    CdcIngest.startIngestDeltaMerge(s3.toDF(), t, s"$dir/chk3", appId = "up3",
+      trigger = Trigger.AvailableNow()).awaitTermination(60000)
+    val out = read()
     assert(out.select("id").collect().map(_.getInt(0)).toSet === Set(1, 2, 4))
     assert(out.filter(col("id") === 2).select("sport_type").head().getString(0) === "swim")
     assert(out.filter(col("id") === 2).select("id_employee").head().getInt(0) === 20)
-  }
-
-  test("upsert ingest: merge is O(batch) — untouched bucket files are not rewritten") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cdc_upsert_bkt").toString
-    // batch 1: 8 inserts spread over the 16 hash buckets
-    val s1 = MemoryStream[String]
-    s1.addData((1 to 8).map(i => env("c", i, "run", 1000L + i)): _*)
-    CdcIngest.startUpsertIngest(s1.toDF(), s"$dir/data", s"$dir/chk1",
-      trigger = Trigger.AvailableNow()).awaitTermination(60000)
-
-    // per bucket dir: file name → mtime (parquet files only)
-    def bucketFiles(): Map[String, Map[String, Long]] = {
-      val root = new java.io.File(s"$dir/data")
-      root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("bucket="))
-        .map { d =>
-          d.getName -> d.listFiles().filter(_.getName.endsWith(".parquet"))
-            .map(f => f.getName -> f.lastModified()).toMap
-        }.toMap
-    }
-    val before = bucketFiles()
-    assert(before.keySet.size >= 2, s"ids 1..8 must span >=2 buckets, got $before")
-
-    // the bucket id 1 hashes to, computed with the SAME expression the sink
-    // uses (int key → xxhash64 → pmod 16)
-    val b1 = Seq(1).toDF("key_id")
-      .select(pmod(xxhash64(col("key_id")), lit(16L)).cast("int")).head().getInt(0)
-    Thread.sleep(1100) // FS mtime granularity
-
-    // batch 2: update ONLY id 1
-    val s2 = MemoryStream[String]
-    s2.addData(env("u", 1, "swim", 9999))
-    CdcIngest.startUpsertIngest(s2.toDF(), s"$dir/data", s"$dir/chk2",
-      trigger = Trigger.AvailableNow()).awaitTermination(60000)
-    val after = bucketFiles()
-
-    // touched bucket rewritten, every other bucket byte-identical on disk
-    assert(after(s"bucket=$b1") !== before(s"bucket=$b1"))
-    (before - s"bucket=$b1").foreach { case (bucket, files) =>
-      assert(after(bucket) === files, s"$bucket was rewritten by an unrelated batch")
-    }
-    // and the merge still converges
-    val out = spark.read.parquet(s"$dir/data")
-    assert(out.count() === 8)
-    assert(out.filter(col("id") === 1).select("sport_type").head().getString(0) === "swim")
-  }
-
-  test("upsert ingest: pre-bucketing flat table is migrated, not ignored") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cdc_upsert_mig").toString
-    // build a table the NEW way, then flatten it to the legacy layout
-    // (plain part-files at the root, no bucket dirs)
-    val s1 = MemoryStream[String]
-    s1.addData(env("c", 1, "run", 1000), env("c", 2, "walk", 1001), env("c", 3, "bike", 1002))
-    CdcIngest.startUpsertIngest(s1.toDF(), s"$dir/tmp", s"$dir/chk1",
-      trigger = Trigger.AvailableNow()).awaitTermination(60000)
-    spark.read.parquet(s"$dir/tmp").drop("bucket")
-      .write.parquet(s"$dir/data")
-    assert(!new java.io.File(s"$dir/data").listFiles()
-      .exists(_.getName.startsWith("bucket=")), "precondition: flat layout")
-
-    // one post-upgrade batch: update id 2, delete id 3, insert id 4 —
-    // updates/deletes against LEGACY rows must apply, and the layout must
-    // come out fully bucketed (no mixed flat+partitioned leaves)
-    val s2 = MemoryStream[String]
-    s2.addData(env("u", 2, "swim", 2000), env("d", 3, "bike", 2001), env("c", 4, "hike", 2002))
-    CdcIngest.startUpsertIngest(s2.toDF(), s"$dir/data", s"$dir/chk2",
-      trigger = Trigger.AvailableNow()).awaitTermination(60000)
-    val out = spark.read.parquet(s"$dir/data")
-    assert(out.select("id").collect().map(_.getInt(0)).toSet === Set(1, 2, 4))
-    assert(out.filter(col("id") === 2).select("sport_type").head().getString(0) === "swim")
-    val leaves = new java.io.File(s"$dir/data").listFiles()
-    assert(!leaves.exists(f => f.isFile && f.getName.endsWith(".parquet")),
-      "legacy flat files must be gone after migration")
-    assert(leaves.exists(_.getName.startsWith("bucket=")))
   }
 
   test("metrics listener accumulates progress") {

@@ -64,8 +64,8 @@ class IncrementalAggSpec extends SparkSpec {
   }
 
   test("view == batch re-aggregate over the upsert sink's end state") {
-    // the same event stream drives BOTH consumers: the keyed upsert table
-    // (current rows) and the incremental view; the view must equal the
+    // the same event stream drives BOTH consumers: the keyed Delta merge
+    // table (current rows) and the incremental view; the view must equal the
     // groupBy over the table — the MV-consistency contract
     val dir = java.nio.file.Files.createTempDirectory("incagg2").toString
     implicit val sqlCtx = spark.sqlContext
@@ -80,11 +80,18 @@ class IncrementalAggSpec extends SparkSpec {
     s1.addData(events: _*)
     IncrementalAgg.start(s1.toDF(), s"$dir/state", s"$dir/chk_v",
       trigger = Trigger.AvailableNow()).awaitTermination(60000)
+    // two micro-batches on the table side: the inserts bootstrap it, the
+    // update / delete / insert tail goes through the MERGE
     val s2 = MemoryStream[String]
-    s2.addData(events: _*)
-    CdcIngest.startUpsertIngest(s2.toDF(), s"$dir/table", s"$dir/chk_t",
-      trigger = Trigger.AvailableNow()).awaitTermination(60000)
-    val fromTable = spark.read.parquet(s"$dir/table")
+    val q = CdcIngest.startIngestDeltaMerge(s2.toDF(), s"$dir/table",
+      s"$dir/chk_t", trigger = Trigger.ProcessingTime(0))
+    try {
+      s2.addData(events.take(3): _*)
+      q.processAllAvailable()
+      s2.addData(events.drop(3): _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    val fromTable = graft.sources.delta.DeltaTable.read(spark, s"$dir/table")
       .groupBy("sport_type")
       .agg(org.apache.spark.sql.functions.sum("distance").as("sum_m"),
         org.apache.spark.sql.functions.count(
