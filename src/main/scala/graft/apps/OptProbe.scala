@@ -375,6 +375,12 @@ object OptProbe {
       val cdc = files.count(f => f.endsWith(".parquet") && f.contains("_change_data"))
       println(s"[files] data=$data cdc=$cdc")
     } finally {
+      // drop the source view and the catalog's confs before deleting the
+      // warehouse: the session's configuration then names no catalog
+      // over a deleted directory
+      spark.catalog.dropTempView(s"docs_src_$cat")
+      spark.conf.unset(s"spark.sql.catalog.$cat")
+      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
       import scala.jdk.CollectionConverters._
       val walk = java.nio.file.Files.walk(scratch)
       try walk.iterator().asScala.toSeq

@@ -41,7 +41,11 @@ object TextDedup {
     * raw docs. The doc-level `dropDuplicates` keeps replayed/re-appended
     * loads (identical rows delivered twice) from double-counting shingle
     * sets; doc_id is otherwise assumed unique — two DIFFERENT texts under
-    * one id are a broken input either way.
+    * one id are a broken input either way. On such an input the dedup
+    * keeps one arbitrary text per id BEFORE the `n`-word filter, so an id
+    * whose texts are of mixed validity (one at least `n` words long,
+    * one shorter) can lose every row: it has no shingles at all when the
+    * short text is the one kept.
     *
     * The array is built by [[graft.functions.ShingleArray]] — one
     * compiled loop per row inside whole-stage codegen. It replaced an

@@ -384,9 +384,48 @@ object DeltaLog {
     * gap raises instead of silently reconstructing partial state.
     * Version -1 = no commits yet; `asOf` above the head is an error
     * (upstream's VersionNotFoundException), never a silent read of
-    * newer data. */
+    * newer data.
+    *
+    * The checkpoint seed is decoded once and then served from the
+    * driver-side [[CheckpointCache]] until the checkpoint is replaced
+    * or rewritten: a read, overwrite or merge of a checkpointed table
+    * starts no Spark job for its log while the checkpoint holds at most
+    * `spark.graft.delta.distributedReplayThreshold` rows. Past that, the
+    * add rows are decoded afresh on every call (the cache bounds itself
+    * by the same value); such tables normally read through
+    * [[prunedSnapshot]]. The guards and the protocol gate run on every
+    * call, cached or not. */
   def snapshot(spark: SparkSession, table: String,
-               asOf: Option[Long] = None): Snapshot = {
+               asOf: Option[Long] = None): Snapshot =
+    replay(spark, table, asOf, withFiles = true)
+
+  /** [[snapshot]] WITHOUT the file/tombstone state — for APPEND-shaped
+    * commits, which need the head's version, schema, partitioning,
+    * configuration, protocol and txn marks but never its file list.
+    * The JSON tail replays metadata-only, and the result is
+    * [[snapshot]]'s minus `files`/`tombstones` (spec-pinned
+    * field-identical). The checkpoint's metadata comes from the same
+    * [[CheckpointCache]] entry [[snapshot]] uses, and a table too large
+    * to cache its add rows still caches its protocol, metaData and txn
+    * rows (decoded by a column-pruned [[readCpMeta]], so a million add
+    * rows never deserialize): a plain append and every streaming-sink
+    * epoch cost O(tail commits) on the driver and no Spark job for the
+    * log until the next checkpoint.
+    *
+    * Same reconstruction guards as [[snapshot]]: an unrooted or gapped
+    * replay refuses rather than reporting partial metadata (a missing
+    * metaData would let an append commit a WRONG schema). `asOf` pins
+    * the metadata at a version, with [[snapshot]]'s validation — the
+    * form the DSv2 row-level operation uses to keep its scan and commit
+    * on ONE version without ever replaying the file list. */
+  def metaSnapshot(spark: SparkSession, table: String,
+                   asOf: Option[Long] = None): Snapshot =
+    replay(spark, table, asOf, withFiles = false)
+
+  /** The one replay behind [[snapshot]] and [[metaSnapshot]];
+    * `withFiles = false` skips the file and tombstone state. */
+  private def replay(spark: SparkSession, table: String, asOf: Option[Long],
+                     withFiles: Boolean): Snapshot = {
     val tbl = new Path(table)
     val cpMeta = lastCheckpoint(spark, table)
       .filter(m => asOf.forall(m.version <= _))
@@ -416,7 +455,7 @@ object DeltaLog {
       s"delta: $table's log is missing versions ${cp.get + 1}..${vs.head - 1} " +
         "between the checkpoint and the retained tail — refusing to replay " +
         "partial state")
-    var files = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
+    val files = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
     var schemaJson: Option[String] = None
     var partCols: Seq[String] = Seq.empty
     val txns = scala.collection.mutable.Map.empty[String, Long]
@@ -425,78 +464,31 @@ object DeltaLog {
     var protocol: (Int, Int, Set[String], Set[String]) = (1, 2, Set.empty, Set.empty)
     val tombstones = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     cpMeta.foreach { m =>
-      import org.apache.spark.sql.Row
-      spark.read.parquet(checkpointPaths(tbl, m.version, m.parts)
-          .map(_.toString): _*).collect().foreach { r =>
-        // fieldNames guard: checkpoints written before a column existed
-        // (e.g. `remove`) stay readable
-        def struct(name: String): Option[Row] =
-          if (!r.schema.fieldNames.contains(name) || r.isNullAt(r.fieldIndex(name))) None
-          else Some(r.getStruct(r.fieldIndex(name)))
-        def longField(s: Row, name: String, dflt: Long = 0L): Long =
-          if (!s.schema.fieldNames.contains(name) || s.isNullAt(s.fieldIndex(name))) dflt
-          else s.getLong(s.fieldIndex(name))
-        struct("add").foreach { a =>
-          val stats = Option(a.getAs[String]("stats")).flatMap(parseStats)
-          val pvals = Option(a.getAs[Map[String, String]]("partitionValues"))
-            .getOrElse(Map.empty)
-          // checkpoints from before deletion vectors existed read as
-          // no-DV; the protocol's STRUCT form and the pre-round-12
-          // JSON-string form both parse
-          val dv =
-            if (!a.schema.fieldNames.contains("deletionVector")) None
-            else a.schema(a.fieldIndex("deletionVector")).dataType match {
-              case _: org.apache.spark.sql.types.StructType =>
-                if (a.isNullAt(a.fieldIndex("deletionVector"))) None
-                else Some(CpDv.toDescriptor(
-                  a.getStruct(a.fieldIndex("deletionVector"))))
-              case _ =>
-                Option(a.getAs[String]("deletionVector"))
-                  .flatMap(DeletionVectors.fromJsonString)
-            }
-          files += a.getAs[String]("path") ->
-            AddFile(a.getAs[String]("path"), a.getAs[Long]("size"), stats, pvals,
-              dataChange = true, modificationTime = longField(a, "modificationTime"),
-              dv = dv)
-        }
-        struct("remove").foreach { rm =>
-          tombstones += rm.getAs[String]("path") ->
-            longField(rm, "deletionTimestamp")
-        }
-        struct("metaData").foreach { m =>
-          schemaJson = Some(m.getAs[String]("schemaString"))
-          partCols = m.getSeq[String](m.fieldIndex("partitionColumns")).toList
-          metaId = Option(m.getAs[String]("id"))
-          // checkpoints from before the configuration column stay readable
-          if (m.schema.fieldNames.contains("configuration")
-              && !m.isNullAt(m.fieldIndex("configuration")))
-            configuration = m.getAs[Map[String, String]]("configuration")
-        }
-        struct("txn").foreach(t =>
-          txns += t.getAs[String]("appId") -> t.getAs[Long]("version"))
-        struct("protocol").foreach { p =>
-          // checkpoints from before the features columns stay readable
-          def feats(field: String): Set[String] =
-            if (!p.schema.fieldNames.contains(field) ||
-                p.isNullAt(p.fieldIndex(field))) Set.empty[String]
-            else p.getSeq[String](p.fieldIndex(field)).toSet
-          protocol = (p.getAs[Int]("minReaderVersion"),
-            p.getAs[Int]("minWriterVersion"),
-            feats("readerFeatures"), feats("writerFeatures"))
-        }
+      val st = checkpointState(spark, tbl, m, withFiles)
+      if (withFiles) st.files.foreach { cf =>
+        cf.adds.foreach(a => files += a.path -> a)
+        tombstones ++= cf.tombstones
       }
+      st.meta.protocol.foreach(p => protocol = p)
+      schemaJson = st.meta.schemaJson
+      metaId = st.meta.metaId
+      partCols = st.meta.partCols
+      configuration = st.meta.configuration
+      txns ++= st.meta.txns
     }
     vs.foreach { v =>
       val c = readCommit(spark, table, v)
-      // within ONE atomic commit, an add of a path supersedes its
-      // remove: a deletion-vector DELETE commits remove(path, old DV) +
-      // add(path, new DV) — the remove describes the PRIOR incarnation
-      // (CDF pre-image), not a net removal, and must neither drop the
-      // live re-add nor leave a tombstone a vacuum could act on
-      val readded = c.adds.map(_.path).toSet
-      c.adds.foreach { a => files += a.path -> a; tombstones -= a.path }
-      c.removes.filterNot(r => readded(r.path))
-        .foreach { r => files -= r.path; tombstones += r.path -> r.deletionTimestamp }
+      if (withFiles) {
+        // within ONE atomic commit, an add of a path supersedes its
+        // remove: a deletion-vector DELETE commits remove(path, old DV) +
+        // add(path, new DV) — the remove describes the PRIOR incarnation
+        // (CDF pre-image), not a net removal, and must neither drop the
+        // live re-add nor leave a tombstone a vacuum could act on
+        val readded = c.adds.map(_.path).toSet
+        c.adds.foreach { a => files += a.path -> a; tombstones -= a.path }
+        c.removes.filterNot(r => readded(r.path))
+          .foreach { r => files -= r.path; tombstones += r.path -> r.deletionTimestamp }
+      }
       c.schemaJson.foreach(s => schemaJson = Some(s))
       c.partitionColumns.foreach(p => partCols = p)
       if (metaId.isEmpty) metaId = c.metaDataId
@@ -513,20 +505,103 @@ object DeltaLog {
       protocol._1, protocol._2, protocol._3, protocol._4)
   }
 
-  /** Protocol/metaData/txn content of a checkpoint DataFrame, in ONE
-    * column-pruned pass (the add rows never deserialize) — shared by
-    * [[metaSnapshot]] (where it runs on every append and streaming
-    * epoch, so job count matters) and [[checkpointDistributed]] (whose
-    * metadata must stay bound to ITS checkpoint, not a fresh listing —
-    * a concurrent commit between the two would otherwise mix a newer
-    * metaData with older add rows). Vintage guards: missing
-    * feature/configuration/txn columns read as absent. */
+  /** Protocol/metaData/txn content of a checkpoint. Vintage guards:
+    * missing feature/configuration/txn columns read as absent, and an
+    * empty `schemaString` (a checkpoint of a schema-less log) as no
+    * schema. */
   private[delta] final case class CpMetaContent(
       protocol: Option[(Int, Int, Set[String], Set[String])],
       metaId: Option[String], schemaJson: Option[String],
       partCols: Seq[String], configuration: Map[String, String],
       txns: Map[String, Long])
 
+  /** A checkpoint's add rows (in checkpoint order) and remove
+    * tombstones (path → deletionTimestamp, in checkpoint order). */
+  private[delta] final case class CpFiles(adds: Vector[AddFile],
+                                          tombstones: Vector[(String, Long)])
+
+  /** One decoded checkpoint: what [[snapshot]] seeds from and
+    * [[metaSnapshot]] reads its metadata from. `files` is None when only
+    * the metadata rows were decoded. Immutable, so one instance serves
+    * every caller the cache hands it to. */
+  private[delta] final case class CpState(meta: CpMetaContent,
+                                          files: Option[CpFiles]) {
+    /** Checkpoint rows this state holds — the cache's unit of size. */
+    def rows: Long = 2L + meta.txns.size +
+      files.fold(0L)(f => f.adds.size.toLong + f.tombstones.size)
+  }
+
+  /** Every row of a checkpoint, decoded — [[checkpointState]]'s full
+    * decode. Vintage guards: checkpoints written before a column or
+    * field existed (`remove`, `configuration`, `modificationTime`, the
+    * protocol features, `deletionVector` in either its STRUCT or its
+    * pre-round-12 JSON-string form) stay readable. */
+  private def decodeCheckpoint(
+      rows: Array[org.apache.spark.sql.Row]): CpState = {
+    import org.apache.spark.sql.Row
+    val adds = Vector.newBuilder[AddFile]
+    val tombstones = Vector.newBuilder[(String, Long)]
+    var proto: Option[(Int, Int, Set[String], Set[String])] = None
+    var metaId: Option[String] = None
+    var schemaJson: Option[String] = None
+    var partCols: Seq[String] = Seq.empty
+    var configuration: Map[String, String] = Map.empty
+    val txns = scala.collection.mutable.Map.empty[String, Long]
+    // the index of a present, non-null field
+    def field(r: Row, name: String): Option[Int] =
+      Some(r.schema.fields.indexWhere(_.name == name))
+        .filter(i => i >= 0 && !r.isNullAt(i))
+    def struct(r: Row, name: String): Option[Row] =
+      field(r, name).map(r.getStruct)
+    def longField(s: Row, name: String): Long =
+      field(s, name).fold(0L)(s.getLong)
+    rows.foreach { r =>
+      struct(r, "add").foreach { a =>
+        val stats = Option(a.getAs[String]("stats")).flatMap(parseStats)
+        val pvals = Option(a.getAs[Map[String, String]]("partitionValues"))
+          .getOrElse(Map.empty)
+        val dv = field(a, "deletionVector").flatMap(i =>
+          a.schema(i).dataType match {
+            case _: org.apache.spark.sql.types.StructType =>
+              Some(CpDv.toDescriptor(a.getStruct(i)))
+            case _ => DeletionVectors.fromJsonString(a.getString(i))
+          })
+        adds += AddFile(a.getAs[String]("path"), a.getAs[Long]("size"), stats,
+          pvals, dataChange = true,
+          modificationTime = longField(a, "modificationTime"), dv = dv)
+      }
+      struct(r, "remove").foreach(rm =>
+        tombstones += rm.getAs[String]("path") -> longField(rm, "deletionTimestamp"))
+      struct(r, "metaData").foreach { m =>
+        metaId = Option(m.getAs[String]("id"))
+        schemaJson = Option(m.getAs[String]("schemaString")).filter(_.nonEmpty)
+        partCols = field(m, "partitionColumns")
+          .fold(Seq.empty[String])(m.getSeq[String](_).toList)
+        field(m, "configuration").foreach(i =>
+          configuration = m.getMap[String, String](i).toMap)
+      }
+      struct(r, "txn").foreach(t =>
+        txns += t.getAs[String]("appId") -> t.getAs[Long]("version"))
+      struct(r, "protocol").foreach { p =>
+        def feats(name: String): Set[String] =
+          field(p, name).fold(Set.empty[String])(p.getSeq[String](_).toSet)
+        proto = Some((p.getAs[Int]("minReaderVersion"),
+          p.getAs[Int]("minWriterVersion"),
+          feats("readerFeatures"), feats("writerFeatures")))
+      }
+    }
+    CpState(CpMetaContent(proto, metaId, schemaJson, partCols, configuration,
+      txns.toMap), Some(CpFiles(adds.result(), tombstones.result())))
+  }
+
+  /** Protocol/metaData/txn content of a checkpoint DataFrame, in ONE
+    * column-pruned pass (the add rows never deserialize) — the
+    * metadata-only decode of a checkpoint too large to cache its add
+    * rows ([[checkpointState]]) and [[checkpointDistributed]]'s (whose
+    * metadata must stay bound to ITS checkpoint, not a fresh listing —
+    * a concurrent commit between the two would otherwise mix a newer
+    * metaData with older add rows). Reads the same fields, with the
+    * same vintage guards, as [[decodeCheckpoint]]. */
   private[delta] def readCpMeta(
       cpDf: org.apache.spark.sql.DataFrame): CpMetaContent = {
     import org.apache.spark.sql.functions.{col, lit}
@@ -579,85 +654,74 @@ object DeltaLog {
       txns.toMap)
   }
 
-  /** [[snapshot]] WITHOUT the file/tombstone state — for APPEND-shaped
-    * commits, which need the head's version, schema, partitioning,
-    * configuration, protocol and txn marks but never its file list.
-    * The checkpoint side reads COLUMN-PRUNED parquet (protocol /
-    * metaData / txn columns only — a million add rows never
-    * deserialize), the JSON tail replays metadata-only, and the result
-    * is [[snapshot]]'s minus `files`/`tombstones` (spec-pinned
-    * field-identical). This is what keeps a plain append and every
-    * streaming-sink epoch O(tail commits + 3 checkpoint rows) on the
-    * driver instead of O(#files) — the last routine O(#files) driver
-    * cost on the write path (round 13; checkpointing and the vacuum
-    * walk distribute the same round).
-    *
-    * Same reconstruction guards as [[snapshot]]: an unrooted or gapped
-    * replay refuses rather than reporting partial metadata (a missing
-    * metaData would let an append commit a WRONG schema). `asOf` pins
-    * the metadata at a version, with [[snapshot]]'s validation — the
-    * form the DSv2 row-level operation uses to keep its scan and commit
-    * on ONE version without ever replaying the file list. */
-  def metaSnapshot(spark: SparkSession, table: String,
-                   asOf: Option[Long] = None): Snapshot = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val tbl = new Path(table)
-    val cpMeta = lastCheckpoint(spark, table)
-      .filter(m => asOf.forall(m.version <= _))
-    val cp = cpMeta.map(_.version)
-    val allVs = versions(spark, table)
-    // a >= 0 included: a negative version must hit THIS named refusal,
-    // not surface downstream as an empty snapshot / "has no commits"
-    asOf.foreach(a => require(a >= 0 && allVs.nonEmpty && a <= allVs.max,
-      s"delta: version $a does not exist at $table " +
-        s"(head: ${if (allVs.isEmpty) "none" else allVs.max.toString})"))
-    val vs = allVs.filter(v => asOf.forall(v <= _))
-      .filter(v => cp.forall(v > _))
-    asOf.foreach(a => require(vs.nonEmpty || cp.nonEmpty,
-      s"delta: no committed version <= $a at $table"))
-    require(cp.nonEmpty || vs.isEmpty || vs.head == 0L,
-      s"delta: $table's log starts at version ${vs.headOption.getOrElse(-1L)} " +
-        "with no covering checkpoint — cleaned below the retention " +
-        "horizon; this state is no longer reconstructible")
-    require(vs.isEmpty || vs.size.toLong == vs.last - vs.head + 1,
-      s"delta: $table's log has a gap in versions ${vs.head}..${vs.last} — " +
-        "refusing to replay partial state")
-    require(vs.isEmpty || cp.forall(_ + 1 == vs.head),
-      s"delta: $table's log is missing versions ${cp.get + 1}..${vs.head - 1} " +
-        "between the checkpoint and the retained tail — refusing to " +
-        "replay partial state")
-    var schemaJson: Option[String] = None
-    var partCols: Seq[String] = Seq.empty
-    val txns = scala.collection.mutable.Map.empty[String, Long]
-    var metaId: Option[String] = None
-    var configuration: Map[String, String] = Map.empty
-    var protocol: (Int, Int, Set[String], Set[String]) =
-      (1, 2, Set.empty, Set.empty)
-    cpMeta.foreach { m =>
-      // ONE column-pruned job for protocol + metaData + txn rows —
-      // this runs per append / per epoch commit, so job count matters
-      val c = readCpMeta(spark.read.parquet(
-        checkpointPaths(tbl, m.version, m.parts).map(_.toString): _*))
-      c.protocol.foreach(p => protocol = p)
-      schemaJson = c.schemaJson
-      metaId = c.metaId
-      partCols = c.partCols
-      configuration = c.configuration
-      txns ++= c.txns
+  /** Driver-side cache of decoded checkpoints, keyed by table. One
+    * entry per table: a newer checkpoint replaces the older one. An
+    * entry serves a read only while every checkpoint part still has the
+    * qualified path, length and modification time it was decoded from,
+    * so a rewritten, recreated or replaced checkpoint misses. The
+    * entries hold at most `spark.graft.delta.distributedReplayThreshold`
+    * checkpoint rows in total (the caller's session value), evicting the
+    * least recently used first; a checkpoint larger than that keeps only
+    * its protocol, metaData and txn rows. */
+  private[delta] object CheckpointCache {
+    /** (qualified path, length, modification time) of each part. */
+    type Key = Seq[(String, Long, Long)]
+    private final case class Entry(key: Key, state: CpState)
+    private val entries =
+      new java.util.LinkedHashMap[String, Entry](16, 0.75f, true)
+    private var held = 0L
+
+    def get(table: String, key: Key): Option[CpState] = synchronized {
+      Option(entries.get(table)).filter(_.key == key).map(_.state)
     }
-    vs.foreach { v =>
-      val c = readCommit(spark, table, v)
-      c.schemaJson.foreach(s => schemaJson = Some(s))
-      c.partitionColumns.foreach(p => partCols = p)
-      if (metaId.isEmpty) metaId = c.metaDataId
-      c.configuration.foreach(cfg => configuration = cfg)
-      c.protocol.foreach(p => protocol = p)
-      txns ++= c.txns
-    }
-    checkReadable(table, protocol._1, protocol._3)
-    Snapshot(vs.lastOption.orElse(cp).getOrElse(-1L), Seq.empty,
-      schemaJson, txns.toMap, partCols, metaId, Map.empty, configuration,
-      protocol._1, protocol._2, protocol._3, protocol._4)
+
+    def put(table: String, key: Key, state: CpState, cap: Long): Unit =
+      synchronized {
+        Option(entries.remove(table)).foreach(e => held -= e.state.rows)
+        val kept = if (state.rows <= cap) state else state.copy(files = None)
+        if (kept.rows <= cap) {
+          val lru = entries.values.iterator
+          while (held + kept.rows > cap && lru.hasNext) {
+            held -= lru.next().state.rows
+            lru.remove()
+          }
+          entries.put(table, Entry(key, kept))
+          held += kept.rows
+        }
+      }
+
+    def clear(): Unit = synchronized { entries.clear(); held = 0L }
+  }
+
+  /** Checkpoint `m` of `tbl`, decoded — from [[CheckpointCache]] when
+    * its parts are unchanged. `withFiles` asks for the add and remove
+    * rows as well. A miss at or under the distributed-replay threshold
+    * (by the pointer's row count) decodes every row, so one decode
+    * serves both [[snapshot]] and [[metaSnapshot]]; past it, a
+    * metadata-only request reads just the protocol, metaData and txn
+    * rows. A part that cannot be stat'ed is read uncached, so a missing
+    * part fails exactly as the read always has. */
+  private def checkpointState(spark: SparkSession, tbl: Path,
+                              m: CheckpointMeta,
+                              withFiles: Boolean): CpState = {
+    val f = fs(spark, tbl)
+    val paths = checkpointPaths(tbl, m.version, m.parts)
+    val table = f.makeQualified(tbl).toString
+    val key = try Some(paths.map { p =>
+      val s = f.getFileStatus(p)
+      (s.getPath.toString, s.getLen, s.getModificationTime)
+    }) catch { case _: java.io.IOException => None }
+    key.flatMap(CheckpointCache.get(table, _))
+      .filter(s => !withFiles || s.files.nonEmpty)
+      .getOrElse {
+        val threshold = replayThreshold(spark)
+        val cpDf = spark.read.parquet(paths.map(_.toString): _*)
+        val st =
+          if (withFiles || m.size <= threshold) decodeCheckpoint(cpDf.collect())
+          else CpState(readCpMeta(cpDf), None)
+        key.foreach(CheckpointCache.put(table, _, st, threshold))
+        st
+      }
   }
 
   /** Driver-bounded partition-pruned file listing — the documented
@@ -919,6 +983,15 @@ object DeltaLog {
     } catch { case _: Exception => None }
   }
 
+  /** `spark.graft.delta.distributedReplayThreshold` (default 200 000,
+    * SCALE.md's "a few hundred thousand live files" driver-memory
+    * guidance): the checkpoint row count past which replay, checkpointing
+    * and DML candidate listing run distributed, and the row bound of
+    * [[CheckpointCache]]. */
+  private[delta] def replayThreshold(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.delta.distributedReplayThreshold")
+      .map(_.toLong).getOrElse(200000L)
+
   /** Live-file upper bound for the newest checkpoint (its row count),
     * None when the table has no checkpoint. */
   def checkpointRows(spark: SparkSession, table: String): Option[Long] =
@@ -1044,11 +1117,11 @@ object DeltaLog {
     // pass probes the filesystem once per expired tombstone — wasted
     // work when the checkpoint for this exact version is already
     // durable): a current pointer means nothing to do at all; a stale
-    // one is refreshed from the existing file
+    // one is refreshed from the existing file, its row count read from
+    // the parquet footer (metadata IO, no Spark job)
     if (prevCp.exists(_.version == headV)) return headV
     if (f.exists(dst)) {
-      writePointer(spark, f, tbl, headV,
-        spark.read.parquet(dst.toString).count())
+      writePointer(spark, f, tbl, headV, footerRowCount(spark, dst))
       return headV
     }
     // route by the PREVIOUS checkpoint's row count (metadata-only, the
@@ -1057,9 +1130,7 @@ object DeltaLog {
     // materialize on the driver — a million-file table checkpoints
     // distributed without a code change; below it, the driver replay
     // skips the extra jobs. Both paths are spec-pinned row-identical.
-    val threshold = spark.conf
-      .getOption("spark.graft.delta.distributedReplayThreshold")
-      .map(_.toLong).getOrElse(200000L)
+    val threshold = replayThreshold(spark)
     prevCp match {
       case Some(cp) if cp.size > threshold && cp.version < headV =>
         checkpointDistributed(spark, table, cp, headV, tombstoneRetainMs)

@@ -257,10 +257,8 @@ object DeltaTable {
     * caps it). */
   private[sources] def chooseDistributedReplay(spark: SparkSession,
                                                table: String): Boolean = {
-    val threshold = spark.conf
-      .getOption("spark.graft.delta.distributedReplayThreshold")
-      .map(_.toLong).getOrElse(200000L)
-    DeltaLog.checkpointRows(spark, table).exists(_ > threshold)
+    DeltaLog.checkpointRows(spark, table)
+      .exists(_ > DeltaLog.replayThreshold(spark))
   }
 
   /** Version whose commit time is the LATEST at or before `tsMs` —
@@ -2519,9 +2517,7 @@ object DeltaTable {
                                     degradeOnOverflow: Boolean = false)
     : Seq[AddFile] = {
     import org.apache.spark.sql.functions.col
-    val threshold = spark.conf
-      .getOption("spark.graft.delta.distributedReplayThreshold")
-      .map(_.toLong).getOrElse(200000L)
+    val threshold = DeltaLog.replayThreshold(spark)
     val cap = math.min(threshold, Int.MaxValue.toLong - 2L).toInt
     val out = cpLiveState(spark, table, headV) match {
       case None =>

@@ -1,7 +1,11 @@
 package graft.sources.delta
 
-import org.apache.spark.sql.SaveMode
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, SaveMode}
 import org.apache.spark.sql.functions.{col, lit, pmod}
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 import graft.SparkSpec
 
@@ -21,11 +25,60 @@ class MetaSnapshotSpec extends SparkSpec {
     s.configuration, s.minReaderVersion, s.minWriterVersion,
     s.readerFeatures, s.writerFeatures)
 
+  /** Spark jobs `body` starts. They run under a fresh job group; a
+    * marker job in a second group follows, and the listener bus delivers
+    * in order, so once the marker's start arrives every start of `body`
+    * has too. */
+  private def jobsStarted(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val counted = new java.util.concurrent.atomic.AtomicInteger(0)
+    val markerSeen = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(g) if g == group => counted.incrementAndGet()
+          case Some(g) if g == s"$group-marker" => markerSeen.set(true)
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(s"$group-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      eventually(timeout(30.seconds), interval(10.millis))(assert(markerSeen.get))
+      counted.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
+
+  private def assertSameState(got: DeltaLog.Snapshot,
+                              want: DeltaLog.Snapshot): Unit = {
+    assert(metaFields(got) === metaFields(want))
+    // AddFile equality covers stats, partition values, modificationTime
+    // and the deletion-vector descriptor
+    assert(got.files === want.files)
+    assert(got.tombstones === want.tombstones)
+  }
+
+  /** Parity of metaSnapshot with snapshot, and of each cached read with
+    * the first, uncached decode of the same checkpoint. */
   private def assertParity(t: String): Unit = {
+    DeltaLog.CheckpointCache.clear()
     val full = DeltaLog.snapshot(spark, t)
     val meta = DeltaLog.metaSnapshot(spark, t)
     assert(metaFields(meta) === metaFields(full))
     assert(meta.files.isEmpty && meta.tombstones.isEmpty)
+    assertSameState(DeltaLog.snapshot(spark, t), full)
+    DeltaLog.CheckpointCache.clear()
+    val metaFirst = DeltaLog.metaSnapshot(spark, t)
+    assertSameState(metaFirst, meta)
+    assertSameState(DeltaLog.metaSnapshot(spark, t), meta)
+    assertSameState(DeltaLog.snapshot(spark, t), full)
   }
 
   test("metaSnapshot equals snapshot on every non-file field") {
@@ -46,12 +99,18 @@ class MetaSnapshotSpec extends SparkSpec {
     assertParity(t)
     DeltaLog.checkpoint(spark, t)
     assertParity(t) // checkpoint-seeded, empty tail
+    assert(DeltaLog.snapshot(spark, t).files.exists(_.dv.nonEmpty),
+      "the checkpoint under test must carry deletion vectors")
     DeltaTable.appendWithTxn((120L until 140L).toDF("id")
       .withColumn("k", pmod(col("id"), lit(4L))), t, "app-x", 5L)
     DeltaTable.setProperties(spark, t, Map("graft.custom" -> "v"))
     assertParity(t) // checkpoint + tail with metadata/txn overrides
     // cleaned history: reconstruct from the checkpoint alone
+    DeltaTable.write(Seq((150L, 2L)).toDF("id", "k"), t, SaveMode.Overwrite,
+      partitionBy = Seq("k"))
     DeltaLog.checkpoint(spark, t)
+    assert(DeltaLog.snapshot(spark, t).tombstones.nonEmpty,
+      "the checkpoint under test must carry tombstones")
     DeltaLog.cleanLog(spark, t, retainMs = 0L)
     assertParity(t)
     // and appends keep working on the metadata-only route (the write
@@ -149,5 +208,120 @@ class MetaSnapshotSpec extends SparkSpec {
     assert(e1.getMessage.contains("no covering checkpoint"))
     val e2 = intercept[IllegalArgumentException] { DeltaLog.snapshot(spark, t) }
     assert(e2.getMessage.contains("no covering checkpoint"))
+  }
+
+  private def tmpTable(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
+
+  test("after a first read, a checkpointed table's log reads start no Spark job") {
+    val t = tmpTable("graft_ms_jobs")
+    def batch(from: Long) = (from until from + 20L).toDF("id")
+      .withColumn("k", pmod(col("id"), lit(4L)))
+    DeltaTable.write(batch(0L), t, SaveMode.Append, partitionBy = Seq("k"))
+    DeltaTable.appendWithTxn(batch(20L), t, "app-j", 1L)
+    DeltaLog.checkpoint(spark, t)
+    DeltaTable.appendWithTxn(batch(40L), t, "app-j", 2L) // a JSON tail
+    val first = DeltaLog.snapshot(spark, t) // decodes the checkpoint
+    assert(jobsStarted(DeltaLog.snapshot(spark, t)) === 0)
+    assert(jobsStarted(DeltaLog.metaSnapshot(spark, t)) === 0)
+    assert(jobsStarted(DeltaLog.metaSnapshot(spark, t, Some(2L))) === 0)
+    assert(DeltaLog.snapshot(spark, t) === first)
+    // an append's one job is its staging write
+    val next = batch(60L)
+    assert(jobsStarted(DeltaTable.appendWithTxn(next, t, "app-j", 3L)) === 1)
+    assert(DeltaLog.snapshot(spark, t).txns("app-j") === 3L)
+    assert(DeltaTable.read(spark, t).count() === 80L)
+  }
+
+  test("a table recreated at the same path reads its own checkpoint, not the cached one") {
+    val t = tmpTable("graft_ms_recreate")
+    def build(ids: Seq[Long]): DeltaLog.Snapshot = {
+      DeltaTable.write(ids.take(5).toDF("id"), t, SaveMode.Append) // v0
+      DeltaTable.write(ids.drop(5).toDF("id"), t, SaveMode.Append) // v1
+      assert(DeltaLog.checkpoint(spark, t) === 1L)
+      DeltaLog.snapshot(spark, t)
+    }
+    val old = build(0L until 10L)
+    assert(DeltaLog.metaSnapshot(spark, t).metaDataId === old.metaDataId)
+    val tbl = new Path(t)
+    tbl.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tbl, true)
+    val fresh = build(100L until 110L)
+    assert(fresh.metaDataId !== old.metaDataId)
+    assert(fresh.files.map(_.path).intersect(old.files.map(_.path)).isEmpty)
+    assert(DeltaLog.metaSnapshot(spark, t).metaDataId === fresh.metaDataId)
+    assert(DeltaTable.read(spark, t).as[Long].collect().toSet ===
+      (100L until 110L).toSet)
+    DeltaLog.CheckpointCache.clear()
+    assertSameState(fresh, DeltaLog.snapshot(spark, t))
+  }
+
+  test("a multi-part checkpoint is cached whole; a deleted part fails as an uncached read does") {
+    val t = tmpTable("graft_ms_parts")
+    (0 until 4).foreach(i =>
+      DeltaTable.write((i * 10L until i * 10L + 10L).toDF("id"), t,
+        SaveMode.Append))
+    val json = DeltaLog.snapshot(spark, t) // no checkpoint yet
+    spark.conf.set("spark.graft.delta.checkpointPartRows", "2")
+    try DeltaLog.checkpoint(spark, t)
+    finally spark.conf.unset("spark.graft.delta.checkpointPartRows")
+    val cp = DeltaLog.lastCheckpoint(spark, t).get
+    assert(cp.parts.exists(_ > 1), s"expected a multi-part checkpoint: $cp")
+    DeltaLog.CheckpointCache.clear()
+    val first = DeltaLog.snapshot(spark, t)
+    // which part holds which row is unspecified, so compare as sets
+    assert(first.files.map(f => (f.path, f.size, f.modificationTime)).toSet ===
+      json.files.map(f => (f.path, f.size, f.modificationTime)).toSet)
+    assert(jobsStarted(assertSameState(DeltaLog.snapshot(spark, t), first)) === 0)
+    assert(DeltaTable.read(spark, t).count() === 40L)
+    // a part deleted after it was cached: the read must not be served
+    // from the cache, and fails with the uncached read's error
+    val part = DeltaLog.checkpointPaths(new Path(t), cp.version, cp.parts)(1)
+    new Path(t).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(part, false)
+    Seq[() => Any](() => DeltaLog.snapshot(spark, t),
+        () => DeltaLog.metaSnapshot(spark, t)).foreach { read =>
+      val e = intercept[AnalysisException](read())
+      assert(e.getCondition === "PATH_NOT_FOUND", e.getMessage)
+      assert(e.getMessage.contains(part.getName), e.getMessage)
+    }
+  }
+
+  test("a checkpoint past the replay threshold caches only its metadata rows") {
+    val t = tmpTable("graft_ms_bound")
+    (0 until 3).foreach(i =>
+      DeltaTable.write(Seq(i.toLong).toDF("id"), t, SaveMode.Append))
+    DeltaLog.checkpoint(spark, t) // 3 add rows
+    spark.conf.set("spark.graft.delta.distributedReplayThreshold", "2")
+    try {
+      DeltaLog.CheckpointCache.clear()
+      val first = DeltaLog.snapshot(spark, t)
+      // the add rows are not held, so each snapshot decodes them again
+      assert(jobsStarted(assertSameState(DeltaLog.snapshot(spark, t), first)) > 0)
+      // the protocol/metaData/txn rows are
+      DeltaLog.metaSnapshot(spark, t)
+      assert(jobsStarted(DeltaLog.metaSnapshot(spark, t)) === 0)
+    } finally spark.conf.unset("spark.graft.delta.distributedReplayThreshold")
+  }
+
+  test("re-checkpointing after a lost _last_checkpoint restores its row count from the footer") {
+    val t = tmpTable("graft_ms_pointer")
+    DeltaTable.write(Seq(1L, 2L).toDF("id"), t, SaveMode.Append) // v0
+    DeltaTable.write(Seq(3L).toDF("id"), t, SaveMode.Overwrite) // v1
+    assert(DeltaLog.checkpoint(spark, t) === 1L)
+    val written = DeltaLog.lastCheckpoint(spark, t).get
+    val tbl = new Path(t)
+    val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new Path(DeltaLog.logDir(tbl), "_last_checkpoint"), false))
+    assert(DeltaLog.lastCheckpoint(spark, t).isEmpty)
+    // the checkpoint file for the head exists, so only the pointer is
+    // rewritten — its size read from the parquet footer, with no job
+    assert(jobsStarted(assert(DeltaLog.checkpoint(spark, t) === 1L)) === 0)
+    val restored = DeltaLog.lastCheckpoint(spark, t).get
+    assert(restored === written)
+    val head = DeltaLog.snapshot(spark, t)
+    // protocol + metaData + the live add + the overwrite's tombstones
+    assert(restored.size === 2L + head.files.size + head.tombstones.size)
+    assert(restored.size === spark.read.parquet(
+      DeltaLog.checkpointFile(tbl, 1L).toString).count())
   }
 }
