@@ -7,8 +7,8 @@ import graft.queries.Catalog
 /** Per-round benchmark main: times the headline queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line for the driver.
   *
-  * local[32] + 32 shuffle partitions (the container's thread budget), AQE
-  * on — the same knobs a cluster deployment would set per-executor-count.
+  * Session: [[GraftSession]] at `SPARK_GRAFT_CPUS` cores, default 32
+  * (local[32] + 32 shuffle partitions, the container's thread budget).
   *
   * Noise control (rounds 1–2 showed 4× total swings on identical code from
   * host contention): per timed query we clear the SQL/file caches, force a
@@ -49,7 +49,7 @@ import graft.queries.Catalog
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus(32)
     // 5 passes: the host shows noisy-neighbor load swings (r4 measured
     // 0.1→5 within minutes); min-of-5 keeps one contention spike from
     // polluting a query's reported floor, at ~40 s extra wall-clock
@@ -70,38 +70,8 @@ object Bench {
     // queries that get a FRESH SparkSession (see the scaladoc)
     val freshBefore = sys.env.getOrElse("SPARK_GRAFT_BENCH_FRESH",
       "q100_deletion_vectors").split(',').filter(_.nonEmpty).toSet
-    def buildSession(): SparkSession = {
-      val builder = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        // local-FS file creates: the stock LocalFileSystem forks /bin/chmod
-        // per created file when libhadoop is absent (it is here) and doubles
-        // every staged file with a .crc sidecar — measured ~10% of the DML
-        // write path (round-19 thread-dump sampling). GraftLocalFileSystem
-        // sets permissions in-process and skips write-side checksums; on a
-        // real cluster HDFS/object-store schemes never touch this class.
-        // SPARK_GRAFT_STOCK_LOCALFS=1 restores stock behavior for A/B runs.
-        .config("spark.hadoop.fs.file.impl",
-          if (sys.env.contains("SPARK_GRAFT_STOCK_LOCALFS"))
-            "org.apache.hadoop.fs.LocalFileSystem"
-          else "graft.sources.GraftLocalFileSystem")
-        .config("spark.sql.adaptive.enabled", "true")
-        // testdata ships one parquet file per table (~10 MB at sf0.1); the
-        // 128 MB default would scan it in ONE task — split small so all
-        // cores engage. On a real cluster with properly-sized files this
-        // reverts to the default.
-        .config("spark.sql.files.maxPartitionBytes", "2m")
-        .config("spark.sql.files.openCostInBytes", "512k")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-      // SQL UPDATE / MERGE INTO on graft-delta tables resolve through
-      // the extension rule (parity with Verify's session)
-      val s = (if (noExt) builder
-               else builder.config("spark.sql.extensions", "graft.GraftExtensions"))
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    def buildSession(): SparkSession =
+      GraftSession(cpus, extensions = !noExt)
     var spark = buildSession()
 
     def once(q: graft.queries.Q): Boolean =

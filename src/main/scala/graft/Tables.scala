@@ -6,10 +6,6 @@ import org.apache.spark.sql.types.{DecimalType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md). */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") {
       // events.ts is TIMESTAMP(NANOS) parquet. Every consumer in the engine
@@ -44,10 +40,6 @@ object Tables {
         df.withColumn("ts", unix_micros(col("ts").cast(TimestampType)) * lit(1000L))
       case _ => df
     }
-
-  /** Register every table as a temp view (for spark.sql parity paths). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => table(spark, dir, n).createOrReplaceTempView(n))
 
   /** [[table]] with a row-group-aware scan SPREAD (optimization guide
     * §2.5, "input skew: one huge unsplittable file"): a parquet ROW

@@ -6,8 +6,6 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Queries run
   * concurrently (Spark's scheduler interleaves jobs) to amortize the many
@@ -15,23 +13,7 @@ import org.apache.spark.sql.SparkSession
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // SQL UPDATE / MERGE INTO on graft-delta tables (q92) resolve
-      // through the extension rule
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // single-file-per-table testdata: split small so cores engage
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .config("spark.sql.files.openCostInBytes", "512k")
-      // in-process chmod + no .crc sidecars on staged writes (see
-      // Bench.buildSession / graft.sources.GraftLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", "graft.sources.GraftLocalFileSystem")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus(8))
     new java.io.File(outDir).mkdirs()
 
     // dev knob: comma-separated query names to dump in isolation

@@ -1,7 +1,6 @@
 package graft.apps
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.domain.{Fixtures, Ops}
 import graft.sources.IO
 
@@ -14,14 +13,7 @@ object BatchJoinJob {
     * activitiesPath] — with no paths, runs on the deterministic fixtures. */
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft_final")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus(8), sys.env.get("SPARK_MASTER"))
     val (emp, vals, acts) = args.toSeq match {
       case Seq(_, e, v, a) =>
         (IO.readTable(spark, e), IO.readTable(spark, v), IO.readTable(spark, a))
@@ -47,14 +39,7 @@ object CdcIngestJob {
     if (args.length < 3 || (args(0) == "kafka" && args.length < 4))
       sys.error("usage: CdcIngestJob <kafka|fixture> <sinkPath> <checkpointPath> [bootstrapServers]")
     val Array(kind, sink, checkpoint) = args.take(3)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus(8), sys.env.get("SPARK_MASTER"))
     val source = kind match {
       case "kafka" =>
         graft.streaming.CdcIngest.kafkaSource(spark, args(3))
@@ -111,157 +96,10 @@ object CorpusCleanJob {
 
   def main(args: Array[String]): Unit = {
     if (args.length < 2) sys.error("usage: CorpusCleanJob <sfDir> <outDir> [budget]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus(8), sys.env.get("SPARK_MASTER"))
     val n = run(spark, args(0), args(1),
       args.lift(2).map(_.toLong).getOrElse(10000L))
     println(s"[corpus-clean] wrote $n docs to ${args(1)}")
-    spark.stop()
-  }
-}
-
-/** Diagnostic: the DSv2 connector's batch scan vs the engine parquet
-  * path on the SAME staged table — the ratio the round-8 verdict asked
-  * to pin (target: connector within 1.3x of `spark.read.parquet`).
-  * Args: sfDir [passes]. Prints per-pass times and min ratio. */
-object ScanBench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val passes = args.lift(1).map(_.toInt).getOrElse(5)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .config("spark.sql.files.openCostInBytes", "512k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val t = java.nio.file.Files.createTempDirectory("scanbench").toString + "/docs"
-    graft.sources.delta.DeltaTable.write(
-      graft.Tables.table(spark, sfDir, "documents"), t,
-      org.apache.spark.sql.SaveMode.Overwrite)
-    import org.apache.spark.sql.functions._
-    def agg(df: org.apache.spark.sql.DataFrame) =
-      df.groupBy("lang").agg(count(lit(1)).as("n"),
-        sum(length(col("text")).cast("long")).as("len"))
-    def time(mk: => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      agg(mk).write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // warmup both
-    time(spark.read.format("graft-delta").load(t))
-    time(graft.sources.delta.DeltaTable.read(spark, t))
-    val dsv2 = (1 to passes).map { i =>
-      spark.catalog.clearCache(); System.gc()
-      val s = time(spark.read.format("graft-delta").load(t))
-      System.err.println(f"[dsv2 $i] $s%.3f"); s
-    }
-    val engine = (1 to passes).map { i =>
-      spark.catalog.clearCache(); System.gc()
-      val s = time(graft.sources.delta.DeltaTable.read(spark, t))
-      System.err.println(f"[engine-parquet $i] $s%.3f"); s
-    }
-    println(f"""{"dsv2_min":${dsv2.min}%.3f,"parquet_min":${engine.min}%.3f,"ratio":${dsv2.min / engine.min}%.3f}""")
-    spark.stop()
-  }
-}
-
-/** Diagnostic (round-13 verdict ask #5): phase-time a COLD JVM's first
-  * q19_minhash_lsh pass — shingle build, signature aggregate, band
-  * explode + bucket join, exact-Jaccard verify — each phase timed on
-  * its FIRST run (cold: codegen + JIT) and again on a second run
-  * (warm), so the cold/warm ratio decomposes by phase instead of
-  * arriving as one alarming number on a board. Run in a FRESH JVM or
-  * the cold numbers mean nothing. Args: sfDir. */
-object Q19PhaseTime {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .config("spark.sql.files.openCostInBytes", "512k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.DataFrame
-    def time(tag: String)(mk: => DataFrame): Double = {
-      spark.catalog.clearCache(); System.gc()
-      val t0 = System.nanoTime()
-      mk.write.mode("overwrite").format("noop").save()
-      val s = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[$tag] $s%.3f"); s
-    }
-    val docs = graft.Tables.table(spark, sfDir, "documents")
-    import graft.operators.TextDedup
-    def phases(run: String): Seq[(String, Double)] = Seq(
-      s"${run}_scan" -> time(s"$run scan")(docs),
-      s"${run}_shingles" -> time(s"$run shingles")(
-        TextDedup.shingles(docs, 3)),
-      s"${run}_signatures" -> time(s"$run signatures")(
-        TextDedup.minhashSignaturesSketch(TextDedup.shingles(docs, 3), 64)),
-      s"${run}_candidates" -> time(s"$run candidates")(
-        TextDedup.lshCandidates(TextDedup.lshBandsFromSig(
-          TextDedup.minhashSignaturesSketch(
-            TextDedup.shingles(docs, 3), 64), 16, 4))),
-      s"${run}_full_q19" -> time(s"$run full q19")(
-        TextDedup.minhashPairs(docs, n = 3, minJaccard = 0.5)))
-    val cold = phases("cold")
-    val warm = phases("warm")
-    val all = (cold ++ warm).map { case (k, v) =>
-      f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    println(all)
-    spark.stop()
-  }
-}
-
-/** Diagnostic: DSv2 sink write (task-side Group writer) vs the engine's
-  * distributed parquet write (`DeltaTable.write`, Spark's vectorized
-  * writer) vs raw `df.write.parquet` on the same input — decides
-  * whether the Group-based task writer needs replacing.
-  * Args: sfDir [passes]. */
-object WriteBench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val passes = args.lift(1).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .config("spark.sql.files.openCostInBytes", "512k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val docs = graft.Tables.table(spark, sfDir, "documents").cache()
-    docs.count() // materialize so writes time the WRITE, not the scan
-    val root = java.nio.file.Files.createTempDirectory("writebench").toString
-    def time(tag: String, i: Int)(body: String => Unit): Double = {
-      val dir = s"$root/$tag-$i"
-      val t0 = System.nanoTime()
-      body(dir)
-      val s = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[$tag $i] $s%.3f"); s
-    }
-    def run(tag: String)(body: String => Unit): Seq[Double] =
-      (0 to passes).map(i => time(tag, i)(body)).drop(1) // pass 0 = warmup
-    val dsv2 = run("dsv2-sink") { d =>
-      docs.write.format("graft-delta").mode("append").save(d) }
-    val engine = run("engine-write") { d =>
-      graft.sources.delta.DeltaTable.write(docs, d,
-        org.apache.spark.sql.SaveMode.Append) }
-    val raw = run("raw-parquet") { d => docs.write.parquet(d) }
-    println(f"""{"dsv2_sink_min":${dsv2.min}%.3f,"engine_write_min":${engine.min}%.3f,"raw_parquet_min":${raw.min}%.3f,"sink_vs_engine":${dsv2.min / engine.min}%.3f}""")
     spark.stop()
   }
 }

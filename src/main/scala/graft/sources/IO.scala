@@ -43,10 +43,6 @@ object IO {
       .schema(schema)
       .csv(path)
 
-  /** JSON-lines source with explicit schema (CDC fixture files etc.). */
-  def readJsonLines(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).json(path)
-
   /** Partitioned-read spec for JDBC: ~one partition per `stride` keys. */
   final case class JdbcPartitioning(
       column: String, lowerBound: Long, upperBound: Long, numPartitions: Int)
