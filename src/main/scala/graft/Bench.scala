@@ -56,10 +56,6 @@ object Bench {
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "5").toInt
     // dev knob: comma-separated query names to bench in isolation
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSet)
-    // dev knob: skip the GraftExtensions registration to A/B the analysis
-    // cost of the injected resolution rules (r9 verdict ask; SQL DML
-    // headlines fail without it, so pair with SPARK_GRAFT_BENCH_ONLY)
-    val noExt = sys.env.contains("SPARK_GRAFT_BENCH_NO_EXT")
     // contention control: one pass interleaves after each query
     // ("" disables; see the scaladoc)
     val controlName = sys.env.getOrElse("SPARK_GRAFT_BENCH_CONTROL",
@@ -70,8 +66,7 @@ object Bench {
     // queries that get a FRESH SparkSession (see the scaladoc)
     val freshBefore = sys.env.getOrElse("SPARK_GRAFT_BENCH_FRESH",
       "q100_deletion_vectors").split(',').filter(_.nonEmpty).toSet
-    def buildSession(): SparkSession =
-      GraftSession(cpus, extensions = !noExt)
+    def buildSession(): SparkSession = GraftSession(cpus)
     var spark = buildSession()
 
     def once(q: graft.queries.Q): Boolean =

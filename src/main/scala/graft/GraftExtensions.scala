@@ -10,14 +10,12 @@ import graft.functions.{MinHashSignature, RollingHash}
   * registers graft's custom Catalyst expressions in every session (SQL and
   * DataFrame API) without per-session register() calls, and installs the
   * engine-enforced PII-masking analysis rule
-  * ([[graft.plans.MaskPiiRule]]). */
+  * ([[graft.plans.MaskPiiRule]]). SQL DML on graft-delta tables needs
+  * nothing from here: Spark's own row-level rewrite plans it against
+  * [[graft.sources.delta.GraftRowLevelOperation]] in every session. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectResolutionRule(graft.plans.MaskPiiRule)
-    // SQL UPDATE over graft-delta tables → the engine's row-level DML
-    // (Spark's own v2 UPDATE needs SupportsRowLevelOperations; see
-    // [[graft.sources.delta.SqlUpdateRule]])
-    ext.injectPostHocResolutionRule(graft.sources.delta.SqlUpdateRule.apply)
     ext.injectFunction((
       FunctionIdentifier("rolling_hash"),
       new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),

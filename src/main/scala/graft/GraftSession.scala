@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 
 /** The one place a `main` builds its SparkSession: Bench, Verify, PlanDump
   * and the reference-app jobs all get the same driver session, differing
-  * only in core count, master and (for Bench's A/B knob) extensions. */
+  * only in core count and master. */
 object GraftSession {
 
   /** Every setting the session gets, as one immutable value.
@@ -22,13 +22,13 @@ object GraftSession {
     *   /bin/chmod per created file when libhadoop is absent and doubles
     *   every staged file with a .crc sidecar (~10 % of the DML write path,
     *   OPTIMIZATION_r19.md). HDFS/object-store schemes never touch it.
-    * - `GraftExtensions`: SQL UPDATE / MERGE INTO on graft-delta tables
-    *   resolve through its rules. `extensions = false` drops only that.
+    * - `GraftExtensions`: graft's SQL functions (`rolling_hash`,
+    *   `minhash_signature`, …) and the PII-masking rule. SQL DML on
+    *   graft-delta tables does not need it.
     * - UTC session time zone, UI off, log level WARN.
     */
-  def conf(cpus: Int, master: Option[String] = None,
-      extensions: Boolean = true): ListMap[String, String] = {
-    val base = ListMap(
+  def conf(cpus: Int, master: Option[String] = None): ListMap[String, String] =
+    ListMap(
       "spark.master" -> master.getOrElse(s"local[$cpus]"),
       "spark.sql.shuffle.partitions" -> cpus.toString,
       "spark.sql.adaptive.enabled" -> "true",
@@ -37,15 +37,12 @@ object GraftSession {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.ui.enabled" -> "false",
       "spark.hadoop.fs.file.impl" -> "graft.sources.GraftLocalFileSystem",
+      "spark.sql.extensions" -> "graft.GraftExtensions",
       "spark.log.level" -> "WARN")
-    if (extensions) base + ("spark.sql.extensions" -> "graft.GraftExtensions")
-    else base
-  }
 
   /** Build (or return the running) session with [[conf]]'s settings. */
-  def apply(cpus: Int, master: Option[String] = None,
-      extensions: Boolean = true): SparkSession =
-    conf(cpus, master, extensions)
+  def apply(cpus: Int, master: Option[String] = None): SparkSession =
+    conf(cpus, master)
       .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
 

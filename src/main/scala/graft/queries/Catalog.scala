@@ -2119,7 +2119,8 @@ object Catalog {
     try {
       bare.conf.set("spark.sql.shuffle.partitions",
         spark.conf.get("spark.sql.shuffle.partitions"))
-      require(!bare.sessionState.analyzer.postHocResolutionRules
+      require(!(bare.sessionState.analyzer.extendedResolutionRules ++
+          bare.sessionState.analyzer.postHocResolutionRules)
           .exists(_.getClass.getName.contains("graft")),
         "q109: the bare session must carry no engine extension rules")
       Seq(spark, bare).foreach { s =>

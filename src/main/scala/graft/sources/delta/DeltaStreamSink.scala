@@ -244,12 +244,11 @@ private[delta] class DeltaBatchWrite(
   // expression; NULL identity → allocated, non-NULL refused unless BY
   // DEFAULT), bound once here and evaluated task-side — by sink time
   // Spark has NULL-filled omitted columns, so NULL IS the omitted form.
-  // This is what an extension-less `INSERT INTO` and an insert-only
-  // MERGE (which Spark plans as AppendData, not WriteDelta) run on; a
-  // registered [[SqlUpdateRule]] reroutes AppendData to the engine
-  // before it ever reaches here. Schema-replacing OVERWRITEs still
-  // refuse: whether the replaced schema's generation metadata survives
-  // is a statement-level decision the engine path owns.
+  // This is what every SQL `INSERT INTO` and insert-only MERGE (which
+  // Spark plans as AppendData, not WriteDelta) runs on, in any session.
+  // Schema-replacing OVERWRITEs still refuse: whether the replaced
+  // schema's generation metadata survives is a statement-level decision
+  // the engine path owns.
   private val rawLogSchema: Option[StructType] = initHead.schemaJson
     .map(j => DataType.fromJson(j).asInstanceOf[StructType])
   private val genTransforms: Option[GeneratedColumns.RowTransforms] =
@@ -264,8 +263,7 @@ private[delta] class DeltaBatchWrite(
         require(!truncate || raw.catalogString == writeSchema.catalogString,
           s"graft-delta sink: $table has generated/identity columns — a " +
             "schema-changing OVERWRITE must route through the engine's " +
-            "write path; register spark.sql.extensions=graft.GraftExtensions " +
-            "(SQL) or use DeltaTable.write")
+            "write path; use DeltaTable.write")
         GeneratedColumns.bindRowTransforms(spark, writeSchema, raw)
     }
 

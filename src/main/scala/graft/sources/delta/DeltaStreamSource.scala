@@ -60,17 +60,10 @@ class DeltaStreamDataSource extends TableProvider with DataSourceRegister {
 
   override def supportsExternalMetadata(): Boolean = true
 
-  // Spark calls inferSchema then getTable on the SAME provider instance
-  // within one resolution; remembering the raw schema here spares
-  // getTable a second full log replay (worst case — a fresh instance or
-  // a different path — it just re-reads)
-  @volatile private var inferred: (String, StructType) = _
-
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val path = DeltaStreamDataSource.tablePath(options)
-    val (raw, base) = DeltaStreamDataSource.logSchemas(path,
+    val base = DeltaStreamDataSource.logSchema(path,
       DeltaStreamDataSource.asOfVersion(options, path))
-    inferred = (path, raw)
     if (DeltaStreamDataSource.cdfMode(options))
       DeltaStreamDataSource.cdfSchema(base)
     else base
@@ -79,12 +72,9 @@ class DeltaStreamDataSource extends TableProvider with DataSourceRegister {
   override def getTable(
       schema: StructType,
       partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table = {
-    val opts = new CaseInsensitiveStringMap(properties)
-    val raw = Option(inferred)
-      .filter(_._1 == DeltaStreamDataSource.tablePath(opts)).map(_._2)
-    DeltaStreamDataSource.makeTable(schema, opts, rawSchema = raw)
-  }
+      properties: java.util.Map[String, String]): Table =
+    DeltaStreamDataSource.makeTable(schema,
+      new CaseInsensitiveStringMap(properties))
 }
 
 private[delta] object DeltaStreamDataSource {
@@ -126,21 +116,14 @@ private[delta] object DeltaStreamDataSource {
         DeltaTable.versionAtTimestamp(SparkSession.active, table, ms)
       })
 
-  /** The table's log schema — EMPTY when the table has no commits yet:
-    * the write path must be able to get a Table for a not-yet-created
-    * sink target (its first epoch creates the log); the READ paths
-    * refuse an empty schema loudly at scan-build time. Time travel
-    * resolves the schema AS OF that version (evolution-correct). */
-  def logSchema(table: String, asOf: Option[Long] = None): StructType =
-    logSchemas(table, asOf)._2
-
-  /** (raw log schema, user-facing stripped schema) from ONE replay —
-    * resolution paths that need both (table-variant eligibility reads
-    * the raw stamps) call this instead of paying two. */
-  def logSchemas(table: String,
-                 asOf: Option[Long] = None): (StructType, StructType) = {
+  /** The table's user-facing log schema — EMPTY when the table has no
+    * commits yet: the write path must be able to get a Table for a
+    * not-yet-created sink target (its first epoch creates the log); the
+    * READ paths refuse an empty schema loudly at scan-build time. Time
+    * travel resolves the schema AS OF that version (evolution-correct). */
+  def logSchema(table: String, asOf: Option[Long] = None): StructType = {
     val snap = DeltaLog.snapshot(SparkSession.active, table, asOf)
-    if (snap.isEmpty) return (new StructType(), new StructType())
+    if (snap.isEmpty) return new StructType()
     val schema = snap.schemaJson
       .map(j => DataType.fromJson(j).asInstanceOf[StructType])
       .getOrElse(throw new IllegalStateException(s"graft-delta: $table missing metaData"))
@@ -155,46 +138,24 @@ private[delta] object DeltaStreamDataSource {
     // user-facing: logical names without the column-mapping bookkeeping
     // metadata (the scan re-reads the stamped schema from its own
     // snapshot — delta-spark hides the stamps from reads identically)
-    (schema, ColumnMapping.stripped(schema))
+    ColumnMapping.stripped(schema)
   }
 
   /** The table binding: the [[DeltaStreamTableRlo]] variant (native
     * row-level DML + `_file`/`_pos` metadata columns) for current-head
-    * tables — COLUMN-MAPPED ones included, the scan and write both
-    * translate logical→physical; the base class for everything whose
-    * DML must route through the engine's own write path —
-    * generated/identity columns (their per-row compute/allocation
-    * semantics live in [[graft.GraftExtensions]]' rewrite), CDF-mode
-    * and time-travel bindings (read-only views), and not-yet-created
-    * sink targets.
-    *
-    * The eligibility facts come from the SAME snapshot replay
-    * [[logSchema]] already pays: the stripped user-facing schema tells
-    * nothing about generated columns' expressions, so the check reads
-    * the raw log schema — callers that just ran [[logSchema]] pass it
-    * via `rawSchema` to avoid a second replay. */
-  def makeTable(schema: StructType, options: CaseInsensitiveStringMap,
-                rawSchema: Option[StructType] = None): DeltaStreamTable = {
-    // generated/identity tables: when [[graft.GraftExtensions]] IS
-    // registered, their DML keeps routing through the engine's own
-    // write path (SqlUpdateRule fires during post-hoc resolution, but
-    // Spark's RewriteUpdateTable fires EARLIER in analysis for Rlo
-    // tables — so statement-level semantics like refusing a direct
-    // `SET gen = …` survive only if the table stays off the Rlo class
-    // there). In an EXTENSION-LESS session there is no engine route, so
-    // the Rlo class takes them: the row-level write recomputes
-    // generated columns, allocates identity values, and advances the
-    // high-water mark ([[GeneratedColumns.bindRowTransforms]]).
+    * tables — COLUMN-MAPPED and generated/identity ones included (the
+    * scan and write translate logical→physical; the row-level write
+    * recomputes generated columns, allocates identity values and
+    * advances the high-water mark per row,
+    * [[GeneratedColumns.bindRowTransforms]]); the base class for
+    * CDF-mode and time-travel bindings (read-only views) and
+    * not-yet-created sink targets. Every session gets the same class:
+    * SQL DML has one route. */
+  def makeTable(schema: StructType,
+                options: CaseInsensitiveStringMap): DeltaStreamTable = {
     val eligible = schema.fields.nonEmpty &&
       !cdfMode(options) && versionAsOf(options).isEmpty &&
-      options.get("timestampAsOf") == null && {
-        val raw = rawSchema.orElse(
-          DeltaLog.snapshot(SparkSession.active, tablePath(options))
-            .schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType]))
-        raw.forall(s => !GeneratedColumns.hasAny(s)) ||
-          !SparkSession.active.sessionState.analyzer.postHocResolutionRules
-            .exists(_.isInstanceOf[SqlUpdateRule])
-      }
+      options.get("timestampAsOf") == null
     if (eligible) new DeltaStreamTableRlo(schema, options)
     else new DeltaStreamTable(schema, options)
   }
@@ -218,8 +179,8 @@ private[delta] class DeltaStreamTable(
     sinkMetricsHolder.snapshot.asJava
   }
 
-  /** Filesystem path of this table — [[SqlUpdateRule]] routes SQL
-    * UPDATE through it. */
+  /** Filesystem path of this table — the log every read, write and DML
+    * binding of this table resolves against. */
   private[delta] def path: String = DeltaStreamDataSource.tablePath(options)
 
   /** Table properties = the log's metaData configuration (e.g.
@@ -327,14 +288,12 @@ private[delta] class DeltaStreamTable(
 /** The plain table plus Spark-native row-level DML: advertises
   * [[GraftMeta]] `_file`/`_pos` metadata columns and
   * `SupportsRowLevelOperations`, so SQL DELETE/UPDATE/MERGE rewrite
-  * into `WriteDelta` plans against [[GraftRowLevelOperation]] WITHOUT
-  * [[graft.GraftExtensions]] registered. Current-head tables get this
-  * class, column-mapped ones included (scan and write translate
-  * logical→physical) — [[DeltaStreamDataSource.makeTable]] keeps
-  * generated/identity tables on the base class only when
-  * [[graft.GraftExtensions]] is registered, so their DML routes
-  * through the engine's own write path there; extension-less
-  * sessions take the native row-level path with per-row guards. */
+  * into `WriteDelta` plans against [[GraftRowLevelOperation]], with or
+  * without [[graft.GraftExtensions]] registered. Every current-head
+  * table gets this class ([[DeltaStreamDataSource.makeTable]]):
+  * column-mapped ones (scan and write translate logical→physical) and
+  * generated/identity ones (per-row guards, computation and
+  * allocation in the write) included. */
 private[delta] class DeltaStreamTableRlo(
     rloSchema: StructType, rloOptions: CaseInsensitiveStringMap)
     extends DeltaStreamTable(rloSchema, rloOptions)

@@ -182,15 +182,17 @@ object GeneratedColumns {
     set ++ recomputed
   }
 
-  /** MERGE INSERT values through generated/identity columns: absent
-    * generated columns COMPUTE from the insert values (expression
-    * attributes substitute to the assigned value expressions; deps the
-    * clause leaves unassigned read as NULL, matching "unassigned target
-    * columns insert NULL"); provided ones must equal the computation
-    * per row. Identity columns must be explicitly assigned — and only
-    * BY DEFAULT tables accept explicit values — because MERGE has no
-    * allocation commit machinery; route pure inserts through the
-    * append path instead. */
+  /** [[DeltaTable.mergeInto]]'s INSERT values through generated/identity
+    * columns: absent generated columns COMPUTE from the insert values
+    * (expression attributes substitute to the assigned value
+    * expressions; deps the clause leaves unassigned read as NULL,
+    * matching "unassigned target columns insert NULL"); provided ones
+    * must equal the computation per row. Identity columns must be
+    * explicitly assigned — and only BY DEFAULT tables accept explicit
+    * values — because the DataFrame MERGE has no allocation commit
+    * machinery; route pure inserts through the append path instead. A
+    * SQL MERGE INSERT does allocate: it takes the row-level write,
+    * whose [[bindRowTransforms]] allocates from the high-water mark. */
   def augmentInsertValues(spark: org.apache.spark.sql.SparkSession,
                           target: StructType,
                           values: Map[String, org.apache.spark.sql.Column])
@@ -225,20 +227,20 @@ object GeneratedColumns {
 
   /** Per-row transforms for the NATIVE row-level write path
     * ([[GraftRowLevelBatchWrite]] — Spark's own `RewriteUpdateTable` /
-    * `RewriteMergeIntoTable` rewrites, reached in extension-less
-    * sessions where [[graft.GraftExtensions]]' clause-level
-    * augmentation cannot run): one bound expression per `rowSchema`
-    * field for UPDATE post-images and one for MERGE inserts, built
+    * `RewriteMergeIntoTable` rewrites, the one route every SQL UPDATE
+    * and MERGE takes, with or without [[graft.GraftExtensions]]) and
+    * for the DSv2 sink's SQL INSERT: one bound expression per
+    * `rowSchema` field for UPDATE post-images and one for inserts, built
     * once driver-side (parse → analyze → bind to row ordinals, the
     * [[SinkConstraints]] pattern) and evaluated task-side through a
     * codegen'd projection. `None` when the target carries no
     * generated/identity columns — the writer then skips the
     * projection entirely.
     *
-    * Semantics relative to the engine path (which sees the STATEMENT,
-    * not just rows):
+    * Semantics relative to the DataFrame API's [[augmentAssignments]] /
+    * [[augmentInsertValues]] (which see the STATEMENT, not just rows):
     *   - UPDATE: generated columns RECOMPUTE from the post-image.
-    *     The engine path refuses a direct `SET gen = …` at the
+    *     The DataFrame API refuses a `gen` assignment at the
     *     statement; the native path enforces the same semantics per
     *     row via the scan-provided pre-image metadata
     *     ([[GraftRowLevelWriter]]'s generated guards): post != pre is
@@ -246,7 +248,9 @@ object GeneratedColumns {
     *     untouched column (post == pre, stale or not) recomputes here,
     *     keeping the table invariant (`gen <=> expr`). Identity
     *     columns are guarded the same way — value changes refuse per
-    *     row.
+    *     row, so a no-op `SET id = id` raises nothing. A constant
+    *     assignment (`SET id = 5`) prunes the column from the scan and
+    *     refuses as soon as the scan reads a file.
     *   - INSERT: same per-row NULL-driven contract as [[prepareWrite]]
     *     (NULL generated → computed, non-NULL must equal the
     *     expression; NULL identity → allocated from the high-water

@@ -75,8 +75,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (!isTable(p)) throw new NoSuchTableException(ident.namespace().toSeq :+ ident.name())
     val opts = new CaseInsensitiveStringMap(
       java.util.Map.of("path", p.toString))
-    val (raw, stripped) = DeltaStreamDataSource.logSchemas(p.toString)
-    DeltaStreamDataSource.makeTable(stripped, opts, rawSchema = Some(raw))
+    DeltaStreamDataSource.makeTable(
+      DeltaStreamDataSource.logSchema(p.toString), opts)
   }
 
   /** `SELECT … FROM t VERSION AS OF n` — Spark routes the literal here;

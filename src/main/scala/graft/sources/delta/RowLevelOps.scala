@@ -46,13 +46,16 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * COLUMN-MAPPED (renamed/dropped-column) tables take this path too:
   * the scan already resolves logical→physical, and the write stages
   * post-images under physical names — the same translation the DSv2
-  * sink applies. Generated/identity tables take it only in
-  * EXTENSION-LESS sessions ([[DeltaStreamDataSource.makeTable]]'s
-  * eligibility check): there the writer recomputes generated columns,
-  * allocates identity values, and enforces the statement-level
-  * refusals per row from scan-provided pre-image metadata; with
-  * [[graft.GraftExtensions]] registered, their DML keeps routing
-  * through the engine's own write path via [[SqlUpdateRule]]. */
+  * sink applies. So do GENERATED/IDENTITY tables: the writer
+  * recomputes generated columns, allocates identity values, and
+  * refuses a changed generated or identity value per row from
+  * scan-provided pre-image metadata
+  * ([[GeneratedColumns.bindRowTransforms]]).
+  *
+  * This is the ONE planning route for SQL DML on graft-delta tables:
+  * sessions with [[graft.GraftExtensions]] registered plan it exactly
+  * as extension-less ones do. The DataFrame API ([[DeltaTable.update]],
+  * [[DeltaTable.mergeInto]], …) is the engine's separate entry. */
 private[delta] object GraftMeta {
   val FileCol = "_file"
   val PosCol = "_pos"

@@ -41,15 +41,6 @@ object ColumnBridge {
     : Array[org.apache.spark.sql.sources.Filter] =
     org.apache.spark.sql.internal.connector.PredicateUtils.toV1(preds)
 
-  /** A DataFrame over an analyzed logical plan — the `private[sql]`
-    * `Dataset.ofRows`, for extension rules that hand a resolved
-    * sub-plan (e.g. a MERGE source) to engine APIs taking DataFrames. */
-  def ofRows(spark: org.apache.spark.sql.SparkSession,
-             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-    : org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
   /** A FRESH session on the same context with default (empty)
     * extensions and its own state — the `private[sql]` constructor.
     * What an extension-less Spark user's session looks like; specs use

@@ -27,12 +27,6 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(c - "spark.master" === GraftSession.conf(8) - "spark.master")
   }
 
-  test("turning extensions off drops only spark.sql.extensions") {
-    val off = GraftSession.conf(8, extensions = false)
-    assert(!off.contains("spark.sql.extensions"))
-    assert(off === GraftSession.conf(8) - "spark.sql.extensions")
-  }
-
   test("the configured file system and extensions classes load") {
     val c = GraftSession.conf(4)
     Seq("spark.hadoop.fs.file.impl", "spark.sql.extensions")

@@ -5,15 +5,16 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.SparkSpec
 
-/** Native (extension-less) SQL DML on GENERATED/IDENTITY tables: Spark's
+/** Native SQL DML on GENERATED/IDENTITY tables: Spark's
   * own `RewriteUpdateTable`/`RewriteMergeIntoTable` drive
   * [[GraftRowLevelOperation]], and the write itself recomputes generated
   * columns, allocates identity values from the high-water mark, refuses
   * per-row identity changes (pre-image metadata columns), and advances
   * the mark in the same commit ([[GeneratedColumns.bindRowTransforms]]).
-  * With [[graft.GraftExtensions]] registered these tables keep routing
-  * through the engine's own DML (statement-level refusal semantics) —
-  * [[GeneratedColumnsSpec]] pins that side. */
+  * The bare sessions prove no extension is needed; sessions with
+  * [[graft.GraftExtensions]] registered take the same route and get the
+  * same per-row semantics (the "extension session" specs). The DataFrame
+  * API's statement-level semantics are [[GeneratedColumnsSpec]]'s. */
 class NativeGeneratedDmlSpec extends SparkSpec {
 
   private def bareSession(): org.apache.spark.sql.classic.SparkSession = {
@@ -49,7 +50,7 @@ class NativeGeneratedDmlSpec extends SparkSpec {
                  (id BIGINT GENERATED ALWAYS AS IDENTITY,
                   doc_id BIGINT, n BIGINT,
                   twice BIGINT GENERATED ALWAYS AS (n * 2))""")
-    // seed through the engine path (extensions session): allocates ids
+    // seed through the extension session's INSERT: the sink allocates ids
     spark.sql("INSERT INTO ngd1.db.t (doc_id, n) " +
       "SELECT id, id * 10 FROM range(1, 9)")
     val before = spark.sql("SELECT doc_id, id FROM ngd1.db.t")
@@ -147,7 +148,7 @@ class NativeGeneratedDmlSpec extends SparkSpec {
     assert(hwm1 >= newIds.max,
       s"the commit must advance the mark to the written extremum " +
         s"(hwm=$hwm1, written max=${newIds.max})")
-    // a follow-up ENGINE insert allocates above the native merge's mark
+    // a follow-up extension-session insert allocates above the merge's mark
     spark.sql("INSERT INTO ngd3.db.t (doc_id, n) VALUES (200, 17)")
     val nextId = spark.sql("SELECT id FROM ngd3.db.t WHERE doc_id = 200")
       .head().getLong(0)
@@ -393,21 +394,83 @@ class NativeGeneratedDmlSpec extends SparkSpec {
       .head().getLong(0) === 2L)
   }
 
-  test("extension session keeps routing generated/identity DML through the engine") {
-    // the statement-level semantics (refusing a direct `SET gen = …`)
-    // only exist on the engine path; the catalog must keep these tables
-    // off the Rlo class when SqlUpdateRule is registered
-    newCatalog(spark, "ngd6")
+  test("extension session takes generated/identity DML natively") {
+    // one SQL DML route: with GraftExtensions registered the catalog
+    // hands out the same row-level table, so the refusals are the
+    // native per-row ones (raised in a task — read the cause chain) and
+    // dependency updates recompute exactly as in a bare session
+    val wh = newCatalog(spark, "ngd6")
     spark.sql("""CREATE TABLE ngd6.db.t
-                 (n BIGINT, twice BIGINT GENERATED ALWAYS AS (n * 2))""")
+                 (id BIGINT GENERATED ALWAYS AS IDENTITY,
+                  n BIGINT, twice BIGINT GENERATED ALWAYS AS (n * 2))""")
     spark.sql("INSERT INTO ngd6.db.t (n) VALUES (1), (2)")
+    def idsByN(): Map[Long, Long] = spark.sql("SELECT n, id FROM ngd6.db.t")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val ids0 = idsByN()
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty
+      else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    val v0 = DeltaLog.snapshot(spark, s"$wh/db/t").version
     val e = intercept[Exception] {
       spark.sql("UPDATE ngd6.db.t SET twice = 999 WHERE n = 1")
     }
-    assert(Option(e.getMessage).exists(_.contains("generated column")),
-      s"engine path must refuse direct generated assignment, got: $e")
+    assert(messages(e).exists(m =>
+        m.contains("cannot UPDATE") && m.contains("`twice`")),
+      s"expected the generated-assignment refusal, got: ${messages(e)}")
+    val e1 = intercept[Exception] {
+      spark.sql("UPDATE ngd6.db.t SET twice = twice + 1 WHERE n = 1")
+    }
+    assert(messages(e1).exists(_.contains("generated column `twice`")),
+      s"expected the per-row writer refusal, got: ${messages(e1)}")
+    val e2 = intercept[Exception] {
+      spark.sql("""
+        MERGE INTO ngd6.db.t AS t
+        USING (SELECT 1 AS n) AS srcm ON t.n = srcm.n
+        WHEN MATCHED THEN UPDATE SET twice = 555""")
+    }
+    assert(messages(e2).exists(m =>
+        m.contains("cannot UPDATE") && m.contains("`twice`")),
+      s"expected the refusal through MERGE, got: ${messages(e2)}")
+    assert(DeltaLog.snapshot(spark, s"$wh/db/t").version === v0,
+      "a refused statement must commit nothing")
+    // per row, not per statement: a no-op identity assignment and a
+    // generated assignment that matches no row both commit quietly
+    spark.sql("UPDATE ngd6.db.t SET id = id WHERE n = 1")
+    spark.sql("UPDATE ngd6.db.t SET twice = twice + 1 WHERE n % 7 = 5")
     spark.sql("UPDATE ngd6.db.t SET n = n + 1 WHERE n = 2")
-    assert(spark.sql("SELECT twice FROM ngd6.db.t WHERE n = 3")
-      .head().getLong(0) === 6L)
+    assert(spark.sql("SELECT n, twice FROM ngd6.db.t ORDER BY n").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((1L, 2L), (3L, 6L)))
+    assert(idsByN() === Map(1L -> ids0(1L), 3L -> ids0(2L)))
+  }
+
+  test("extension-session MERGE INSERT allocates identity ids") {
+    // the DataFrame mergeInto refuses identity inserts (no allocation
+    // machinery); SQL MERGE takes the row-level write, which allocates
+    // from the high-water mark and advances it in the same commit
+    val wh = newCatalog(spark, "ngd11")
+    spark.sql("""CREATE TABLE ngd11.db.t
+                 (id BIGINT GENERATED ALWAYS AS IDENTITY,
+                  k BIGINT, twice BIGINT GENERATED ALWAYS AS (k * 2))""")
+    spark.sql("INSERT INTO ngd11.db.t (k) SELECT id FROM range(1, 4)")
+    val before = spark.sql("SELECT id FROM ngd11.db.t")
+      .collect().map(_.getLong(0)).toSet
+    val hwm0 = hwmOf(wh, "t", "id").get
+    spark.sql("""
+      MERGE INTO ngd11.db.t AS t
+      USING (SELECT id AS k FROM range(2, 7)) AS s ON t.k = s.k
+      WHEN NOT MATCHED THEN INSERT (k) VALUES (s.k)""")
+    val rows = spark.sql("SELECT k, id, twice FROM ngd11.db.t ORDER BY k")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(rows.map(_._1) === (1L to 6L))
+    rows.foreach { case (k, _, twice) => assert(twice === k * 2) }
+    val ids = rows.map(_._2)
+    assert(ids.distinct.size === ids.size, s"identity ids must be distinct: $ids")
+    assert(rows.filter(_._1 <= 3L).map(_._2).toSet === before,
+      "existing ids must survive the MERGE")
+    val newIds = rows.filter(_._1 > 3L).map(_._2)
+    assert(newIds.forall(_ > hwm0),
+      s"MERGE-inserted ids $newIds must land above the prior mark $hwm0")
+    assert(hwmOf(wh, "t", "id").exists(_ >= newIds.max),
+      "the MERGE commit must advance the mark")
   }
 }

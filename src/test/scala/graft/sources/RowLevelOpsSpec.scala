@@ -7,11 +7,13 @@ import graft.SparkSpec
 
 /** Spark-native row-level operations (`SupportsRowLevelOperations` +
   * `SupportsDelta`): SQL DELETE/UPDATE/MERGE against graft-delta
-  * catalog tables WITHOUT [[graft.GraftExtensions]] registered — the
-  * analyzer's own rewrite rules drive [[GraftRowLevelOperation]]'s
-  * position-delta write. The extension-less sessions here are REAL
-  * (`new classic.SparkSession(sc)` — fresh session state, default
-  * extensions), not simulations. */
+  * catalog tables — the analyzer's own rewrite rules drive
+  * [[GraftRowLevelOperation]]'s position-delta write. This is the one
+  * SQL DML route: most specs here run in extension-less sessions, which
+  * are REAL (`new classic.SparkSession(sc)` — fresh session state,
+  * default extensions), not simulations, and the analysis spec shows
+  * the session with [[graft.GraftExtensions]] registered plans the
+  * same `WriteDelta`. */
 class RowLevelOpsSpec extends SparkSpec {
 
   import spark.implicits._
@@ -37,12 +39,11 @@ class RowLevelOpsSpec extends SparkSpec {
   test("extension-less SQL UPDATE / MERGE / row-level DELETE are exact") {
     val s = bareSession()
     // the session carries Spark's own extra resolution rules but NONE of
-    // the engine's (MaskPiiRule / SqlUpdateRule come from GraftExtensions)
+    // the engine's (MaskPiiRule comes from GraftExtensions)
     assert((s.sessionState.analyzer.extendedResolutionRules ++
         s.sessionState.analyzer.postHocResolutionRules)
       .forall(r => !r.getClass.getName.toLowerCase.contains("graft") &&
-        !r.getClass.getName.contains("MaskPii") &&
-        !r.getClass.getName.contains("SqlUpdate")),
+        !r.getClass.getName.contains("MaskPii")),
       "the bare session must carry no engine extension rules")
     val wh = newCatalog(s, "rlo1")
     s.sql("CREATE TABLE rlo1.db.t (id BIGINT, s STRING, n BIGINT)")
@@ -80,11 +81,25 @@ class RowLevelOpsSpec extends SparkSpec {
     val wh = newCatalog(spark, "rlo2")
     spark.sql("CREATE TABLE rlo2.db.p (id BIGINT, n BIGINT)")
     spark.sql("INSERT INTO rlo2.db.p VALUES (1, 10), (2, 20)")
-    val analyzed = spark.sessionState.executePlan(
-      spark.sessionState.sqlParser.parsePlan(
-        "UPDATE rlo2.db.p SET n = 0 WHERE id = 1")).analyzed
-    assert(analyzed.getClass.getSimpleName == "WriteDelta",
-      s"expected the SupportsDelta rewrite, got:\n$analyzed")
+    // generated/identity tables get the same plan in this (extension)
+    // session
+    spark.sql("""CREATE TABLE rlo2.db.g (
+      id BIGINT GENERATED ALWAYS AS IDENTITY, n BIGINT,
+      twice BIGINT GENERATED ALWAYS AS (n * 2))""")
+    spark.sql("INSERT INTO rlo2.db.g (n) VALUES (1), (2)")
+    Seq(
+      "UPDATE rlo2.db.p SET n = 0 WHERE id = 1",
+      "UPDATE rlo2.db.g SET n = n + 1 WHERE n = 1",
+      """MERGE INTO rlo2.db.g AS t
+         USING (SELECT * FROM VALUES (2L, 5L), (9L, 7L) AS s(k, v)) AS s
+         ON t.n = s.k
+         WHEN MATCHED THEN UPDATE SET n = s.v
+         WHEN NOT MATCHED THEN INSERT (n) VALUES (s.v)""").foreach { sql =>
+      val analyzed = spark.sessionState.executePlan(
+        spark.sessionState.sqlParser.parsePlan(sql)).analyzed
+      assert(analyzed.getClass.getSimpleName == "WriteDelta",
+        s"expected the SupportsDelta rewrite for $sql, got:\n$analyzed")
+    }
   }
 
   test("native MERGE stages precise CDF (delete/pre/post/insert)") {
@@ -310,7 +325,7 @@ class RowLevelOpsSpec extends SparkSpec {
     // round 13: these tables used to refuse bare-session DML; the
     // row-level write now recomputes/allocates per row
     // ([[NativeGeneratedDmlSpec]] pins the semantics in depth) — here:
-    // the native and engine paths interleave on ONE table correctly
+    // a bare and an extension session interleave on ONE table correctly
     val s = bareSession()
     newCatalog(s, "rlo5")
     s.sql("""CREATE TABLE rlo5.db.g (
@@ -324,8 +339,8 @@ class RowLevelOpsSpec extends SparkSpec {
       (r.getLong(0), r.getLong(1))
     }
     assert(n0 === 1L)
-    // the engine's own path (extensions registered) interleaves on the
-    // same table and keeps allocating ABOVE the native write's mark
+    // the extension session (same native route) interleaves on the
+    // same table and keeps allocating ABOVE the bare write's mark
     spark.conf.set("spark.sql.catalog.rlo5",
       classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.rlo5.warehouse",
@@ -335,7 +350,7 @@ class RowLevelOpsSpec extends SparkSpec {
     val rows = spark.sql("SELECT id, n FROM rlo5.db.g ORDER BY n")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(rows.map(_._2) === Seq(1L, 6L))
-    assert(rows.head._1 === id0, "identity must survive both UPDATE paths")
+    assert(rows.head._1 === id0, "identity must survive both sessions' UPDATEs")
     assert(rows.map(_._1).distinct.size === 2, "ids must stay unique")
   }
 }
