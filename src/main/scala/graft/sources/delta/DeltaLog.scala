@@ -386,15 +386,16 @@ object DeltaLog {
     * (upstream's VersionNotFoundException), never a silent read of
     * newer data.
     *
-    * The checkpoint seed is decoded once and then served from the
-    * driver-side [[CheckpointCache]] until the checkpoint is replaced
-    * or rewritten: a read, overwrite or merge of a checkpointed table
-    * starts no Spark job for its log while the checkpoint holds at most
-    * `spark.graft.delta.distributedReplayThreshold` rows. Past that, the
-    * add rows are decoded afresh on every call (the cache bounds itself
-    * by the same value); such tables normally read through
-    * [[prunedSnapshot]]. The guards and the protocol gate run on every
-    * call, cached or not. */
+    * The checkpoint seed comes from [[checkpointState]]: decoded once
+    * and then served from the driver-side [[CheckpointCache]] until the
+    * checkpoint is replaced or rewritten, so a read, overwrite or merge
+    * of a checkpointed table starts no Spark job for its log while the
+    * checkpoint holds at most `spark.graft.delta.distributedReplayThreshold`
+    * rows. Past that, the add rows are decoded afresh on every call (the
+    * cache bounds itself by the same value); such tables normally read
+    * through [[prunedSnapshot]]. This and [[checkpointDriver]] are the
+    * reference routes the distributed ones are spec-pinned against. The
+    * guards and the protocol gate run on every call, cached or not. */
   def snapshot(spark: SparkSession, table: String,
                asOf: Option[Long] = None): Snapshot =
     replay(spark, table, asOf, withFiles = true)
@@ -405,12 +406,12 @@ object DeltaLog {
     * The JSON tail replays metadata-only, and the result is
     * [[snapshot]]'s minus `files`/`tombstones` (spec-pinned
     * field-identical). The checkpoint's metadata comes from the same
-    * [[CheckpointCache]] entry [[snapshot]] uses, and a table too large
+    * [[checkpointState]] entry [[snapshot]] uses, and a table too large
     * to cache its add rows still caches its protocol, metaData and txn
-    * rows (decoded by a column-pruned [[readCpMeta]], so a million add
-    * rows never deserialize): a plain append and every streaming-sink
-    * epoch cost O(tail commits) on the driver and no Spark job for the
-    * log until the next checkpoint.
+    * rows (decoded from the column-pruned [[CheckpointFrame.metaRows]],
+    * so a million add rows never deserialize): a plain append and every
+    * streaming-sink epoch cost O(tail commits) on the driver and no
+    * Spark job for the log until the next checkpoint.
     *
     * Same reconstruction guards as [[snapshot]]: an unrooted or gapped
     * replay refuses rather than reporting partial metadata (a missing
@@ -531,12 +532,15 @@ object DeltaLog {
       files.fold(0L)(f => f.adds.size.toLong + f.tombstones.size)
   }
 
-  /** Every row of a checkpoint, decoded — [[checkpointState]]'s full
-    * decode. Vintage guards: checkpoints written before a column or
+  /** Checkpoint rows, decoded — [[checkpointState]]'s one decode, over
+    * every row or over the column-pruned [[CheckpointFrame.metaRows]]
+    * (whose rows carry no add or remove column, so `files` comes back
+    * empty). Vintage guards: checkpoints written before a column or
     * field existed (`remove`, `configuration`, `modificationTime`, the
     * protocol features, `deletionVector` in either its STRUCT or its
-    * pre-round-12 JSON-string form) stay readable. */
-  private def decodeCheckpoint(
+    * pre-round-12 JSON-string form) stay readable; a JSON-string vector
+    * goes through [[parseDv]]. */
+  private def decodeCheckpoint(table: String,
       rows: Array[org.apache.spark.sql.Row]): CpState = {
     import org.apache.spark.sql.Row
     val adds = Vector.newBuilder[AddFile]
@@ -560,13 +564,14 @@ object DeltaLog {
         val stats = Option(a.getAs[String]("stats")).flatMap(parseStats)
         val pvals = Option(a.getAs[Map[String, String]]("partitionValues"))
           .getOrElse(Map.empty)
+        val path = a.getAs[String]("path")
         val dv = field(a, "deletionVector").flatMap(i =>
           a.schema(i).dataType match {
             case _: org.apache.spark.sql.types.StructType =>
               Some(CpDv.toDescriptor(a.getStruct(i)))
-            case _ => DeletionVectors.fromJsonString(a.getString(i))
+            case _ => parseDv(table, path, a.getString(i))
           })
-        adds += AddFile(a.getAs[String]("path"), a.getAs[Long]("size"), stats,
+        adds += AddFile(path, a.getAs[Long]("size"), stats,
           pvals, dataChange = true,
           modificationTime = longField(a, "modificationTime"), dv = dv)
       }
@@ -594,64 +599,95 @@ object DeltaLog {
       txns.toMap), Some(CpFiles(adds.result(), tombstones.result())))
   }
 
-  /** Protocol/metaData/txn content of a checkpoint DataFrame, in ONE
-    * column-pruned pass (the add rows never deserialize) — the
-    * metadata-only decode of a checkpoint too large to cache its add
-    * rows ([[checkpointState]]) and [[checkpointDistributed]]'s (whose
-    * metadata must stay bound to ITS checkpoint, not a fresh listing —
-    * a concurrent commit between the two would otherwise mix a newer
-    * metaData with older add rows). Reads the same fields, with the
-    * same vintage guards, as [[decodeCheckpoint]]. */
-  private[delta] def readCpMeta(
-      cpDf: org.apache.spark.sql.DataFrame): CpMetaContent = {
+  /** A checkpoint's parquet parts opened as one frame — the one reader
+    * of checkpoint parquet ([[readCheckpoint]]). `adds` and `removes`
+    * are the action rows NORMALIZED across vintages: a missing column
+    * reads as null (`modificationTime` and `deletionTimestamp` as 0),
+    * and `deletionVector` comes out as the JSON string `dvJson`, the
+    * protocol STRUCT rendered through `to_json`, so one [[parseDv]]
+    * covers both forms. */
+  private[delta] final case class CheckpointFrame(
+      raw: org.apache.spark.sql.DataFrame) {
     import org.apache.spark.sql.functions.{col, lit}
-    def has(action: String): Boolean = cpDf.columns.contains(action)
-    def hasField(action: String, field: String): Boolean =
-      has(action) && cpDf.schema(action).dataType
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-        .fieldNames.contains(field)
-    def optCol(action: String, field: String, t: String) =
-      if (hasField(action, field)) col(s"$action.$field")
-      else lit(null).cast(t).as(field)
-    val rows = cpDf
-      .where((if (has("protocol")) col("protocol").isNotNull else lit(false)) ||
-        (if (has("metaData")) col("metaData").isNotNull else lit(false)) ||
-        (if (has("txn")) col("txn").isNotNull else lit(false)))
-      .select(
-        optCol("protocol", "minReaderVersion", "int"),
-        optCol("protocol", "minWriterVersion", "int"),
-        optCol("protocol", "readerFeatures", "array<string>"),
-        optCol("protocol", "writerFeatures", "array<string>"),
-        optCol("metaData", "id", "string"),
-        optCol("metaData", "schemaString", "string"),
-        optCol("metaData", "partitionColumns", "array<string>"),
-        optCol("metaData", "configuration", "map<string,string>"),
-        optCol("txn", "appId", "string"),
-        optCol("txn", "version", "bigint"))
-      .collect()
-    var proto: Option[(Int, Int, Set[String], Set[String])] = None
-    var metaId: Option[String] = None
-    var schemaJson: Option[String] = None
-    var partCols: Seq[String] = Seq.empty
-    var configuration: Map[String, String] = Map.empty
-    val txns = scala.collection.mutable.Map.empty[String, Long]
-    rows.foreach { r =>
-      def feats(i: Int): Set[String] =
-        if (r.isNullAt(i)) Set.empty else r.getSeq[String](i).toSet
-      if (!r.isNullAt(0))
-        proto = Some((r.getInt(0), r.getInt(1), feats(2), feats(3)))
-      if (!r.isNullAt(4) || !r.isNullAt(5)) { // metaData row
-        metaId = Option(r.getString(4))
-        schemaJson = Option(r.getString(5)).filter(_.nonEmpty)
-        partCols =
-          if (r.isNullAt(6)) Seq.empty else r.getSeq[String](6).toList
-        if (!r.isNullAt(7))
-          configuration = r.getMap[String, String](7).toMap
-      }
-      if (!r.isNullAt(8)) txns += r.getString(8) -> r.getLong(9)
+
+    /** (path, partitionValues, size, modificationTime, stats, dvJson). */
+    def adds: org.apache.spark.sql.DataFrame = actions("add", Seq(
+      "path" -> "string", "partitionValues" -> "map<string,string>",
+      "size" -> "bigint", "modificationTime" -> "bigint",
+      "stats" -> "string", "deletionVector" -> "string"))
+
+    /** (path, deletionTimestamp, dvJson). */
+    def removes: org.apache.spark.sql.DataFrame = actions("remove", Seq(
+      "path" -> "string", "deletionTimestamp" -> "bigint",
+      "deletionVector" -> "string"))
+
+    /** The protocol, metaData and txn rows, column-pruned: the add and
+      * remove columns are never read. */
+    def metaRows: org.apache.spark.sql.DataFrame = {
+      val present = Seq("protocol", "metaData", "txn")
+        .filter(raw.columns.contains)
+      raw.where(present.map(col(_).isNotNull).reduceOption(_ || _)
+          .getOrElse(lit(false)))
+        .select(present.map(col): _*)
     }
-    CpMetaContent(proto, metaId, schemaJson, partCols, configuration,
-      txns.toMap)
+
+    /** `action`'s `fields` (name → type when missing), normalized. */
+    private def actions(action: String,
+                        fields: Seq[(String, String)]): org.apache.spark.sql.DataFrame = {
+      import org.apache.spark.sql.types.{DataType, StructType}
+      val have: Map[String, DataType] = raw.schema.find(_.name == action)
+        .map(_.dataType.asInstanceOf[StructType].fields
+          .map(f => f.name -> f.dataType).toMap)
+        .getOrElse(Map.empty)
+      val cols = fields.map { case (name, t) =>
+        val c = have.get(name) match {
+          case None if t == "bigint" => lit(0L)
+          case None => lit(null).cast(t)
+          case Some(_: StructType) =>
+            org.apache.spark.sql.functions.to_json(col(s"$action.$name"))
+          case Some(_) => col(s"$action.$name")
+        }
+        c.as(if (name == "deletionVector") "dvJson" else name)
+      }
+      raw.where(if (have.isEmpty) lit(false) else col(action).isNotNull)
+        .select(cols: _*)
+    }
+  }
+
+  /** Checkpoint parts `paths`, opened through the one parquet reader. */
+  private[delta] def readCheckpoint(spark: SparkSession,
+                                    paths: Seq[Path]): CheckpointFrame =
+    CheckpointFrame(spark.read.parquet(paths.map(_.toString): _*))
+
+  /** The one deletion-vector rule for log rows that carry the vector as
+    * a JSON string ([[CheckpointFrame]]'s `dvJson`, pre-round-12
+    * checkpoints): null, empty or `"null"` means no vector; anything
+    * else must parse, or the read refuses — a dropped vector would
+    * resurrect the rows it deletes, and an orphan walk would reclaim
+    * its still-referenced sidecar. */
+  private[delta] def parseDv(table: String, path: String,
+                             dvJson: String): Option[DvDescriptor] =
+    Option(dvJson).filter(s => s.nonEmpty && s != "null").map(s =>
+      DeletionVectors.fromJsonString(s).getOrElse(
+        throw new IllegalStateException(
+          s"delta: unparseable deletionVector for $path in $table's log " +
+            s"('$s') — refusing to read it (a dropped vector would " +
+            "resurrect deleted rows)")))
+
+  /** One [[CheckpointFrame.adds]] row as an [[AddFile]] — the one row
+    * conversion. A pure function of the row, so it also runs
+    * executor-side; `withStats = false` leaves the stats unparsed. */
+  private[delta] def cpAddFile(table: String, withStats: Boolean = true)(
+      r: org.apache.spark.sql.Row): AddFile = {
+    val path = r.getAs[String]("path")
+    AddFile(path, r.getAs[Long]("size"),
+      if (withStats) Option(r.getAs[String]("stats")).flatMap(parseStats)
+      else None,
+      Option(r.getAs[Map[String, String]]("partitionValues"))
+        .getOrElse(Map.empty),
+      dataChange = true,
+      modificationTime = r.getAs[Long]("modificationTime"),
+      dv = parseDv(table, path, r.getAs[String]("dvJson")))
   }
 
   /** Driver-side cache of decoded checkpoints, keyed by table. One
@@ -693,14 +729,17 @@ object DeltaLog {
     def clear(): Unit = synchronized { entries.clear(); held = 0L }
   }
 
-  /** Checkpoint `m` of `tbl`, decoded — from [[CheckpointCache]] when
-    * its parts are unchanged. `withFiles` asks for the add and remove
-    * rows as well. A miss at or under the distributed-replay threshold
-    * (by the pointer's row count) decodes every row, so one decode
-    * serves both [[snapshot]] and [[metaSnapshot]]; past it, a
-    * metadata-only request reads just the protocol, metaData and txn
-    * rows. A part that cannot be stat'ed is read uncached, so a missing
-    * part fails exactly as the read always has. */
+  /** Checkpoint `m` of `tbl`, decoded — the one source of a
+    * checkpoint's protocol, metaData and txn rows for every route, and
+    * of [[snapshot]]'s seed. Served from [[CheckpointCache]] while the
+    * parts keep the file status they were decoded from, so the state
+    * stays bound to THAT checkpoint. `withFiles` asks for the add and
+    * remove rows as well. A miss at or under the distributed-replay
+    * threshold (by the pointer's row count) decodes every row, so one
+    * decode serves both [[snapshot]] and [[metaSnapshot]]; past it, a
+    * metadata-only request decodes just [[CheckpointFrame.metaRows]]. A
+    * part that cannot be stat'ed is read uncached, so a missing part
+    * fails exactly as the read always has. */
   private def checkpointState(spark: SparkSession, tbl: Path,
                               m: CheckpointMeta,
                               withFiles: Boolean): CpState = {
@@ -715,10 +754,11 @@ object DeltaLog {
       .filter(s => !withFiles || s.files.nonEmpty)
       .getOrElse {
         val threshold = replayThreshold(spark)
-        val cpDf = spark.read.parquet(paths.map(_.toString): _*)
+        val cp = readCheckpoint(spark, paths)
         val st =
-          if (withFiles || m.size <= threshold) decodeCheckpoint(cpDf.collect())
-          else CpState(readCpMeta(cpDf), None)
+          if (withFiles || m.size <= threshold)
+            decodeCheckpoint(table, cp.raw.collect())
+          else decodeCheckpoint(table, cp.metaRows.collect()).copy(files = None)
         key.foreach(CheckpointCache.put(table, _, st, threshold))
         st
       }
@@ -743,18 +783,22 @@ object DeltaLog {
                   partitionFilter: Map[String, String]): Seq[AddFile] =
     prunedSnapshot(spark, table, partitionFilter).files
 
-  /** [[prunedFiles]] plus the schema/partitioning metadata, in ONE pass:
-    * the JSON tail is parsed once and the checkpoint parquet opened once
-    * for both the metaData row and the pruned add collection — a long
-    * post-checkpoint tail (the regime this API exists for) is not read
-    * twice. `txns` is left empty: exactly-once writers need the full
-    * [[snapshot]], not a pruned read. */
+  /** [[prunedFiles]] plus the schema/partitioning metadata. One log
+    * listing serves the `asOf` validation and the JSON tail; the tail
+    * replays once ([[replayTail]]); the protocol gate, schema, id and
+    * partition columns come from [[checkpointState]] (cached, so after
+    * a first read the only Spark work is the pruned add collect) with
+    * the tail's overrides on top; and the live checkpoint adds come off
+    * [[liveCheckpoint]], partition predicates applied BEFORE the
+    * collect. A checkpoint without a metaData row reads as no schema,
+    * as [[snapshot]] does. `txns` is left empty: exactly-once writers
+    * need the full [[snapshot]], not a pruned read. */
   def prunedSnapshot(spark: SparkSession, table: String,
                      partitionFilter: Map[String, String],
                      parseAddStats: Boolean = true,
                      onlyPartitionKeys: Boolean = false,
                      asOf: Option[Long] = None): Snapshot = {
-    import org.apache.spark.sql.functions.{col, element_at, lit, not}
+    import org.apache.spark.sql.functions.{col, element_at, lit}
     // column mapping: partitionValues are keyed by PHYSICAL names; the
     // caller's filter keys are logical — translate through the schema.
     // `onlyPartitionKeys` additionally DROPS keys that are not partition
@@ -776,9 +820,7 @@ object DeltaLog {
     // any scale, and in the hot caller, the row-level scan, asOf is the
     // freshly-read head so the newest checkpoint always covers).
     // snapshot()'s existence validation applies — never a silent read of
-    // older state for a version that does not exist. ONE log listing
-    // serves the validation and the tail below (this runs per DSv2 scan
-    // planning, so FS round-trips matter).
+    // older state for a version that does not exist.
     val allVs = versions(spark, table)
     asOf.foreach(a =>
       require(a >= 0 && allVs.nonEmpty && a <= allVs.max,
@@ -791,122 +833,29 @@ object DeltaLog {
         val pf = physFilterOf(s.schemaJson, s.partitionColumns)
         s.copy(files = s.files.filter(f =>
           pf.forall { case (k, v) => f.partitionValues.get(k).contains(v) }))
-      case Some(cpMeta) =>
-        val cpV = cpMeta.version
-        val tbl = new Path(table)
-        // replay the JSON tail driver-side ONCE: live tail adds, removes
-        // that reach back into the checkpoint, metadata overrides. Same
-        // density guard as snapshot(): a gap in the tail is partial
-        // state, never silently skipped.
-        val tailVs = allVs.filter(v => v > cpV && asOf.forall(v <= _))
-        require(tailVs.isEmpty || tailVs == (cpV + 1 to tailVs.last),
-          s"delta: $table's log is missing commits in ($cpV, " +
-            s"${tailVs.lastOption.getOrElse(cpV)}] (retained: $tailVs) — " +
-            "refusing to replay partial state")
-        val tailLive = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
-        val removedFromCp = scala.collection.mutable.Set.empty[String]
-        var schemaJson: Option[String] = None
-        var partCols: Option[Seq[String]] = None
-        var metaId: Option[String] = None
-        var tailProtocol: Option[(Int, Int, Set[String], Set[String])] = None
-        var headV = cpV
-        tailVs.foreach { v =>
-          headV = v
-          val c = readCommit(spark, table, v)
-          c.protocol.foreach(p => tailProtocol = Some(p))
-          // same-commit re-adds supersede their removes (DV DELETE shape)
-          val readded = c.adds.map(_.path).toSet
-          c.adds.foreach(a => tailLive += a.path -> a)
-          c.removes.filterNot(r => readded(r.path)).foreach { r =>
-            // ALWAYS tombstone against the checkpoint: a path re-added at
-            // v6 and removed at v7 must not resurrect via its (stale)
-            // checkpoint row — a later tail re-add supersedes through the
-            // keyed `all` map below either way
-            tailLive -= r.path
-            removedFromCp += r.path
-          }
-          c.schemaJson.foreach(s => schemaJson = Some(s))
-          c.partitionColumns.foreach(p => partCols = Some(p))
-          if (metaId.isEmpty) metaId = c.metaDataId
-        }
-        val cpDf = spark.read.parquet(
-          checkpointPaths(tbl, cpV, cpMeta.parts).map(_.toString): _*)
+      case Some(cp) =>
+        val headV = allVs.filter(v => v > cp.version && asOf.forall(v <= _))
+          .lastOption.getOrElse(cp.version)
+        val live = liveCheckpoint(spark, table, cp, headV, allVs)
+        val tail = live.tail
+        val meta = checkpointState(spark, new Path(table), cp,
+          withFiles = false).meta
         // the protocol gate applies to the DISTRIBUTED replay too — a
         // past-threshold table demanding an unimplemented reader must
         // refuse here, not misread (the driver replay gates in snapshot)
-        val cpProto = if (!cpDf.columns.contains("protocol")) None else {
-          val hasFeats = cpDf.select("protocol.*").columns
-            .contains("readerFeatures")
-          cpDf.where(col("protocol").isNotNull)
-            .select(col("protocol.minReaderVersion"),
-              if (hasFeats) col("protocol.readerFeatures")
-              else org.apache.spark.sql.functions.lit(null)
-                .cast("array<string>").as("readerFeatures"))
-            .collect().headOption.map { r =>
-              (r.getInt(0),
-                if (r.isNullAt(1)) Set.empty[String]
-                else r.getSeq[String](1).toSet)
-            }
-        }
-        val effProto = tailProtocol.map(p => (p._1, p._3))
-          .orElse(cpProto).getOrElse((1, Set.empty[String]))
-        checkReadable(table, effProto._1, effProto._2)
-        val metaRow = cpDf.where(col("metaData").isNotNull)
-          .select(col("metaData.id"), col("metaData.schemaString"),
-            col("metaData.partitionColumns"))
-          .head()
-        if (schemaJson.isEmpty)
-          schemaJson = Option(metaRow.getString(1)).filter(_.nonEmpty)
-        if (metaId.isEmpty) metaId = Option(metaRow.getString(0))
-        val parts = partCols.getOrElse(metaRow.getSeq[String](2).toList)
-        // partition predicates + tombstone anti-filter BEFORE collect;
-        // legacy checkpoints (no modificationTime column) read as 0
-        val cpAdds0 = cpDf.where(col("add").isNotNull).select(col("add.*"))
-        val withMt0 =
-          if (cpAdds0.columns.contains("modificationTime")) cpAdds0
-          else cpAdds0.withColumn("modificationTime", lit(0L))
-        // deletion vectors must survive the distributed path — a pruned
-        // read that dropped them would resurrect deleted rows. The
-        // protocol STRUCT form (round 12+) normalizes through to_json so
-        // one string parse below covers it and the legacy string form.
-        val withMt =
-          if (!withMt0.columns.contains("deletionVector"))
-            withMt0.withColumn("deletionVector",
-              lit(null).cast(org.apache.spark.sql.types.StringType))
-          else withMt0.schema("deletionVector").dataType match {
-            case _: org.apache.spark.sql.types.StructType =>
-              withMt0.withColumn("deletionVector",
-                org.apache.spark.sql.functions.to_json(col("deletionVector")))
-            case _ => withMt0
-          }
+        val proto = tail.protocol.orElse(meta.protocol)
+          .getOrElse((1, 2, Set.empty[String], Set.empty[String]))
+        checkReadable(table, proto._1, proto._3)
+        val schemaJson = tail.schemaJson.orElse(meta.schemaJson)
+        val parts = tail.partCols.getOrElse(meta.partCols)
         val physFilter = physFilterOf(schemaJson, parts)
-        val pruned = physFilter.foldLeft(withMt) { case (df, (k, v)) =>
+        val cpFiles = physFilter.foldLeft(live.adds) { case (df, (k, v)) =>
           df.where(element_at(col("partitionValues"), k) === lit(v))
-        }.where(
-          if (removedFromCp.isEmpty) lit(true)
-          else not(col("path").isin(removedFromCp.toSeq: _*)))
-        val cpFiles = pruned
-          .select(col("path"), col("size"), col("partitionValues"), col("stats"),
-            col("modificationTime"), col("deletionVector"))
-          .collect().map { r =>
-            AddFile(r.getString(0), r.getLong(1),
-              if (parseAddStats)
-                Option(r.getAs[String]("stats")).flatMap(parseStats)
-              else None,
-              Option(r.getAs[Map[String, String]]("partitionValues"))
-                .getOrElse(Map.empty),
-              dataChange = true,
-              modificationTime = r.getLong(4),
-              dv = Option(r.getAs[String]("deletionVector"))
-                .flatMap(DeletionVectors.fromJsonString))
-          }.toSeq
-        // keyed by path like snapshot(): a tail re-add of a checkpointed
-        // path supersedes the checkpoint row, never duplicates it
-        val all = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
-        cpFiles.foreach(f => all += f.path -> f)
-        tailLive.values.filter(f => physFilter.forall { case (k, v) =>
-          f.partitionValues.get(k).contains(v) }).foreach(f => all += f.path -> f)
-        Snapshot(headV, all.values.toSeq, schemaJson, Map.empty, parts, metaId)
+        }.collect().map(cpAddFile(table, parseAddStats))
+        val tailFiles = tail.tailLive.filter(f => physFilter.forall {
+          case (k, v) => f.partitionValues.get(k).contains(v) })
+        Snapshot(headV, cpFiles.toSeq ++ tailFiles, schemaJson, Map.empty,
+          parts, tail.metaId.orElse(meta.metaId))
     }
   }
 
@@ -945,19 +894,15 @@ object DeltaLog {
     * cleaned history then fails [[snapshot]]'s root guard loudly rather
     * than wedging every read on a parse error. */
   def lastCheckpointVersion(spark: SparkSession, table: String): Option[Long] =
-    lastCheckpointInfo(spark, table).map(_._1)
+    lastCheckpoint(spark, table).map(_.version)
 
-  /** (version, row count) from `_last_checkpoint`. The `size` field IS
-    * the checkpoint's row count (written by [[checkpoint]]), i.e. an
-    * upper bound on live files at the checkpoint — the metadata-only
-    * signal [[checkpointRows]] uses to pick driver vs distributed
-    * replay. A pointer predating the size field reports the count from
-    * the checkpoint parquet's FOOTER instead (metadata IO, no data
-    * scan). */
-  def lastCheckpointInfo(spark: SparkSession, table: String): Option[(Long, Long)] =
-    lastCheckpoint(spark, table).map(m => (m.version, m.size))
-
-  /** Full `_last_checkpoint` contents, multi-part `parts` included. */
+  /** Full `_last_checkpoint` contents, multi-part `parts` included. The
+    * `size` field IS the checkpoint's row count (written by
+    * [[checkpoint]]), i.e. an upper bound on live files at the
+    * checkpoint — the metadata-only signal [[checkpointRows]] uses to
+    * pick driver vs distributed replay. A pointer predating the size
+    * field reports the count from the checkpoint parquet's FOOTER
+    * instead (metadata IO, no data scan). */
   private[delta] def lastCheckpoint(spark: SparkSession,
                                     table: String): Option[CheckpointMeta] = {
     val tbl = new Path(table)
@@ -995,7 +940,7 @@ object DeltaLog {
   /** Live-file upper bound for the newest checkpoint (its row count),
     * None when the table has no checkpoint. */
   def checkpointRows(spark: SparkSession, table: String): Option[Long] =
-    lastCheckpointInfo(spark, table).map(_._2)
+    lastCheckpoint(spark, table).map(_.size)
 
   private def footerRowCount(spark: SparkSession, file: Path): Long = {
     import scala.jdk.CollectionConverters._
@@ -1077,15 +1022,12 @@ object DeltaLog {
                                   add: Option[CpAdd],
                                   remove: Option[CpRemove])
 
-  /** Normalized add/remove rows of the PREVIOUS checkpoint, as read by
-    * the distributed checkpoint path (see [[checkpoint]]): the DV is a
-    * JSON string here (struct forms normalize through `to_json`) so one
-    * executor-side parse covers every vintage. */
+  /** One [[CheckpointFrame.adds]] row, as the distributed checkpoint
+    * path (see [[checkpoint]]) re-encodes it. */
   private[delta] case class RawCpAdd(path: String,
                                      partitionValues: Map[String, String],
                                      size: Long, modificationTime: Long,
                                      stats: String, dvJson: String)
-  private[delta] case class RawCpRemove(path: String, deletionTimestamp: Long)
 
   /** Write a parquet checkpoint of the CURRENT head: one row per action
     * (protocol, metaData, every txn high-water mark, every live add) plus
@@ -1109,7 +1051,8 @@ object DeltaLog {
     val tbl = new Path(table)
     val f = fs(spark, tbl)
     val prevCp = lastCheckpoint(spark, table)
-    val headV = versions(spark, table).lastOption
+    val listing = versions(spark, table)
+    val headV = listing.lastOption
       .orElse(prevCp.map(_.version)).getOrElse(-1L)
     require(headV >= 0, s"delta: $table has no commits to checkpoint")
     val dst = checkpointFile(tbl, headV)
@@ -1133,7 +1076,8 @@ object DeltaLog {
     val threshold = replayThreshold(spark)
     prevCp match {
       case Some(cp) if cp.size > threshold && cp.version < headV =>
-        checkpointDistributed(spark, table, cp, headV, tombstoneRetainMs)
+        checkpointDistributed(spark, table, cp, headV, listing,
+          tombstoneRetainMs)
       case _ => checkpointDriver(spark, table, tombstoneRetainMs)
     }
   }
@@ -1179,13 +1123,15 @@ object DeltaLog {
     head.version
   }
 
-  /** Driver-side replay of the JSON tail past a checkpoint — the
-    * O(commits-since-checkpoint) half every distributed maintenance
-    * path shares ([[checkpointDistributed]], [[graft.sources.delta
-    * .DeltaTable.vacuumRemoved]]'s distributed route). Mirrors
-    * [[snapshot]]'s replay rules exactly: same-commit re-adds supersede
-    * their removes, any add drops an existing tombstone, metadata
-    * overrides apply in order, and gaps refuse. */
+  /** Driver-side replay of the JSON tail past a checkpoint — the one
+    * tail replay of every checkpoint-seeded route ([[prunedSnapshot]],
+    * [[checkpointDistributed]] and, through [[liveCheckpoint]], the
+    * distributed DML, overwrite, restore, clone and vacuum paths). It
+    * is O(commits since the checkpoint) and mirrors [[snapshot]]'s
+    * replay rules exactly: same-commit re-adds supersede their removes,
+    * any add drops an existing tombstone, metadata overrides apply in
+    * order, and gaps refuse. `listing` is the log listing the caller
+    * already holds ([[versions]]), so no route lists the log twice. */
   private[delta] final case class TailReplay(
       tailLive: Seq[AddFile], tailAddedEver: Set[String],
       tailTombs: Seq[(String, Long)], removedFromCp: Set[String],
@@ -1195,9 +1141,9 @@ object DeltaLog {
       txns: Map[String, Long])
 
   private[delta] def replayTail(spark: SparkSession, table: String,
-                                cpVersion: Long, headV: Long): TailReplay = {
-    val tailVs = versions(spark, table)
-      .filter(v => v > cpVersion && v <= headV)
+                                cpVersion: Long, headV: Long,
+                                listing: Seq[Long]): TailReplay = {
+    val tailVs = listing.filter(v => v > cpVersion && v <= headV)
     require(tailVs.isEmpty || tailVs == (cpVersion + 1 to tailVs.last),
       s"delta: $table's log is missing commits in ($cpVersion, " +
         s"${tailVs.lastOption.getOrElse(cpVersion)}] — refusing to " +
@@ -1222,6 +1168,9 @@ object DeltaLog {
         tailLive += a.path -> a; tailAddedEver += a.path; tailTombs -= a.path
       }
       c.removes.filterNot(r => readded(r.path)).foreach { r =>
+        // ALWAYS tombstone against the checkpoint: a path re-added at
+        // v6 and removed at v7 must not resurrect via its (stale)
+        // checkpoint row
         tailLive -= r.path
         removedFromCp += r.path
         tailTombs += r.path -> r.deletionTimestamp
@@ -1238,108 +1187,86 @@ object DeltaLog {
       configO, protoO, txns.toMap)
   }
 
-  /** The previous checkpoint's add rows as a NORMALIZED DataFrame —
-    * (path, partitionValues, size, modificationTime, stats, dvJson) —
-    * covering every vintage: missing columns fill with nulls/zeros,
-    * protocol-struct DVs render to JSON strings so one executor-side
-    * parse serves all forms. */
-  private[delta] def cpAddsNormalized(
-      cpDf: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, to_json}
-    val adds0 = cpDf.where(col("add").isNotNull).select(col("add.*"))
-    val withMt =
-      if (adds0.columns.contains("modificationTime")) adds0
-      else adds0.withColumn("modificationTime", lit(0L))
-    val withStats =
-      if (withMt.columns.contains("stats")) withMt
-      else withMt.withColumn("stats",
-        lit(null).cast(org.apache.spark.sql.types.StringType))
-    val withDv =
-      if (!withStats.columns.contains("deletionVector"))
-        withStats.withColumn("deletionVector",
-          lit(null).cast(org.apache.spark.sql.types.StringType))
-      else withStats.schema("deletionVector").dataType match {
-        case _: org.apache.spark.sql.types.StructType =>
-          withStats.withColumn("deletionVector",
-            to_json(col("deletionVector")))
-        case _ => withStats
-      }
-    withDv.select(col("path"), col("partitionValues"),
-      col("size"), col("modificationTime"), col("stats"),
-      col("deletionVector").as("dvJson"))
+  /** A checkpoint's live state at `headV`: its [[CheckpointFrame]] add
+    * and remove rows with the tail-superseded paths filtered out, plus
+    * the [[TailReplay]] that supersedes them. */
+  private[delta] final case class CpLive(adds: org.apache.spark.sql.DataFrame,
+                                         tombstones: org.apache.spark.sql.DataFrame,
+                                         tail: TailReplay)
+
+  /** The one supersede rule, shared by every distributed consumer
+    * ([[prunedSnapshot]], [[checkpointDistributed]] and DeltaTable's
+    * candidate selection, overwrite removes, live frame and tombstone
+    * vacuum), so none can diverge from another. A checkpoint add is
+    * live unless the tail removed its path or added it again (a re-add
+    * comes back in `tail.tailLive` with its CURRENT state); a
+    * checkpoint tombstone stands unless the tail added its path or
+    * tombstoned it again (the tail's own tombstone is newer). The rule
+    * is one pushed-down `NOT IN` filter on `path`: the tail is
+    * driver-sized by construction ([[checkpoint]] caps it), so the set
+    * rides the plan with no broadcast and no extra job. */
+  private[delta] def liveCheckpoint(spark: SparkSession, table: String,
+                                    cp: CheckpointMeta, headV: Long,
+                                    listing: Seq[Long]): CpLive = {
+    import org.apache.spark.sql.functions.{col, not}
+    val tail = replayTail(spark, table, cp.version, headV, listing)
+    val frame = readCheckpoint(spark,
+      checkpointPaths(new Path(table), cp.version, cp.parts))
+    def without(df: org.apache.spark.sql.DataFrame, paths: Set[String]) =
+      if (paths.isEmpty) df else df.where(not(col("path").isin(paths.toSeq: _*)))
+    CpLive(without(frame.adds, tail.removedFromCp ++ tail.tailAddedEver),
+      without(frame.removes, tail.tailAddedEver ++ tail.tailTombs.map(_._1)),
+      tail)
   }
 
-  /** The previous checkpoint's remove rows as (path, deletionTimestamp);
-    * empty frame when the column predates removes. */
-  private[delta] def cpRemovesNormalized(spark: SparkSession,
-      cpDf: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    import spark.implicits._
-    if (!cpDf.columns.contains("remove"))
-      return spark.emptyDataset[RawCpRemove].toDF()
-    val s = cpDf.schema("remove").dataType
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    cpDf.where(col("remove").isNotNull)
-      .select(col("remove.path"),
-        if (s.fieldNames.contains("deletionTimestamp"))
-          col("remove.deletionTimestamp")
-        else lit(0L).as("deletionTimestamp"))
-  }
+  /** [[liveCheckpoint]] of the newest checkpoint at or below `headV`;
+    * None when none covers it (the caller falls back to the driver
+    * replay — the JSON log below the newest checkpoint is driver-sized
+    * by construction). */
+  private[delta] def liveCheckpointAt(spark: SparkSession, table: String,
+                                      headV: Long): Option[CpLive] =
+    lastCheckpoint(spark, table).filter(_.version <= headV).map(cp =>
+      liveCheckpoint(spark, table, cp, headV, versions(spark, table)))
 
   /** The distributed checkpoint path: add rows build from the PREVIOUS
-    * checkpoint's DataFrame plus the (small, by construction) JSON tail
-    * — nothing O(#files) ever materializes on the driver. The tail
-    * replays driver-side exactly like [[prunedSnapshot]]'s (it is
-    * O(commits-since-checkpoint)); checkpoint adds anti-join the
-    * tail-superseded paths out; checkpoint tombstones carry forward
-    * under the same retention-or-still-exists rule as the driver path,
-    * with the existence probes running EXECUTOR-side. Row content is
-    * spec-pinned identical to [[checkpointDriver]]'s. */
+    * checkpoint's [[liveCheckpoint]] frames plus the (small, by
+    * construction) JSON tail — nothing O(#files) ever materializes on
+    * the driver. The previous checkpoint's protocol, metaData and txn
+    * rows come from [[checkpointState]], bound to that checkpoint by its
+    * file status, so a concurrent commit cannot mix newer metadata with
+    * these add rows; the tail's overrides apply on top. Checkpoint
+    * tombstones carry forward under the same retention-or-still-exists
+    * rule as the driver path, with the existence probes running
+    * EXECUTOR-side. Row content is spec-pinned identical to
+    * [[checkpointDriver]]'s. */
   private def checkpointDistributed(spark: SparkSession, table: String,
                                     cp: CheckpointMeta, headV: Long,
+                                    listing: Seq[Long],
                                     tombstoneRetainMs: Long): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
     import spark.implicits._
     val tbl = new Path(table)
     val f = fs(spark, tbl)
-    // --- JSON tail replay (driver-side, O(commits since checkpoint))
-    val tail = replayTail(spark, table, cp.version, headV)
-    val tailLive = tail.tailLive
-    val tailAddedEver = tail.tailAddedEver
-    val tailTombs = tail.tailTombs
-    val removedFromCp = tail.removedFromCp
-    val txns = tail.txns
-    val schemaJson = tail.schemaJson
-    val partColsO = tail.partCols
-    val metaId = tail.metaId
-    val configO = tail.configuration
-    val protoO = tail.protocol
-    // --- checkpoint-side metadata (tiny collects: one row each)
-    val cpDf = spark.read.parquet(
-      checkpointPaths(tbl, cp.version, cp.parts).map(_.toString): _*)
-    // one column-pruned pass for the checkpoint's protocol/metaData/txn
-    // content (shared reader with metaSnapshot) — bound to THIS
-    // checkpoint, so a concurrent commit cannot mix newer metadata with
-    // these add rows; the tail's overrides then apply on top
-    val cpContent = readCpMeta(cpDf)
-    val proto = protoO.orElse(cpContent.protocol).getOrElse((1, 2,
+    val live = liveCheckpoint(spark, table, cp, headV, listing)
+    val tail = live.tail
+    val cpContent = checkpointState(spark, tbl, cp, withFiles = false).meta
+    val proto = tail.protocol.orElse(cpContent.protocol).getOrElse((1, 2,
       Set.empty[String], Set.empty[String]))
     checkReadable(table, proto._1, proto._3)
     // metadata-less logs REFUSE here (matching the replay guards'
     // refuse-rather-than-report-partial stance): minting a fresh id or
     // an empty schema would silently rewrite the table's identity in
     // the new checkpoint for every checkpoint-seeded reader
-    val outSchemaJson = schemaJson.orElse(cpContent.schemaJson)
+    val outSchemaJson = tail.schemaJson.orElse(cpContent.schemaJson)
       .filter(_.nonEmpty).getOrElse(throw new IllegalStateException(
         s"delta: neither $table's checkpoint v${cp.version} nor its " +
           "tail carries a table schema — refusing to checkpoint"))
-    val outPartCols = partColsO.getOrElse(cpContent.partCols)
-    val outMetaId = metaId.orElse(cpContent.metaId)
+    val outPartCols = tail.partCols.getOrElse(cpContent.partCols)
+    val outMetaId = tail.metaId.orElse(cpContent.metaId)
       .getOrElse(throw new IllegalStateException(
         s"delta: neither $table's checkpoint v${cp.version} nor its " +
           "tail carries a metaData id — refusing to checkpoint"))
-    val outConfig = configO.getOrElse(cpContent.configuration)
-    val outTxns = (cpContent.txns ++ txns).toSeq.sortBy(_._1)
+    val outConfig = tail.configuration.getOrElse(cpContent.configuration)
+    val outTxns = (cpContent.txns ++ tail.txns).toSeq.sortBy(_._1)
     // --- driver-sized rows (protocol, metaData, txns, tail adds/tombs)
     val tombCutoff = System.currentTimeMillis() - tombstoneRetainMs
     val driverRows: Seq[CpRow] =
@@ -1351,65 +1278,38 @@ object DeltaLog {
           outConfig)), None, None, None) +:
         (outTxns.map { case (app, v) =>
           CpRow(None, None, Some(CpTxn(app, v)), None, None)
-        } ++ tailLive.map { a =>
+        } ++ tail.tailLive.map { a =>
           CpRow(None, None, None, Some(CpAdd(a.path, a.partitionValues,
             a.size, a.modificationTime, dataChange = false,
             a.stats.map(renderStats).orNull, a.dv.map(CpDv.of))), None)
-        } ++ tailTombs
+        } ++ tail.tailTombs
           .filter { case (p, ts) => ts > tombCutoff || f.exists(new Path(tbl, p)) }
           .sortBy(_._1).map { case (p, ts) =>
             CpRow(None, None, None, None,
               Some(CpRemove(p, ts, dataChange = false)))
           })
-    // --- checkpoint adds (DataFrame end-to-end): normalize vintages
-    // (missing modificationTime/DV columns; struct DVs → JSON string),
-    // anti-join the tail-superseded paths, re-encode as CpRow rows.
-    // stats pass through VERBATIM (the previous checkpoint's rendering
-    // is already parse-compatible — no driver-side re-render).
-    val rawAdds = cpAddsNormalized(cpDf)
-    val excluded = (removedFromCp ++ tailLive.map(_.path)).toSeq
-    val keptAdds =
-      (if (excluded.isEmpty) rawAdds
-       else rawAdds.join(broadcast(excluded.toDF("path")),
-         Seq("path"), "left_anti")).as[RawCpAdd]
+    // --- live checkpoint adds, re-encoded as CpRow rows. stats pass
+    // through VERBATIM (the previous checkpoint's rendering is already
+    // parse-compatible — no driver-side re-render).
     val tableStr = table
-    val addRows = keptAdds.map { r =>
-      // a PRESENT-but-malformed descriptor refuses the checkpoint: a
-      // dropped DV would resurrect its deleted rows for every
-      // checkpoint-seeded reader
-      val dv = Option(r.dvJson).map(s =>
-        DeletionVectors.fromJsonString(s).getOrElse(
-          throw new IllegalStateException(
-            s"delta: unparseable deletionVector for ${r.path} in " +
-              s"$tableStr's checkpoint — refusing to checkpoint")))
+    val addRows = live.adds.as[RawCpAdd].map { r =>
       CpRow(None, None, None, Some(CpAdd(r.path,
         Option(r.partitionValues).getOrElse(Map.empty), r.size,
         r.modificationTime, dataChange = false, r.stats,
-        dv.map(CpDv.of))), None)
+        parseDv(tableStr, r.path, r.dvJson).map(CpDv.of))), None)
     }
-    // --- checkpoint tombstones: drop only past retention AND gone
+    // --- live checkpoint tombstones: drop only past retention AND gone
     // (the probes run executor-side — O(expired tombstones) FS calls
     // spread across tasks, not a driver loop)
     val bconf = org.apache.spark.sql.graft.ColumnBridge
       .broadcastHadoopConf(spark, spark.sparkContext.hadoopConfiguration)
-    val rmRows: org.apache.spark.sql.Dataset[CpRow] =
-      if (!cpDf.columns.contains("remove")) spark.emptyDataset[CpRow]
-      else {
-        val rm0 = cpRemovesNormalized(spark, cpDf)
-        val rmExcluded = (tailAddedEver ++ tailTombs.map(_._1)).toSeq
-        val kept =
-          (if (rmExcluded.isEmpty) rm0
-           else rm0.join(broadcast(rmExcluded.toDF("path")),
-             Seq("path"), "left_anti")).as[RawCpRemove]
-        kept.mapPartitions { it =>
-          lazy val fsx = new Path(tableStr)
-            .getFileSystem(bconf.value.value)
-          it.filter(r => r.deletionTimestamp > tombCutoff ||
-              fsx.exists(new Path(tableStr, r.path)))
-            .map(r => CpRow(None, None, None, None,
-              Some(CpRemove(r.path, r.deletionTimestamp,
-                dataChange = false))))
-        }
+    val rmRows = live.tombstones.select("path", "deletionTimestamp")
+      .as[(String, Long)].mapPartitions { it =>
+        lazy val fsx = new Path(tableStr).getFileSystem(bconf.value.value)
+        it.filter { case (p, ts) => ts > tombCutoff ||
+            fsx.exists(new Path(tableStr, p)) }
+          .map { case (p, ts) => CpRow(None, None, None, None,
+            Some(CpRemove(p, ts, dataChange = false))) }
       }
     val rowsDf = spark.createDataset(driverRows).toDF()
       .unionByName(addRows.toDF()).unionByName(rmRows.toDF())

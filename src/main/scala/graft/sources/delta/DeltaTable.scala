@@ -457,10 +457,11 @@ object DeltaTable {
     }
   }
 
-  /** The 6-column normalized add frame ([[DeltaLog.cpAddsNormalized]]'s
-    * shape) of a version's live files: checkpoint side stays a
-    * DataFrame, the (small) tail joins as local rows. Fallback to the
-    * driver replay when no checkpoint covers `headV`. */
+  /** The 6-column normalized add frame ([[DeltaLog.CheckpointFrame]]'s
+    * `adds` shape) of a version's live files: the checkpoint side is
+    * [[DeltaLog.liveCheckpoint]]'s frame, the (small) tail joins as
+    * local rows. Fallback to the driver replay when no checkpoint covers
+    * `headV`. */
   private def liveFrame(spark: SparkSession, table: String,
                         headV: Long): DataFrame = {
     import org.apache.spark.sql.Row
@@ -485,11 +486,9 @@ object DeltaTable {
           f.partitionValues, f.size, f.modificationTime,
           f.stats.map(DeltaLog.renderStats).orNull,
           f.dv.map(DeletionVectors.toJsonString).orNull)), parts), schema)
-    cpLiveState(spark, table, headV) match {
-      case Some((live, tail)) =>
-        import org.apache.spark.sql.functions.col
-        live.select(schema.fieldNames.toSeq.map(col): _*)
-          .unionByName(rowsOf(tail.tailLive))
+    DeltaLog.liveCheckpointAt(spark, table, headV) match {
+      case Some(live) =>
+        live.adds.unionByName(rowsOf(live.tail.tailLive))
       case None =>
         // no covering checkpoint: the replay IS driver-sized here (the
         // JSON log up to `headV` predates the newest checkpoint), but
@@ -537,7 +536,7 @@ object DeltaTable {
         val tbl = new Path(tableStr)
         val f = tbl.getFileSystem(bconf.value.value)
         it.flatMap { case (p, dvJson) =>
-          val side = Option(dvJson).flatMap(DeletionVectors.fromJsonString)
+          val side = DeltaLog.parseDv(tableStr, p, dvJson)
             .flatMap(DeletionVectors.tombstonePath)
           (if (f.exists(new Path(tbl, p))) Seq.empty[String] else Seq(p)) ++
             side.filterNot(s => f.exists(new Path(tbl, s)))
@@ -570,20 +569,12 @@ object DeltaTable {
         .select(col("path"), col("dvJson").as("hDvJson"))
         .withColumn("hPresent", lit(true))
       val joined = tSide.join(hSide, Seq("path"), "full_outer")
-      val tableStr2 = table
       val nowC = now
       val lines = joined.mapPartitions { it =>
         // parsed ONCE per side per row; descriptor equality IS the
         // driver path's `_.dv == f.dv` (case-class equality over the
         // same five fields), stable across checkpoint-struct and
         // legacy-string encodings
-        def dvOf(s: String): Option[DvDescriptor] =
-          Option(s).filter(x => x.nonEmpty && x != "null").map { x =>
-            DeletionVectors.fromJsonString(x).getOrElse(
-              throw new IllegalStateException(
-                s"delta: unparseable deletionVector in $tableStr2's log " +
-                  "during restore — refusing rather than mis-restoring"))
-          }
         // per-partition sidecar-tombstone dedup (packed sidecars shared
         // by several files emit once per partition; a cross-partition
         // duplicate tombstone is replay-idempotent)
@@ -592,8 +583,12 @@ object DeltaTable {
           val p = r.getAs[String]("path")
           val tP = !r.isNullAt(r.fieldIndex("tPresent"))
           val hP = !r.isNullAt(r.fieldIndex("hPresent"))
-          val tDv = if (tP) dvOf(r.getAs[String]("tDvJson")) else None
-          val hDv = if (hP) dvOf(r.getAs[String]("hDvJson")) else None
+          val tDv =
+            if (tP) DeltaLog.parseDv(tableStr, p, r.getAs[String]("tDvJson"))
+            else None
+          val hDv =
+            if (hP) DeltaLog.parseDv(tableStr, p, r.getAs[String]("hDvJson"))
+            else None
           val changed = tP && hP && tDv != hDv
           val rem =
             if (hP && (!tP || changed))
@@ -1113,9 +1108,9 @@ object DeltaTable {
 
   /** The distributed overwrite's remove actions as PRE-RENDERED JSON
     * lines with bounded driver memory: live checkpoint-side paths come
-    * off [[DeltaLog.cpAddsNormalized]] anti-filtered by the JSON tail's
-    * superseded set, render EXECUTOR-side (same [[removeAction]] +
-    * json4s path the driver form uses — byte-identical lines), and
+    * off [[DeltaLog.liveCheckpoint]] and render EXECUTOR-side (same
+    * [[removeAction]] + json4s path the driver form uses — byte-identical
+    * lines), and
     * stream through `toLocalIterator` (one shuffle partition in driver
     * memory at a time); tail-live paths (O(commits since checkpoint))
     * append driver-side. Spec-pinned commit-identical to the driver
@@ -1134,7 +1129,7 @@ object DeltaTable {
         dv.flatMap(DeletionVectors.tombstonePath).filter(seenSidecars.add)
           .map(s => JsonMethods.compact(JsonMethods.render(
             DeltaLog.removeAction(s, now, dataChange = false))))
-    cpLiveState(spark, table, headV) match {
+    DeltaLog.liveCheckpointAt(spark, table, headV) match {
       case None =>
         // no covering checkpoint: the JSON log is driver-sized by
         // construction — replay it (routing normally guarantees a
@@ -1142,12 +1137,12 @@ object DeltaTable {
         val seen = scala.collection.mutable.Set.empty[String]
         snapshot(spark, table, Some(headV)).files.iterator
           .flatMap(f => lines(f.path, f.dv, seen))
-      case Some((live, tail)) =>
+      case Some(live) =>
         import scala.jdk.CollectionConverters._
         import spark.implicits._
         val nowC = now
         val tableStr = table
-        val rendered = live.select(col("path"), col("dvJson"))
+        val rendered = live.adds.select(col("path"), col("dvJson"))
           .as[(String, String)]
           .mapPartitions { it =>
             // per-partition sidecar-tombstone dedup (packed sidecars
@@ -1155,11 +1150,7 @@ object DeltaTable {
             // cross-partition duplicate tombstone is replay-idempotent)
             val seenSidecars = scala.collection.mutable.Set.empty[String]
             it.flatMap { case (p, dvJson) =>
-              val dv = Option(dvJson).filter(x => x.nonEmpty && x != "null")
-                .map(x => DeletionVectors.fromJsonString(x).getOrElse(
-                  throw new IllegalStateException(
-                    s"delta: unparseable deletionVector in $tableStr's log " +
-                      "during overwrite — refusing rather than dropping it")))
+              val dv = DeltaLog.parseDv(tableStr, p, dvJson)
               Seq(JsonMethods.compact(JsonMethods.render(
                 DeltaLog.removeAction(p, nowC, dv = dv)))) ++
                 dv.flatMap(DeletionVectors.tombstonePath).filter(seenSidecars.add)
@@ -1169,7 +1160,7 @@ object DeltaTable {
           }
         val seenTail = scala.collection.mutable.Set.empty[String]
         rendered.toLocalIterator.asScala ++
-          tail.tailLive.iterator.flatMap(f => lines(f.path, f.dv, seenTail))
+          live.tail.tailLive.iterator.flatMap(f => lines(f.path, f.dv, seenTail))
     }
   }
 
@@ -2097,7 +2088,7 @@ object DeltaTable {
       import spark.implicits._
       val srcMeta = DeltaLog.metaSnapshot(spark, source, versionAsOf)
       require(!srcMeta.isEmpty, s"delta: $source has no commits")
-      val toAdd = rowToAddFile(source) _
+      val toAdd = DeltaLog.cpAddFile(source) _
       val abs = absolutize _
       val tgtConfig = cloneConfig(srcMeta.configuration)
       val addLines = liveFrame(spark, source, srcMeta.version)
@@ -2440,63 +2431,14 @@ object DeltaTable {
     dml(spark, table, predicate, Some(set))
   }
 
-  /** One normalized checkpoint-add row ([[DeltaLog.cpAddsNormalized]]'s
-    * column order) as the [[AddFile]] the skipping predicates evaluate —
-    * runs EXECUTOR-side inside [[candidatesDistributed]]'s filter, so it
-    * must stay a pure function of the row. A present-but-unparseable DV
-    * descriptor REFUSES (same rule as the vacuum walks): a silently
-    * dropped vector on a file the DML then rewrites would resurrect its
-    * deleted rows. */
-  private def rowToAddFile(table: String)(r: org.apache.spark.sql.Row): AddFile = {
-    val dvJson = r.getAs[String]("dvJson")
-    val dv = Option(dvJson).filter(s => s.nonEmpty && s != "null").map(s =>
-      DeletionVectors.fromJsonString(s).getOrElse(throw new IllegalStateException(
-        s"delta: unparseable deletionVector in $table's checkpoint for " +
-          s"${r.getString(0)} — refusing candidate selection rather than " +
-          "resurrecting its deleted rows")))
-    AddFile(r.getString(0), r.getAs[Long]("size"),
-      Option(r.getAs[String]("stats")).flatMap(DeltaLog.parseStats),
-      Option(r.getAs[Map[String, String]]("partitionValues")).getOrElse(Map.empty),
-      dataChange = true,
-      modificationTime = r.getAs[Long]("modificationTime"),
-      dv = dv)
-  }
-
-  /** The live checkpoint-side state at `headV`, shared by every
-    * distributed write-path consumer ([[candidatesDistributed]],
-    * [[overwriteRemoveLines]]): the normalized add frame
-    * ([[DeltaLog.cpAddsNormalized]]) anti-filtered by the JSON tail's
-    * superseded paths (removed-or-re-added — re-adds come back in
-    * `tailLive` with CURRENT state), plus the driver-side tail replay.
-    * ONE definition of the supersede rule, so a future change cannot
-    * silently diverge the DML candidate set from the overwrite remove
-    * set. None when no checkpoint covers `headV` (callers fall back to
-    * the driver replay — the JSON log is driver-sized by construction,
-    * [[DeltaLog.checkpoint]] caps the tail). */
-  private def cpLiveState(spark: SparkSession, table: String, headV: Long)
-    : Option[(DataFrame, DeltaLog.TailReplay)] = {
-    import org.apache.spark.sql.functions.{col, not}
-    DeltaLog.lastCheckpoint(spark, table).filter(_.version <= headV).map { cp =>
-      val tbl = new Path(table)
-      val tail = DeltaLog.replayTail(spark, table, cp.version, headV)
-      val norm = DeltaLog.cpAddsNormalized(spark.read.parquet(
-        DeltaLog.checkpointPaths(tbl, cp.version, cp.parts)
-          .map(_.toString): _*))
-      val superseded = (tail.removedFromCp ++ tail.tailAddedEver).toSeq
-      val live =
-        if (superseded.isEmpty) norm
-        else norm.where(not(col("path").isin(superseded: _*)))
-      (live, tail)
-    }
-  }
-
   /** Candidate selection with BOUNDED driver memory — the distributed
     * form of `head.files.filter(keep)` for tables past the replay
     * threshold (round-13 verdict ask #3; until this round those tables
     * REFUSED DML outright). The checkpoint side stays a DataFrame
-    * ([[cpLiveState]]) and `keep` evaluates EXECUTOR-side; the driver
-    * collects ONLY the surviving candidates — O(files straddling the
-    * predicate), not O(#files). Tail-live adds replay driver-side
+    * ([[DeltaLog.liveCheckpoint]]) and `keep` evaluates EXECUTOR-side
+    * on [[DeltaLog.cpAddFile]]'s conversion; the driver collects ONLY
+    * the surviving candidates — O(files straddling the predicate), not
+    * O(#files). Tail-live adds replay driver-side
     * (O(commits since checkpoint)) through the same `keep`. Decisions
     * are spec-pinned identical to the driver path's
     * (`DistributedDmlSpec`).
@@ -2519,23 +2461,23 @@ object DeltaTable {
     import org.apache.spark.sql.functions.col
     val threshold = DeltaLog.replayThreshold(spark)
     val cap = math.min(threshold, Int.MaxValue.toLong - 2L).toInt
-    val out = cpLiveState(spark, table, headV) match {
+    val out = DeltaLog.liveCheckpointAt(spark, table, headV) match {
       case None =>
         snapshot(spark, table, Some(headV)).files.filter(keep)
-      case Some((live0, tail)) =>
+      case Some(cpLive) =>
         // path-set lookups (the DSv2 row-level commit's touched files)
         // pre-filter with a PUSHED isin: parquet reads only matching row
         // groups and nothing else deserializes its stats/DV strings —
         // without this a million-row checkpoint would be scanned whole
         // to look up a handful of marked files
-        val live = pathsOnly.fold(live0)(ps =>
-          live0.where(col("path").isin(ps.toSeq: _*)))
+        val live = pathsOnly.fold(cpLive.adds)(ps =>
+          cpLive.adds.where(col("path").isin(ps.toSeq: _*)))
         val keepF = keep
-        val toAdd = rowToAddFile(table) _
+        val toAdd = DeltaLog.cpAddFile(table) _
         val cpCand = live
           .filter((r: org.apache.spark.sql.Row) => keepF(toAdd(r)))
           .take(cap + 1).map(toAdd).toSeq
-        cpCand ++ tail.tailLive.filter(keep)
+        cpCand ++ cpLive.tail.tailLive.filter(keep)
     }
     if (out.size > cap && degradeOnOverflow)
       // READ paths degrade to the (correct, driver-heavy) full replay —
@@ -3414,9 +3356,8 @@ object DeltaTable {
   }
 
   /** [[vacuumRemoved]] for tables past the distributed-replay
-    * threshold: the head's live files (checkpoint adds anti-joined
-    * against the tail's removals, tail adds unioned in) and its
-    * tombstones (checkpoint removes anti-joined against tail re-adds,
+    * threshold: the head's live files ([[DeltaLog.liveCheckpoint]]'s
+    * adds, tail adds unioned in) and its tombstones (its tombstones,
     * tail tombstones unioned in) both stay DataFrames; the reclaim set
     * is `expired tombstones LEFT ANTI (live paths ∪ live DV sidecar
     * paths)`, deletes run executor-side, and absolute (cloned-in)
@@ -3427,50 +3368,34 @@ object DeltaTable {
     import org.apache.spark.sql.functions.{col, lit}
     import org.apache.spark.sql.graft.{ColumnBridge => CB}
     import spark.implicits._
-    val tbl = new Path(table)
     val tableStr = table
-    val cp = DeltaLog.lastCheckpoint(spark, table).getOrElse(
-      // routing requires a checkpoint; defensive fallback
-      return vacuumRemoved(spark, table, retainMs))
     // metadata-only head: carries the version AND applies the protocol
     // reader gate — an engine that cannot READ the table must not
     // vacuum it (it could misidentify a live reference), exactly like
     // the driver walk's snapshot() does
     val headV = DeltaLog.metaSnapshot(spark, table).version
-    val tail = DeltaLog.replayTail(spark, table, cp.version, headV)
-    val cpDf = spark.read.parquet(
-      DeltaLog.checkpointPaths(tbl, cp.version, cp.parts).map(_.toString): _*)
+    val cpLive = DeltaLog.liveCheckpointAt(spark, table, headV).getOrElse(
+      // routing requires a checkpoint; defensive fallback
+      return vacuumRemoved(spark, table, retainMs))
+    val tail = cpLive.tail
     val cutoff = System.currentTimeMillis() - retainMs
     // --- live paths + live DV sidecar paths (the shared-sidecar guard:
     // a retired descriptor's tombstone can name a file a LIVE vector
     // still reads at another offset)
-    def dvPathsOf(dvJson: String): Seq[String] =
-      Option(dvJson).toSeq
-        .flatMap(s => DeletionVectors.fromJsonString(s))
-        .flatMap(DeletionVectors.tombstonePath)
-    val cpAdds = DeltaLog.cpAddsNormalized(cpDf)
-      .select(col("path"), col("dvJson"))
-    val tailGone = (tail.removedFromCp ++ tail.tailLive.map(_.path)).toSeq
-    val cpLive =
-      (if (tailGone.isEmpty) cpAdds
-       else cpAdds.join(
-         org.apache.spark.sql.functions.broadcast(tailGone.toDF("path")),
-         Seq("path"), "left_anti")).as[(String, String)]
-        .flatMap { case (p, dvJson) => p +: dvPathsOf(dvJson) }
+    val cpLiveRefs = cpLive.adds.select(col("path"), col("dvJson"))
+      .as[(String, String)]
+      .flatMap { case (p, dvJson) =>
+        p +: DeltaLog.parseDv(tableStr, p, dvJson)
+          .flatMap(DeletionVectors.tombstonePath).toSeq
+      }
     val tailLiveRefs = tail.tailLive.flatMap(a =>
       a.path +: a.dv.flatMap(DeletionVectors.tombstonePath).toSeq)
-    val live = cpLive.toDF("ref")
+    val live = cpLiveRefs.toDF("ref")
       .unionByName(tailLiveRefs.toDF("ref")).distinct()
-    // --- tombstones: checkpoint removes minus tail re-adds, plus the
-    // tail's own (both under the same expiry + non-absolute rules)
-    val rmEx = (tail.tailAddedEver ++ tail.tailTombs.map(_._1)).toSeq
-    val cpRm = DeltaLog.cpRemovesNormalized(spark, cpDf)
-    val tombs =
-      (if (rmEx.isEmpty) cpRm
-       else cpRm.join(
-         org.apache.spark.sql.functions.broadcast(rmEx.toDF("path")),
-         Seq("path"), "left_anti"))
-        .unionByName(tail.tailTombs.toDF("path", "deletionTimestamp"))
+    // --- tombstones: live checkpoint tombstones plus the tail's own
+    // (both under the same expiry + non-absolute rules)
+    val tombs = cpLive.tombstones.select(col("path"), col("deletionTimestamp"))
+      .unionByName(tail.tailTombs.toDF("path", "deletionTimestamp"))
     val expired = tombs.where(col("deletionTimestamp") <= lit(cutoff))
       .select(col("path").as("ref"))
     val bconf = CB.broadcastHadoopConf(spark,
@@ -3528,37 +3453,17 @@ object DeltaTable {
         n.contains(".checkpoint.") && n.endsWith(".parquet")
       }
       .foreach { st =>
-        val cpDf = spark.read.parquet(st.getPath.toString)
-        import org.apache.spark.sql.functions.{col, to_json}
-        val pathCols = Seq(col("add.path")) ++
-          (if (cpDf.columns.contains("remove")) Seq(col("remove.path"))
-           else Seq.empty)
-        // the DV column is the protocol STRUCT in round-12+ checkpoints
-        // and a JSON string in older ones — to_json normalizes the
-        // struct so one string parse covers both. BOTH action kinds
-        // walk: graft removes don't carry DVs into checkpoints, but a
-        // foreign (delta-spark-style) checkpoint's remove.deletionVector
-        // is a live reference its sidecar must survive.
-        def dvColsOf(action: String): Seq[org.apache.spark.sql.Column] = {
-          if (!cpDf.columns.contains(action)) return Seq.empty
-          val s = cpDf.schema(action).dataType
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-          if (!s.fieldNames.contains("deletionVector")) Seq.empty
-          else s("deletionVector").dataType match {
-            case _: org.apache.spark.sql.types.StructType =>
-              Seq(to_json(col(s"$action.deletionVector")))
-            case _ => Seq(col(s"$action.deletionVector"))
+        // BOTH action kinds walk: graft removes don't carry DVs into
+        // checkpoints, but a foreign (delta-spark-style) checkpoint's
+        // remove.deletionVector is a live reference its sidecar must
+        // survive
+        val cp = DeltaLog.readCheckpoint(spark, Seq(st.getPath))
+        cp.adds.select("path", "dvJson")
+          .union(cp.removes.select("path", "dvJson")).collect().foreach { r =>
+            val p = r.getString(0)
+            referenced += p
+            refDv(DeltaLog.parseDv(table, p, r.getString(1)))
           }
-        }
-        val cols = pathCols ++ dvColsOf("add") ++ dvColsOf("remove")
-        cpDf.select(cols: _*).collect().foreach { r =>
-          (0 until r.length).foreach { i =>
-            if (!r.isNullAt(i)) {
-              if (i < pathCols.length) referenced += r.getString(i)
-              else refDv(DeletionVectors.fromJsonString(r.getString(i)))
-            }
-          }
-        }
       }
     val base = tbl.toUri.getPath
     val it = fs.listFiles(tbl, true) // recursive: partitioned layouts nest
@@ -3600,7 +3505,7 @@ object DeltaTable {
     * the driver walk's rule, via the same DV-path extraction). */
   private def vacuumOrphansDistributed(spark: SparkSession, table: String,
                                        olderThanMs: Long): Int = {
-    import org.apache.spark.sql.functions.{col, lit, to_json}
+    import org.apache.spark.sql.functions.{col, to_json}
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     import org.apache.spark.sql.graft.{ColumnBridge => CB}
     import spark.implicits._
@@ -3614,11 +3519,7 @@ object DeltaTable {
       // present-but-malformed descriptor REFUSES the vacuum (deleting a
       // possibly-live sidecar is data loss, strictly worse than failing)
       df.as[(String, String)].flatMap { case (p, dvJson) =>
-        Option(p).toSeq ++ Option(dvJson).toSeq
-          .map(s => DeletionVectors.fromJsonString(s).getOrElse(
-            throw new IllegalStateException(
-              s"delta: unparseable deletionVector in $tableStr's log " +
-                s"('$s') — refusing to vacuum")))
+        Option(p).toSeq ++ DeltaLog.parseDv(tableStr, p, dvJson)
           .filter(_.storageType == "u")
           .map(DeletionVectors.relativePath)
       }
@@ -3664,21 +3565,9 @@ object DeltaTable {
         n.contains(".checkpoint.") && n.endsWith(".parquet")
       }
       .foreach { st =>
-        val cpDf = spark.read.parquet(st.getPath.toString)
-        Seq("add", "remove").foreach { a =>
-          if (cpDf.columns.contains(a)) {
-            val s = cpDf.schema(a).dataType.asInstanceOf[StructType]
-            val dvCol =
-              if (!s.fieldNames.contains("deletionVector"))
-                lit(null).cast(StringType)
-              else s("deletionVector").dataType match {
-                case _: StructType => to_json(col(s"$a.deletionVector"))
-                case _ => col(s"$a.deletionVector")
-              }
-            frames += refsOfPathDv(cpDf.where(col(a).isNotNull)
-              .select(col(s"$a.path"), dvCol))
-          }
-        }
+        val cp = DeltaLog.readCheckpoint(spark, Seq(st.getPath))
+        frames += refsOfPathDv(cp.adds.select("path", "dvJson"))
+        frames += refsOfPathDv(cp.removes.select("path", "dvJson"))
       }
     require(frames.nonEmpty,
       s"delta: $table has no log artifacts — nothing to vacuum against")

@@ -543,16 +543,20 @@ class DeletionVectorSpec extends SparkSpec {
     assert(ids(t) === (3 to 6).toSet)
   }
 
-  test("pre-round-12 checkpoints (JSON-string deletionVector) still read") {
-    val t = tmp()
+  /** A DV table with rows 1..2 deleted by a vector, checkpointed, its
+    * checkpoint then rewritten into the LEGACY form: deletionVector as
+    * a string column (what graft wrote before round 12), the string
+    * given by `dvString` over the protocol struct. Returns the
+    * checkpoint's path. */
+  private def legacyCheckpoint(t: String,
+                               dvString: org.apache.spark.sql.Column =>
+                                 org.apache.spark.sql.Column): String = {
     dvTable(t, 1 to 6)
     DeltaTable.delete(spark, t, col("id") <= 2)
     val v = DeltaLog.checkpoint(spark, t)
     val cpPath = s"$t/_delta_log/" + f"$v%020d" + ".checkpoint.parquet"
-    // rewrite the checkpoint into the LEGACY form: deletionVector as a
-    // compact-JSON string column (what graft wrote before round 12)
     val cp = spark.read.parquet(cpPath)
-    import org.apache.spark.sql.functions.{struct, to_json, when}
+    import org.apache.spark.sql.functions.{struct, when}
     val legacyAdd = when(col("add").isNull, org.apache.spark.sql.functions
         .lit(null))
       .otherwise(struct(
@@ -561,7 +565,7 @@ class DeletionVectorSpec extends SparkSpec {
         col("add.stats"),
         when(col("add.deletionVector").isNull,
           org.apache.spark.sql.functions.lit(null).cast("string"))
-          .otherwise(to_json(col("add.deletionVector")))
+          .otherwise(dvString(col("add.deletionVector")))
           .as("deletionVector")))
     val legacy = cp.withColumn("add", legacyAdd).coalesce(1)
     val tmpDir = java.nio.file.Files.createTempDirectory("legacy_cp")
@@ -572,6 +576,13 @@ class DeletionVectorSpec extends SparkSpec {
       .map(_.getPath).find(_.getName.startsWith("part-")).get
     fs.delete(new org.apache.hadoop.fs.Path(cpPath), false)
     fs.rename(part, new org.apache.hadoop.fs.Path(cpPath))
+    cpPath
+  }
+
+  test("pre-round-12 checkpoints (JSON-string deletionVector) still read") {
+    val t = tmp()
+    // compact-JSON string, the legacy encoding
+    val cpPath = legacyCheckpoint(t, org.apache.spark.sql.functions.to_json(_))
     // sanity: the rewritten checkpoint's dv column IS a string now
     assert(spark.read.parquet(cpPath).schema("add").dataType
       .asInstanceOf[org.apache.spark.sql.types.StructType]("deletionVector")
@@ -582,6 +593,24 @@ class DeletionVectorSpec extends SparkSpec {
     assert(ids(t) === (3 to 6).toSet)
     assert(DeltaLog.prunedSnapshot(spark, t, Map.empty).files
       .exists(_.dv.exists(_.cardinality == 2L)))
+  }
+
+  test("a legacy string deletionVector that is not JSON refuses on every route") {
+    // reading it as "no vector" would bring the deleted rows back, and
+    // the orphan walk would stop counting the sidecar as referenced
+    val t = tmp()
+    legacyCheckpoint(t, _ => org.apache.spark.sql.functions.lit("not-json"))
+    Seq[(String, () => Any)](
+      "snapshot" -> (() => DeltaLog.snapshot(spark, t)),
+      // below the replay threshold metaSnapshot decodes the same rows
+      "metaSnapshot" -> (() => DeltaLog.metaSnapshot(spark, t)),
+      "prunedSnapshot" -> (() => DeltaLog.prunedSnapshot(spark, t, Map.empty)),
+      "vacuumOrphans" -> (() => DeltaTable.vacuumOrphans(spark, t, 0L))
+    ).foreach { case (route, read) =>
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.contains("unparseable deletionVector"),
+        s"$route: ${e.getMessage}")
+    }
   }
 
   // -------------------------------------------------------- clone & SQL

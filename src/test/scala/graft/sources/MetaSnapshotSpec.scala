@@ -303,6 +303,27 @@ class MetaSnapshotSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.delta.distributedReplayThreshold")
   }
 
+  test("past the replay threshold, a warm prunedSnapshot starts only its checkpoint read and add collect") {
+    val t = tmpTable("graft_ms_pruned")
+    (0 until 3).foreach(i =>
+      DeltaTable.write(Seq(i.toLong).toDF("id"), t, SaveMode.Append))
+    DeltaLog.checkpoint(spark, t) // 3 add rows
+    // a JSON tail that removes a checkpointed file and adds one
+    DeltaTable.delete(spark, t, col("id") === 0L)
+    DeltaTable.write(Seq(3L).toDF("id"), t, SaveMode.Append)
+    spark.conf.set("spark.graft.delta.distributedReplayThreshold", "2")
+    try {
+      DeltaLog.CheckpointCache.clear()
+      val first = DeltaLog.prunedSnapshot(spark, t, Map.empty)
+      assert(first.files.size === 3)
+      // the protocol and metaData rows come from the cached checkpoint
+      // state: what is left is the parquet schema read and the pruned
+      // add collect
+      assert(jobsStarted(assert(
+        DeltaLog.prunedSnapshot(spark, t, Map.empty) === first)) === 2)
+    } finally spark.conf.unset("spark.graft.delta.distributedReplayThreshold")
+  }
+
   test("re-checkpointing after a lost _last_checkpoint restores its row count from the footer") {
     val t = tmpTable("graft_ms_pointer")
     DeltaTable.write(Seq(1L, 2L).toDF("id"), t, SaveMode.Append) // v0

@@ -164,6 +164,20 @@ class XlsxSourceSpec extends SparkSpec {
     intercept[Exception] { df.collect() }
   }
 
+  test("IO.readExcel: a shared-strings header keeps its non-ASCII names") {
+    // the reference workbook's header shape: shared-string cells with
+    // accented French names
+    val p = writeWorkbook("shared.xlsx", Map("sheet1" ->
+      ("""<row><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c></row>""" +
+        """<row><c r="A2"><v>7</v></c><c r="B2" t="s"><v>2</v></c></row>""")),
+      shared = Seq("ID salarié", "Moyen de déplacement", "Vélo/Trottinette"))
+    val df = IO.readExcel(spark, p)
+    assert(df.schema.fieldNames.toSeq === Seq("ID salarié", "Moyen de déplacement"))
+    val r = df.collect()
+    assert(r.length === 1)
+    assert(r(0).getString(0) === "7" && r(0).getString(1) === "Vélo/Trottinette")
+  }
+
   test("cell-reference decoding handles multi-letter columns") {
     assert(XlsxParse.colIndex("A1") === 0)
     assert(XlsxParse.colIndex("B3") === 1)
