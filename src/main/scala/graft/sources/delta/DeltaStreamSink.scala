@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 import DeltaLog._
 
@@ -99,7 +100,7 @@ private[delta] class DeltaStreamingWrite(
     DeltaSinkWriterFactory(table,
       ColumnMapping.physicalWriteSchema(writeSchema, tableSchema),
       ColumnMapping.physicalCols(partCols, tableSchema).toArray,
-      new SerializableHadoopConf(spark.sessionState.newHadoopConf()),
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()),
       spark.sessionState.conf.sessionLocalTimeZone,
       SinkConstraints.bind(spark, writeSchema, initHead),
       insertExprs = streamGenTransforms.map(_.insert))
@@ -292,7 +293,7 @@ private[delta] class DeltaBatchWrite(
     DeltaSinkWriterFactory(table,
       ColumnMapping.physicalWriteSchema(writeSchema, Some(effSchema)),
       ColumnMapping.physicalCols(partCols, Some(effSchema)).toArray,
-      new SerializableHadoopConf(spark.sessionState.newHadoopConf()),
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()),
       spark.sessionState.conf.sessionLocalTimeZone,
       // overwrite replaces content wholesale, but the constraint set
       // rides the metaData that carries FORWARD — new rows still honor it
@@ -441,7 +442,7 @@ private[delta] object SinkConstraints {
 
 private[delta] case class DeltaSinkWriterFactory(
     table: String, schema: StructType, partCols: Array[String],
-    conf: SerializableHadoopConf, sessionTimeZone: String,
+    conf: SerializableConfiguration, sessionTimeZone: String,
     constraints: Seq[(String, String,
       org.apache.spark.sql.catalyst.expressions.Expression)] = Seq.empty,
     insertExprs: Option[Seq[
@@ -501,8 +502,8 @@ private[delta] class DeltaSinkDataWriter(
     partFields.map { case (f, i) =>
       val rendered =
         if (row.isNullAt(i)) "__HIVE_DEFAULT_PARTITION__"
-        else DeltaGroupWriter.escapePathName(
-          DeltaGroupWriter.renderPartitionValue(row.get(i, f.dataType), f.dataType, zone))
+        else PartitionPath.escapePathName(
+          PartitionPath.renderPartitionValue(row.get(i, f.dataType), f.dataType, zone))
       s"${f.name}=$rendered"
     }.mkString("/")
 
@@ -526,7 +527,7 @@ private[delta] class DeltaSinkDataWriter(
       of.writer.close()
       val st = of.path.getFileSystem(hadoopConf).getFileStatus(of.path)
       StagedSinkFile(of.relPath, st.getLen,
-        DeltaMicroBatchStream.partValuesFromPath(of.relPath))
+        PartitionPath.partValuesFromPath(of.relPath))
     }.toSeq
     open.clear()
     DeltaSinkCommitMessage(files)
@@ -644,47 +645,5 @@ private[delta] object DeltaGroupWriter {
         throw new IllegalArgumentException(s"graft-delta sink: $other")
     }
     t.named(f.name)
-  }
-
-  /** Internal value → Hive partition-dir string, the inverse of
-    * [[DeltaRowReader.parsePartition]]. */
-  def renderPartitionValue(v: Any, t: DataType, zone: java.time.ZoneId): String =
-    t match {
-      case StringType => v.toString
-      case ByteType | ShortType | IntegerType | LongType | BooleanType |
-           FloatType | DoubleType => v.toString
-      case DateType => java.time.LocalDate.ofEpochDay(
-        v.asInstanceOf[Int].toLong).toString
-      case TimestampType =>
-        val micros = v.asInstanceOf[Long]
-        val inst = java.time.Instant.ofEpochSecond(
-          Math.floorDiv(micros, 1000000L), Math.floorMod(micros, 1000000L) * 1000L)
-        java.time.LocalDateTime.ofInstant(inst, zone).toString.replace('T', ' ')
-      case TimestampNTZType =>
-        // zoneless wall-clock: render the stored micros as-is (UTC
-        // frame), NOT through the session zone — NTZ has no zone
-        val micros = v.asInstanceOf[Long]
-        java.time.LocalDateTime.ofEpochSecond(
-          Math.floorDiv(micros, 1000000L),
-          (Math.floorMod(micros, 1000000L) * 1000L).toInt,
-          java.time.ZoneOffset.UTC).toString.replace('T', ' ')
-      case d: DecimalType =>
-        v.asInstanceOf[org.apache.spark.sql.types.Decimal].toJavaBigDecimal.toPlainString
-      case other =>
-        throw new IllegalArgumentException(
-          s"graft-delta sink: partition column type $other")
-    }
-
-  /** Hive path escaping (the char set Spark/Hive escape), inverse of
-    * [[DeltaRowReader.unescapePathName]]. */
-  def escapePathName(s: String): String = {
-    def unsafe(c: Char): Boolean =
-      c < ' ' || c == '\u007F' || "\"#%'*/:=?\\{[]^".indexOf(c.toInt) >= 0
-    val sb = new java.lang.StringBuilder(s.length)
-    s.foreach { c =>
-      if (unsafe(c)) sb.append(f"%%${c.toInt}%02X")
-      else sb.append(c)
-    }
-    sb.toString
   }
 }

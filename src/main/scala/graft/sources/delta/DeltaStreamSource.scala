@@ -1,10 +1,8 @@
 package graft.sources.delta
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
@@ -23,32 +21,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * (`spark/SaveDelta.scala:157-163` writes the table this would tail).
   *
   * Offsets ARE log versions: `latestOffset` lists the log (a few KB of
-  * metadata — no data IO), and a micro-batch (start, end] plans one
-  * input partition per file ADDED in those commits with
-  * `dataChange=true`. Maintenance commits (OPTIMIZE/compaction) are
-  * skipped exactly like `changesSince`; a data-changing REMOVE
+  * metadata — no data IO), and a micro-batch (start, end] reads the
+  * files ADDED in those commits with `dataChange=true`. Maintenance
+  * commits (OPTIMIZE/compaction) are skipped exactly like
+  * `changesSince`; a data-changing REMOVE
   * (overwrite/merge) fails the batch loudly — an append-only tailer
   * cannot represent it (upstream's ignoreChanges contract). Offsets
   * live in the query's checkpoint, so restarts resume exactly-once:
   * the log is immutable per version, which makes every replanned batch
   * bit-identical.
   *
-  * The streaming reader is row-based (parquet-hadoop's Group API — the
-  * per-batch file sets are micro-batch-sized); the BATCH read path
-  * stays [[DeltaTable.read]], which drives Spark's vectorized parquet
-  * scan. Supported column types: the scalar lattice (boolean, byte,
-  * short, int, long, float, double, string), BINARY (opaque media
-  * columns — the multimodal pipeline's payload type), TIMESTAMP /
-  * TIMESTAMP_NTZ (INT96 or INT64 millis/micros/nanos), DATE, DECIMAL
-  * (int32/int64/binary physical) — the types the engine's own CDC
-  * decode produces (`Ops.decodeEnvelope`'s TimestampType,
-  * `commuteValid`'s DecimalType(10,2)), so `graft-delta` can tail its
-  * own CDC sink tables — plus NESTED array/map/struct over the lattice
-  * (both parquet list encodings), so `embeddings`-shaped tables
-  * (`array<float>` vectors) stream too. Hive-partition columns restore
-  * from the add-action's `partitionValues` (logical values per the
-  * protocol, session-timezone timestamps); a genuinely unreadable type raises at
-  * plan time rather than corrupting silently.
+  * A stream differs from a batch scan only in WHICH files it plans: a
+  * micro-batch's files bin-pack and read through the same Spark
+  * vectorized parquet reader [[DeltaBatchScan]] builds, so every column
+  * type Spark's parquet source reads streams too. Hive-partition
+  * columns restore from the add-action's `partitionValues` (logical
+  * values per the protocol, session-timezone timestamps); a column type
+  * that reader cannot read refuses at schema resolution rather than
+  * corrupting silently.
   *
   * Backlog admission: `maxFilesPerTrigger` bounds each batch's planned
   * files, and Trigger.AvailableNow is first-class (end offset pinned at
@@ -127,13 +117,12 @@ private[delta] object DeltaStreamDataSource {
     val schema = snap.schemaJson
       .map(j => DataType.fromJson(j).asInstanceOf[StructType])
       .getOrElse(throw new IllegalStateException(s"graft-delta: $table missing metaData"))
+    val parquet =
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     schema.fields.foreach { f =>
-      require(DeltaRowReader.supported(f.dataType),
+      require(parquet.supportDataType(f.dataType),
         s"graft-delta: unsupported column type ${f.dataType.catalogString} " +
-          s"for ${f.name} — the streaming reader handles the scalar " +
-          "lattice (boolean/byte/short/int/long/float/double/string/" +
-          "binary/timestamp/timestamp_ntz/date/decimal) and " +
-          "array/map/struct over it")
+          s"for ${f.name} — Spark's parquet reader cannot read it")
     }
     // user-facing: logical names without the column-mapping bookkeeping
     // metadata (the scan re-reads the stamped schema from its own
@@ -509,8 +498,39 @@ private[delta] class DeltaMicroBatchStream(table: String, schema: StructType,
 
   // fixed for the stream's lifetime (writeInternal refuses a partitioning
   // change), so one metadata read instead of a snapshot replay per batch
-  private lazy val partCols: Array[String] =
-    DeltaLog.snapshot(spark, table).partitionColumns.toArray
+  private lazy val partCols: Set[String] =
+    DeltaLog.snapshot(spark, table).partitionColumns.toSet
+
+  private def isCdfMeta(name: String): Boolean =
+    cdf && DeltaStreamDataSource.CdfMetaColumns.contains(name)
+
+  /** The read layout planning and the reader factory share. Requested
+    * data columns come from the files; partition columns and, in CDF
+    * mode, `_commit_version`/`_commit_timestamp` are per-file constants
+    * in each `PartitionedFile`'s partition-values row. `_change_type`
+    * is data in a cdc file but a constant LEADING that row in a derived
+    * insert/delete file, so both emit `data ++ _change_type ++ consts`. */
+  private lazy val dataRequested: StructType =
+    StructType(schema.fields.filterNot(f => partCols(f.name) || isCdfMeta(f.name)))
+  private lazy val constFields: Array[StructField] = schema.fields.filter(f =>
+    partCols(f.name) || (isCdfMeta(f.name) && f.name != "_change_type"))
+  private lazy val changeType: Option[StructField] =
+    schema.fields.find(f => cdf && f.name == "_change_type")
+
+  /** One file's constant row: `ct` first when the file supplies its
+    * change type as a constant (null: a cdc file reads it from its
+    * data), then partition values and the commit's version/timestamp. */
+  private def constRow(pv: Map[String, String], ct: String, v: Long,
+                       tsMs: Long, zone: java.time.ZoneId): InternalRow =
+    InternalRow.fromSeq(
+      (if (ct != null && changeType.isDefined) Seq(UTF8String.fromString(ct))
+       else Nil) ++
+        constFields.toSeq.map { f =>
+          if (partCols(f.name))
+            PartitionPath.parsePartition(pv.get(f.name).orNull, f.dataType, zone)
+          else if (f.name == "_commit_version") v
+          else Math.multiplyExact(tsMs, 1000L) // _commit_timestamp
+        })
 
   /** `earliest` (default) delivers the whole table as the first batch
     * (requires an append-only history); `latest` tails only commits after
@@ -546,7 +566,8 @@ private[delta] class DeltaMicroBatchStream(table: String, schema: StructType,
       s"graft-delta: $table's log is missing commits in ($sv, $ev] " +
         s"(retained: $vs) — this cursor's unread commits are gone")
     val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    vs.flatMap { v =>
+    val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
+    DeltaBatchScan.filePartitions(spark, vs.flatMap { v =>
       val c = DeltaLog.readCommit(spark, table, v)
       require(cdf || c.dataChangingRemoves == 0,
         s"graft-delta: $table was overwritten/merged at version $v — " +
@@ -558,7 +579,7 @@ private[delta] class DeltaMicroBatchStream(table: String, schema: StructType,
       // mid-stream) would have that column silently DROPPED from every
       // row we deliver — refuse loudly instead. Historic schemas that
       // are subsets of the pinned one (evolution before stream start)
-      // read fine: the row reader NULL-fills missing fields.
+      // read fine: the parquet reader NULL-fills missing columns.
       c.schemaJson.foreach { sj =>
         val cs = DataType.fromJson(sj).asInstanceOf[StructType]
         cs.fields.foreach { f =>
@@ -581,7 +602,8 @@ private[delta] class DeltaMicroBatchStream(table: String, schema: StructType,
               s"version $v — appends-only tailing would deliver deleted " +
               "rows; tail the change feed (readChangeFeed=true) or " +
               "re-read the snapshot")
-          DeltaFilePartition(new Path(table, a.path).toString, a.partitionValues)
+          (new Path(table, a.path), a.size,
+            constRow(a.partitionValues, null, v, 0L, zone))
         }
       else {
         val ts = DeltaLog.commitTimestamp(spark, table, v, c)
@@ -593,8 +615,7 @@ private[delta] class DeltaMicroBatchStream(table: String, schema: StructType,
             require(fs.exists(p),
               s"graft-delta: change file $p vacuumed — feed no longer " +
                 s"readable at v$v")
-            DeltaFilePartition(p.toString, f.partitionValues,
-              changeType = null, commitVersion = v, commitTsMs = ts)
+            (p, f.size, constRow(f.partitionValues, null, v, ts, zone))
           }
         else {
           // derived file-level changes, exactly readChangeFeed's fallback:
@@ -605,9 +626,9 @@ private[delta] class DeltaMicroBatchStream(table: String, schema: StructType,
           dRems.foreach(r => require(fs.exists(new Path(table, r.path)),
             s"graft-delta: file ${r.path} vacuumed — derived change feed " +
               s"no longer readable at v$v"))
-          // the per-file row readers here have no DV filter: a derived
-          // feed over DV'd files would replay deleted rows. Enable CDF
-          // on the table (precise cdc files) before DV DELETEs land.
+          // derived files read without a DV filter: a derived feed over
+          // DV'd files would replay deleted rows. Enable CDF on the
+          // table (precise cdc files) before DV DELETEs land.
           (c.adds ++ dRems.map(r => DeltaLog.AddFile(r.path, 0L, dv = r.dv)))
             .foreach(a => require(a.dv.forall(_.cardinality == 0L),
               s"graft-delta: ${a.path} carries a deletion vector at " +
@@ -615,42 +636,40 @@ private[delta] class DeltaMicroBatchStream(table: String, schema: StructType,
                 "delta.enableChangeDataFeed for precise feeds over " +
                 "DV-deleted tables"))
           c.adds.filter(_.dataChange).map(a =>
-            DeltaFilePartition(new Path(table, a.path).toString,
-              a.partitionValues,
-              changeType = "insert", commitVersion = v, commitTsMs = ts)) ++
-            dRems.map(r =>
-              DeltaFilePartition(new Path(table, r.path).toString,
-                DeltaMicroBatchStream.partValuesFromPath(r.path),
-                changeType = "delete", commitVersion = v, commitTsMs = ts))
+            (new Path(table, a.path), a.size,
+              constRow(a.partitionValues, "insert", v, ts, zone))) ++
+            dRems.map { r =>
+              // removes carry no size: the file's own length
+              val p = new Path(table, r.path)
+              (p, fs.getFileStatus(p).getLen,
+                constRow(PartitionPath.partValuesFromPath(r.path), "delete",
+                  v, ts, zone))
+            }
         }
       }
-    }.toArray
+    })
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    // capture the SESSION Hadoop conf + timezone at planning time: the
-    // executor-side reader must see the same fs settings/credentials the
-    // batch path (DeltaTable.read) gets from Spark's parquet source, and
-    // partition-path timestamps round-trip in the session zone
-    DeltaReaderFactory(schema, partCols,
-      new SerializableHadoopConf(spark.sessionState.newHadoopConf()),
-      spark.sessionState.conf.sessionLocalTimeZone, cdf)
+  /** The batch scan's reader over this stream's layout: one parquet
+    * delegate, plus — when `_change_type` is requested — a second one
+    * that reads it from cdc files' data, chosen per file
+    * ([[CdcRoutingReaderFactory]]). */
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val fileSchema = StructType(
+      tableSchema.fields.filterNot(f => partCols(f.name) || isCdfMeta(f.name)))
+    val (plain, _) = DeltaBatchScan.parquetReader(spark, fileSchema,
+      dataRequested, StructType(changeType.toSeq ++ constFields), Array.empty)
+    val base = changeType.fold(plain) { ct =>
+      val (cdc, _) = DeltaBatchScan.parquetReader(spark, fileSchema.add(ct),
+        dataRequested.add(ct), StructType(constFields), Array.empty)
+      CdcRoutingReaderFactory(plain, cdc, derivedArity = constFields.length + 1)
+    }
+    DeltaBatchScan.inRequestedOrder(base,
+      (dataRequested.fields ++ changeType ++ constFields).map(_.name), schema)
+  }
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
-}
-
-private[sources] object DeltaMicroBatchStream {
-  /** Hive partition values parsed off a file's RELATIVE path — remove
-    * actions don't carry partitionValues, their path does. Path segments
-    * are percent-ESCAPED; the returned map holds the LOGICAL (unescaped)
-    * values, matching what add/cdc actions store per the Delta protocol. */
-  def partValuesFromPath(path: String): Map[String, String] =
-    path.split("/").dropRight(1).filter(_.contains("=")).map { seg =>
-      val i = seg.indexOf('=')
-      seg.substring(0, i) ->
-        DeltaRowReader.unescapePathName(seg.substring(i + 1))
-    }.toMap
 }
 
 /** BATCH side of the DSv2 connector: one planning pass over the
@@ -674,7 +693,6 @@ private[delta] class DeltaBatchScan(table: String, tableSchema: StructType,
                                     schema: StructType,
                                     filters: Array[sources.Filter],
                                     versionAsOf: Option[Long] = None) extends Batch {
-  import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 
   private def spark = SparkSession.active
 
@@ -806,36 +824,20 @@ private[delta] class DeltaBatchScan(table: String, tableSchema: StructType,
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val head = snap
-    val live = livePruned
-    val pf = partFields(head)
+    val pf = partFields(snap)
     val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
-    val openCost = spark.sessionState.conf.filesOpenCostInBytes
-    // the engine's own split-size formula: min(maxPartitionBytes,
-    // max(openCost, totalBytes / defaultParallelism))
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val maxSplit = FilePartition.maxSplitBytes(classic,
-      live.map(_.size + openCost).sum)
-    def splitsOf(a: DeltaLog.AddFile): Seq[PartitionedFile] = {
-      val row = InternalRow.fromSeq(pf.toSeq.map(f =>
-        DeltaRowReader.parsePartition(
-          a.partitionValues.get(physOf.getOrElse(f.name, f.name)).orNull,
-          f.dataType, zone)))
-      val abs = org.apache.spark.paths.SparkPath.fromPath(new Path(table, a.path))
-      (0L until math.max(a.size, 1L) by maxSplit).map { off =>
-        PartitionedFile(row, abs, off, math.min(maxSplit, a.size - off),
-          Array.empty, 0L, a.size)
-      }
-    }
-    // EVERY file bin-packs (largest-first, as FileSourceScanExec orders
-    // splits) — DV-bearing files and metadata-column scans included:
-    // the routing factories build PER-FILE readers
+    // EVERY file bin-packs — DV-bearing files and metadata-column scans
+    // included: the routing factories build PER-FILE readers
     // ([[FilePartitionReaderFactory.buildReader]]), so each
     // PartitionedFile resolves its own vector and relative path and a
     // DML whose predicate doesn't prune on a many-small-files table
     // plans O(bytes/maxSplit) partitions, not O(#files).
-    FilePartition.getFilePartitions(classic,
-      live.flatMap(splitsOf).sortBy(-_.length), maxSplit).toArray
+    DeltaBatchScan.filePartitions(spark, livePruned.map { a =>
+      (new Path(table, a.path), a.size, InternalRow.fromSeq(pf.toSeq.map(f =>
+        PartitionPath.parsePartition(
+          a.partitionValues.get(physOf.getOrElse(f.name, f.name)).orNull,
+          f.dataType, zone))))
+    })
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -854,59 +856,16 @@ private[delta] class DeltaBatchScan(table: String, tableSchema: StructType,
       dataRequested.fields.filterNot(f => partCols.contains(f.name)).map(phys))
     val partSchema = StructType(partFields(head).map(phys))
     val physFilters = DeltaBatchScan.filtersToPhysical(filters, physOf)
-    val conf = spark.sessionState.newHadoopConf()
-    // the conf contract ParquetScan.createReaderFactory sets for
-    // ParquetReadSupport (string keys — the support objects are
-    // package-private; the keys are the stable wire contract)
-    conf.set("parquet.read.support.class",
-      "org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport")
-    conf.set("org.apache.spark.sql.parquet.row.requested_schema", readDataSchema.json)
-    conf.set("org.apache.spark.sql.parquet.row.attributes", readDataSchema.json)
-    val sqlConf = spark.sessionState.conf
-    conf.set(org.apache.spark.sql.internal.SQLConf.SESSION_LOCAL_TIMEZONE.key,
-      sqlConf.sessionLocalTimeZone)
-    conf.setBoolean(org.apache.spark.sql.internal.SQLConf.CASE_SENSITIVE.key,
-      sqlConf.caseSensitiveAnalysis)
-    conf.setBoolean(org.apache.spark.sql.internal.SQLConf.PARQUET_BINARY_AS_STRING.key,
-      sqlConf.isParquetBinaryAsString)
-    conf.setBoolean(org.apache.spark.sql.internal.SQLConf.PARQUET_INT96_AS_TIMESTAMP.key,
-      sqlConf.isParquetINT96AsTimestamp)
-    conf.setBoolean(
-      org.apache.spark.sql.internal.SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
-      sqlConf.parquetInferTimestampNTZEnabled)
-    conf.setBoolean(
-      org.apache.spark.sql.internal.SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
-      sqlConf.legacyParquetNanosAsLong)
-    conf.setBoolean(
-      org.apache.spark.sql.internal.SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key,
-      sqlConf.nestedSchemaPruningEnabled)
-    // shared builder for the ROW-INDEX-augmented delegate (the DV
-    // routing and metadata-column paths both read through one): the
-    // TEMPORARY name is what ParquetRowIndexUtil matches; it must be
-    // nullable or the reader refuses it as a required-but-missing file
-    // column instead of generating it
-    def rowIdxFactory(): (PartitionReaderFactory, StructType,
-        org.apache.spark.broadcast.Broadcast[
-          org.apache.spark.util.SerializableConfiguration]) = {
-      val rowIdxField = org.apache.spark.sql.types.StructField(
-        org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-          .ROW_INDEX_TEMPORARY_COLUMN_NAME,
-        org.apache.spark.sql.types.LongType, nullable = true)
-      val readDataSchemaIdx = StructType(readDataSchema.fields :+ rowIdxField)
-      val confIdx = new org.apache.hadoop.conf.Configuration(conf)
-      confIdx.set("org.apache.spark.sql.parquet.row.requested_schema",
-        readDataSchemaIdx.json)
-      confIdx.set("org.apache.spark.sql.parquet.row.attributes",
-        readDataSchemaIdx.json)
-      val bcIdx = org.apache.spark.sql.graft.ColumnBridge
-        .broadcastHadoopConf(spark, confIdx)
-      (org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory(
-        sqlConf, bcIdx, dataSchema, readDataSchemaIdx, partSchema,
-        physFilters, None,
-        new org.apache.spark.sql.execution.datasources.parquet.ParquetOptions(
-          Map.empty[String, String], sqlConf)),
-        readDataSchemaIdx, bcIdx)
-    }
+    def reader(readData: StructType) = DeltaBatchScan.parquetReader(
+      spark, dataSchema, readData, partSchema, physFilters)
+    // the ROW-INDEX-augmented read (the DV routing and metadata-column
+    // paths both read through one): the TEMPORARY name is what
+    // ParquetRowIndexUtil matches; it must be nullable or the reader
+    // refuses it as a required-but-missing file column instead of
+    // generating it
+    val readDataSchemaIdx = readDataSchema.add(StructField(
+      org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+        .ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType, nullable = true))
     val dvs = dvByPath // one pruning pass — dvByPath is a def
     // metadata-column scans: every partition is one file; the reader
     // appends `_file` (the add-action relative path, a per-partition
@@ -915,23 +874,17 @@ private[delta] class DeltaBatchScan(table: String, tableSchema: StructType,
     // the REQUESTED order directly (no permuting wrapper, and no plain
     // delegate built — this branch never uses one).
     if (metaFieldNames.nonEmpty) {
-      val (metaInner, readDataSchemaMeta, bcMeta) = rowIdxFactory()
+      val (metaInner, bcMeta) = reader(readDataSchemaIdx)
       val relByPath = livePruned.map { f =>
         org.apache.spark.paths.SparkPath.fromPath(new Path(table, f.path))
           .urlEncoded -> f.path
       }.toMap
       return MetaColReaderFactory(metaInner, dvs, relByPath, table, bcMeta,
         rowIdxPos = readDataSchema.fields.length,
-        innerFields = readDataSchemaMeta.fields ++ partSchema.fields,
+        innerFields = readDataSchemaIdx.fields ++ partSchema.fields,
         outSchema = schema, metaNames = metaFieldNames, physOf = physOf)
     }
-    val bc = org.apache.spark.sql.graft.ColumnBridge.broadcastHadoopConf(spark, conf)
-    val inner =
-      org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory(
-        sqlConf, bc, dataSchema, readDataSchema, partSchema, physFilters,
-        None,
-        new org.apache.spark.sql.execution.datasources.parquet.ParquetOptions(
-          Map.empty[String, String], sqlConf))
+    val (inner, _) = reader(readDataSchema)
     // deletion vectors: DV partitions read through a second delegate
     // whose readDataSchema appends the row-index column; the routing
     // factory drops recorded rows and the extra column. The scan stays
@@ -943,18 +896,13 @@ private[delta] class DeltaBatchScan(table: String, tableSchema: StructType,
     val base =
       if (dvs.isEmpty) inner
       else {
-        val (dvInner, readDataSchemaDv, bcDv) = rowIdxFactory()
+        val (dvInner, bcDv) = reader(readDataSchemaIdx)
         DvRoutingReaderFactory(inner, dvInner, dvs, table, bcDv,
           rowIdxPos = readDataSchema.fields.length,
-          innerFields = readDataSchemaDv.fields ++ partSchema.fields)
+          innerFields = readDataSchemaIdx.fields ++ partSchema.fields)
       }
-    // the delegate emits readDataSchema ++ partSchema (physical names);
-    // permute back to the REQUESTED order, matching by physical name
-    val innerOrder = readDataSchema.fields ++ partSchema.fields
-    val perm = schema.fields.map(f =>
-      innerOrder.indexWhere(_.name == physOf.getOrElse(f.name, f.name)))
-    if (perm.zipWithIndex.forall { case (p, i) => p == i }) base
-    else DeltaPermutingReaderFactory(base, perm, schema)
+    DeltaBatchScan.inRequestedOrder(base,
+      (readDataSchema.fields ++ partSchema.fields).map(_.name), schema, physOf)
   }
 }
 
@@ -1001,6 +949,47 @@ private[delta] case class DeltaPermutingReaderFactory(
   }
 }
 
+/** A per-`PartitionedFile` factory over parquet delegates (Spark's
+  * `FilePartitionReaderFactory` iterates a bin-packed partition's files
+  * and asks for one reader each). */
+private[delta] abstract class DeltaFileReaderFactory
+    extends org.apache.spark.sql.execution.datasources.v2.FilePartitionReaderFactory {
+  // built at DRIVER construction (SQLConf.get = the planning session, the
+  // same fallback the parquet delegate's own options use); the delegate's
+  // options field is Scala-protected, so it cannot be forwarded
+  private val fileOptions = new org.apache.spark.sql.catalyst.FileSourceOptions(
+    org.apache.spark.sql.catalyst.util.CaseInsensitiveMap(Map.empty[String, String]))
+  override protected def options: org.apache.spark.sql.catalyst.FileSourceOptions =
+    fileOptions
+}
+
+/** Routes each change-feed file of a stream to the delegate that reads
+  * its `_change_type`: a cdc file carries the column in its data; a
+  * derived insert/delete file carries it as the leading constant of its
+  * partition-values row, which is therefore `derivedArity` wide. Both
+  * delegates emit the same column layout ([[DeltaMicroBatchStream]]). */
+private[delta] case class CdcRoutingReaderFactory(
+    derived: PartitionReaderFactory, cdc: PartitionReaderFactory,
+    derivedArity: Int) extends DeltaFileReaderFactory {
+  import org.apache.spark.sql.execution.datasources.PartitionedFile
+  import org.apache.spark.sql.execution.datasources.v2.{FilePartitionReaderFactory => FPRF}
+
+  private def route(file: PartitionedFile): FPRF =
+    (if (file.partitionValues.numFields == derivedArity) derived else cdc)
+      .asInstanceOf[FPRF]
+
+  // uniform for every partition (Spark refuses mixed scans)
+  override def supportColumnarReads(partition: InputPartition): Boolean =
+    derived.supportColumnarReads(partition) && cdc.supportColumnarReads(partition)
+
+  override def buildReader(file: PartitionedFile): PartitionReader[InternalRow] =
+    route(file).buildReader(file)
+
+  override def buildColumnarReader(file: PartitionedFile)
+    : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    route(file).buildColumnarReader(file)
+}
+
 /** Routes each deletion-vector FILE through a filtered reader: the
   * file's vector loads in the task that reads it (from the
   * descriptor — bitmap bytes never visit the driver), each row
@@ -1031,21 +1020,13 @@ private[delta] case class DvRoutingReaderFactory(
     conf: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration],
     rowIdxPos: Int,
     innerFields: Array[StructField])
-    extends org.apache.spark.sql.execution.datasources.v2.FilePartitionReaderFactory {
+    extends DeltaFileReaderFactory {
   import org.apache.spark.sql.execution.datasources.PartitionedFile
   import org.apache.spark.sql.execution.datasources.v2.{FilePartitionReaderFactory => FPRF}
   import org.apache.spark.sql.vectorized.ColumnarBatch
 
   private def cleanF = clean.asInstanceOf[FPRF]
   private def dvF = dvInner.asInstanceOf[FPRF]
-
-  // built at DRIVER construction (SQLConf.get = the planning session, the
-  // same fallback the parquet delegate's own options use); the delegate's
-  // options field is Scala-protected, so it cannot be forwarded
-  private val fileOptions = new org.apache.spark.sql.catalyst.FileSourceOptions(
-    org.apache.spark.sql.catalyst.util.CaseInsensitiveMap(Map.empty[String, String]))
-  override protected def options: org.apache.spark.sql.catalyst.FileSourceOptions =
-    fileOptions
 
   /** Uniform answer for EVERY partition (Spark refuses mixed scans):
     * columnar only when both delegates are — the dv delegate differs
@@ -1143,18 +1124,12 @@ private[delta] case class MetaColReaderFactory(
     outSchema: StructType,
     metaNames: Set[String],
     physOf: Map[String, String])
-    extends org.apache.spark.sql.execution.datasources.v2.FilePartitionReaderFactory {
+    extends DeltaFileReaderFactory {
   import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, UnsafeProjection}
   import org.apache.spark.sql.execution.datasources.PartitionedFile
 
   private def fileInner = inner.asInstanceOf[
     org.apache.spark.sql.execution.datasources.v2.FilePartitionReaderFactory]
-
-  // driver-constructed (see DvRoutingReaderFactory.fileOptions)
-  private val fileOptions = new org.apache.spark.sql.catalyst.FileSourceOptions(
-    org.apache.spark.sql.catalyst.util.CaseInsensitiveMap(Map.empty[String, String]))
-  override protected def options: org.apache.spark.sql.catalyst.FileSourceOptions =
-    fileOptions
 
   override def supportColumnarReads(partition: InputPartition): Boolean = false
 
@@ -1262,6 +1237,80 @@ private[delta] final class SelectedColumnVector(
 private[delta] object DeltaBatchScan {
   import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
   import org.apache.spark.sql.catalyst.expressions._
+  import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+  import org.apache.spark.sql.internal.SQLConf
+
+  /** Size-split `PartitionedFile`s of (file, byte size, constant row)
+    * bin-packed largest-first, as `FileSourceScanExec` plans them: the
+    * engine's own split size, min(maxPartitionBytes, max(openCost,
+    * totalBytes / defaultParallelism)), and `FilePartition`'s packing.
+    * The row is the file's partition-values row — typed partition
+    * values, plus any per-file constants the reader appends. */
+  def filePartitions(spark: SparkSession,
+                     files: Seq[(Path, Long, InternalRow)]): Array[InputPartition] = {
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(classic,
+      files.map(_._2 + openCost).sum)
+    val splits = files.flatMap { case (path, size, row) =>
+      val abs = org.apache.spark.paths.SparkPath.fromPath(path)
+      (0L until math.max(size, 1L) by maxSplit).map { off =>
+        PartitionedFile(row, abs, off, math.min(maxSplit, size - off),
+          Array.empty, 0L, size)
+      }
+    }
+    FilePartition.getFilePartitions(classic, splits.sortBy(-_.length),
+      maxSplit).toArray
+  }
+
+  /** Spark's vectorized DSv2 parquet reader over graft-delta data files
+    * — the one place it is built, for batch scans and streams alike. It
+    * emits `readDataSchema ++ partSchema`; the returned broadcast is
+    * the Hadoop conf it reads with (deletion-vector loads reuse it). */
+  def parquetReader(spark: SparkSession, dataSchema: StructType,
+                    readDataSchema: StructType, partSchema: StructType,
+                    filters: Array[sources.Filter])
+    : (PartitionReaderFactory, org.apache.spark.broadcast.Broadcast[
+        org.apache.spark.util.SerializableConfiguration]) = {
+    val conf = spark.sessionState.newHadoopConf()
+    // the conf contract ParquetScan.createReaderFactory sets for
+    // ParquetReadSupport (string keys — the support objects are
+    // package-private; the keys are the stable wire contract)
+    conf.set("parquet.read.support.class",
+      "org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport")
+    conf.set("org.apache.spark.sql.parquet.row.requested_schema", readDataSchema.json)
+    conf.set("org.apache.spark.sql.parquet.row.attributes", readDataSchema.json)
+    val sqlConf = spark.sessionState.conf
+    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sqlConf.sessionLocalTimeZone)
+    conf.setBoolean(SQLConf.CASE_SENSITIVE.key, sqlConf.caseSensitiveAnalysis)
+    conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key,
+      sqlConf.isParquetBinaryAsString)
+    conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key,
+      sqlConf.isParquetINT96AsTimestamp)
+    conf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
+      sqlConf.parquetInferTimestampNTZEnabled)
+    conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
+      sqlConf.legacyParquetNanosAsLong)
+    conf.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key,
+      sqlConf.nestedSchemaPruningEnabled)
+    val bc = org.apache.spark.sql.graft.ColumnBridge.broadcastHadoopConf(spark, conf)
+    (org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory(
+      sqlConf, bc, dataSchema, readDataSchema, partSchema, filters, None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetOptions(
+        Map.empty[String, String], sqlConf)), bc)
+  }
+
+  /** `base` emits the columns named `emitted` (physical names); restore
+    * the `requested` order, matching each requested (logical) name
+    * through `physOf`. Identity order returns `base` untouched. */
+  def inRequestedOrder(base: PartitionReaderFactory, emitted: Seq[String],
+                       requested: StructType,
+                       physOf: Map[String, String] = Map.empty): PartitionReaderFactory = {
+    val perm = requested.fields.map(f =>
+      emitted.indexOf(physOf.getOrElse(f.name, f.name)))
+    if (perm.zipWithIndex.forall { case (p, i) => p == i }) base
+    else DeltaPermutingReaderFactory(base, perm, requested)
+  }
 
   /** DSv2 `sources.Filter`s → the Catalyst shape [[DataSkipping]]
     * evaluates. Unknown filter classes map to TRUE (never skip on
@@ -1358,372 +1407,4 @@ private[delta] object DeltaBatchScan {
       case _ => None
     }
   }
-}
-
-/** One planned file. In CDF mode (`commitVersion >= 0`) the reader
-  * synthesizes `_commit_version`/`_commit_timestamp` as constants and
-  * `_change_type` either as the given constant (derived insert/delete)
-  * or, when `changeType` is null, from the cdc file's own column. */
-private[delta] case class DeltaFilePartition(
-    file: String, partitionValues: Map[String, String],
-    changeType: String = null, commitVersion: Long = -1L,
-    commitTsMs: Long = 0L) extends InputPartition
-
-/** Hadoop `Configuration` is not `Serializable`; ship it via its own
-  * `write`/`readFields` wire format (the same trick Spark's internal
-  * `SerializableConfiguration` uses — that class is `private[spark]`). */
-private[delta] class SerializableHadoopConf(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}
-
-private[delta] case class DeltaReaderFactory(
-    schema: StructType, partitionColumns: Array[String],
-    conf: SerializableHadoopConf, sessionTimeZone: String,
-    cdf: Boolean = false)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[DeltaFilePartition]
-    val meta: Map[String, Any] =
-      if (!cdf) Map.empty
-      else {
-        val base = Map[String, Any](
-          "_commit_version" -> p.commitVersion,
-          "_commit_timestamp" -> Math.multiplyExact(p.commitTsMs, 1000L))
-        // changeType == null → the cdc file carries _change_type itself
-        if (p.changeType == null) base
-        else base + ("_change_type" -> UTF8String.fromString(p.changeType))
-      }
-    new DeltaRowReader(p.file, schema, partitionColumns.toSet, p.partitionValues,
-      conf.value, java.time.ZoneId.of(sessionTimeZone), meta)
-  }
-}
-
-/** Executor-side row reader: parquet-hadoop's example Group API over one
-  * data file, projected into the LOG's schema. Partition columns (absent
-  * from the data file, per Hive layout) restore from the add-action's
-  * stringly-typed `partitionValues`; missing data columns (schema
-  * evolution: files written before a column existed) read as NULL — the
-  * same semantics the batch reader gets from Spark's parquet source with
-  * the log schema applied. */
-private[delta] class DeltaRowReader(
-    file: String, schema: StructType, partCols: Set[String],
-    partitionValues: Map[String, String],
-    hadoopConf: Configuration = new Configuration(),
-    zone: java.time.ZoneId = java.time.ZoneOffset.UTC,
-    metaConst: Map[String, Any] = Map.empty)
-    extends PartitionReader[InternalRow] {
-
-  import org.apache.parquet.hadoop.ParquetReader
-  import org.apache.parquet.hadoop.example.GroupReadSupport
-  import org.apache.parquet.example.data.Group
-
-  // projection pushdown: request ONLY the schema's data fields from the
-  // parquet reader (column pruning reaches the IO layer, not just the
-  // row loop). The projection is built FROM the file's own schema —
-  // name-selected fields keep their exact physical types, and fields
-  // the file lacks (pre-evolution) simply aren't requested; the row
-  // loop NULL-fills them. Partition and CDF-meta columns never touch
-  // the file.
-  private val readerConf: Configuration = {
-    val c = new Configuration(hadoopConf)
-    try {
-      import scala.jdk.CollectionConverters._
-      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new Path(file), hadoopConf))
-      val fileSchema = try footer.getFooter.getFileMetaData.getSchema
-        finally footer.close()
-      val wanted = schema.fields.map(_.name).toSet -- partCols -- metaConst.keySet
-      val kept = fileSchema.getFields.asScala.filter(f => wanted(f.getName))
-      // an all-pruned projection (count(*)) still iterates rows: keep
-      // the full schema rather than handing parquet an empty projection
-      if (kept.nonEmpty && kept.size < fileSchema.getFieldCount)
-        c.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-          new org.apache.parquet.schema.MessageType(
-            fileSchema.getName, kept.asJava).toString)
-    } catch { case _: Exception => () } // unreadable footer: full-row read
-    c
-  }
-
-  private val reader: ParquetReader[Group] =
-    ParquetReader.builder(new GroupReadSupport(), new Path(file))
-      .withConf(readerConf).build()
-  private var current: InternalRow = _
-
-  // precomputed per-field plan: partition constant, or group-field name
-  private val partConst: Array[Any] = schema.fields.map { f =>
-    if (partCols.contains(f.name))
-      DeltaRowReader.parsePartition(partitionValues.get(f.name).orNull, f.dataType, zone)
-    else null
-  }
-  private val isPart: Array[Boolean] = schema.fields.map(f => partCols.contains(f.name))
-
-  override def next(): Boolean = {
-    val g = reader.read()
-    if (g == null) return false
-    val values = new Array[Any](schema.length)
-    var i = 0
-    while (i < schema.length) {
-      val f = schema.fields(i)
-      values(i) =
-        if (isPart(i)) partConst(i)
-        else if (metaConst.contains(f.name)) metaConst(f.name) // CDF meta
-        else if (!g.getType.containsField(f.name)) null // pre-evolution file
-        else {
-          val idx = g.getType.getFieldIndex(f.name)
-          if (g.getFieldRepetitionCount(idx) == 0) null
-          else DeltaRowReader.readField(g, idx, f.dataType)
-        }
-      i += 1
-    }
-    current = new GenericInternalRow(values)
-    true
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
-}
-
-private[sources] object DeltaRowReader {
-  import org.apache.parquet.example.data.Group
-  import org.apache.parquet.schema.LogicalTypeAnnotation
-  import org.apache.parquet.schema.LogicalTypeAnnotation.{DecimalLogicalTypeAnnotation, TimestampLogicalTypeAnnotation}
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-  import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-
-  /** The full parquet-writable lattice: every scalar type the engine's
-    * tables carry plus NESTED types (array/map/struct, recursively) —
-    * `embeddings.vec` is `array<float>`, so the vector table streams
-    * through `graft-delta` like any other. Nested types cannot be Hive
-    * PARTITION columns (Spark refuses them at write time), so
-    * [[parsePartition]] keeps its scalar-only domain. */
-  def supported(t: DataType): Boolean = t match {
-    case BooleanType | ByteType | ShortType | IntegerType | LongType |
-         FloatType | DoubleType | StringType | TimestampType |
-         TimestampNTZType | DateType | BinaryType => true
-    case _: DecimalType => true
-    case ArrayType(et, _) => supported(et)
-    case MapType(kt, vt, _) => supported(kt) && supported(vt)
-    case st: StructType => st.fields.forall(f => supported(f.dataType))
-    case _ => false
-  }
-
-  /** Gregorian epoch day of Julian day 0 — the INT96 timestamp encoding
-    * counts days from 4714 BC (parquet-format's DataTypes.md). */
-  private val JulianDayOfEpoch = 2440588L
-  private val MicrosPerDay = 86400000000L
-
-  def readField(g: Group, idx: Int, t: DataType): Any = readValue(g, idx, 0, t)
-
-  /** One value at (fieldIndex, occurrence) — occurrence > 0 only inside
-    * repeated (LIST/MAP) groups. */
-  private def readValue(g: Group, idx: Int, occ: Int, t: DataType): Any = t match {
-    case BooleanType => g.getBoolean(idx, occ)
-    case ByteType => g.getInteger(idx, occ).toByte
-    case ShortType => g.getInteger(idx, occ).toShort
-    case IntegerType => g.getInteger(idx, occ)
-    case LongType => g.getLong(idx, occ)
-    case FloatType => g.getFloat(idx, occ)
-    case DoubleType => g.getDouble(idx, occ)
-    case StringType => UTF8String.fromBytes(g.getBinary(idx, occ).getBytes)
-    case BinaryType => g.getBinary(idx, occ).getBytes // opaque media columns
-    case DateType => g.getInteger(idx, occ) // parquet DATE: days since epoch
-    case TimestampType | TimestampNTZType => readTimestampMicros(g, idx, occ)
-    case d: DecimalType => readDecimal(g, idx, occ, d)
-    case ArrayType(et, _) => readList(g.getGroup(idx, occ), et)
-    case MapType(kt, vt, _) => readMap(g.getGroup(idx, occ), kt, vt)
-    case st: StructType => readStruct(g.getGroup(idx, occ), st)
-    case other => throw new IllegalStateException(s"graft-delta: $other")
-  }
-
-  /** Parquet LIST group → Catalyst array. Handles BOTH layouts the spec
-    * admits (LogicalTypes.md "Lists"): the standard 3-level
-    * `repeated group list { <element> }` (element nullable per its own
-    * repetition) and the legacy 2-level `repeated <element>` directly
-    * under the LIST annotation (elements required by construction). A
-    * NULL array never reaches here — the caller maps an absent outer
-    * group to null; an empty LIST group yields an empty array. */
-  private def readList(lg: Group, et: DataType): GenericArrayData = {
-    val n = lg.getFieldRepetitionCount(0)
-    val out = new Array[Any](n)
-    val repeated = lg.getType.getType(0)
-    // parquet-mr's isElementType backward-compat rule (LogicalTypes.md
-    // "Lists"): the repeated field IS the element (2-level) when it is
-    // primitive, a multi-field group, or carries the legacy names;
-    // otherwise it is the 3-level `list` wrapper around `element`
-    val twoLevel = repeated.isPrimitive ||
-      repeated.asGroupType().getFieldCount > 1 ||
-      repeated.getName == "array" ||
-      repeated.getName == lg.getType.getName + "_tuple"
-    var i = 0
-    while (i < n) {
-      out(i) =
-        if (twoLevel) readValue(lg, 0, i, et)
-        else {
-          val eg = lg.getGroup(0, i)
-          if (eg.getFieldRepetitionCount(0) == 0) null // null element
-          else readValue(eg, 0, 0, et)
-        }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** Parquet MAP group (`repeated group key_value { key; value }`) →
-    * Catalyst map. Keys are required per the spec; values nullable. */
-  private def readMap(mg: Group, kt: DataType, vt: DataType): ArrayBasedMapData = {
-    val n = mg.getFieldRepetitionCount(0)
-    val keys = new Array[Any](n)
-    val vals = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      val kv = mg.getGroup(0, i)
-      val ki = kv.getType.getFieldIndex("key")
-      val vi = kv.getType.getFieldIndex("value")
-      keys(i) = readValue(kv, ki, 0, kt)
-      vals(i) = if (kv.getFieldRepetitionCount(vi) == 0) null
-                else readValue(kv, vi, 0, vt)
-      i += 1
-    }
-    new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(vals))
-  }
-
-  /** Nested struct group → InternalRow, with the same missing-field →
-    * NULL schema-evolution semantics as the top-level row loop. */
-  private def readStruct(sg: Group, st: StructType): InternalRow = {
-    val values = new Array[Any](st.length)
-    var i = 0
-    while (i < st.length) {
-      val f = st.fields(i)
-      values(i) =
-        if (!sg.getType.containsField(f.name)) null // pre-evolution file
-        else {
-          val idx = sg.getType.getFieldIndex(f.name)
-          if (sg.getFieldRepetitionCount(idx) == 0) null
-          else readValue(sg, idx, 0, f.dataType)
-        }
-      i += 1
-    }
-    new GenericInternalRow(values)
-  }
-
-  /** Catalyst micros-since-epoch from whichever physical shape the writer
-    * chose: INT96 (legacy Julian-day + nanos-of-day), or INT64 annotated
-    * MILLIS/MICROS/NANOS. */
-  private def readTimestampMicros(g: Group, idx: Int, occ: Int): Long = {
-    val pt = g.getType.getType(idx).asPrimitiveType()
-    pt.getPrimitiveTypeName match {
-      case INT96 =>
-        val b = g.getInt96(idx, occ).toByteBuffer
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        val nanosOfDay = b.getLong
-        val julianDay = b.getInt
-        Math.addExact(
-          Math.multiplyExact(julianDay - JulianDayOfEpoch, MicrosPerDay),
-          nanosOfDay / 1000L)
-      case INT64 =>
-        val v = g.getLong(idx, occ)
-        pt.getLogicalTypeAnnotation match {
-          case ts: TimestampLogicalTypeAnnotation => ts.getUnit match {
-            case LogicalTypeAnnotation.TimeUnit.MILLIS => Math.multiplyExact(v, 1000L)
-            case LogicalTypeAnnotation.TimeUnit.MICROS => v
-            case LogicalTypeAnnotation.TimeUnit.NANOS => Math.floorDiv(v, 1000L)
-          }
-          case _ => v // unannotated INT64 under a timestamp schema: micros
-        }
-      case other => throw new IllegalStateException(
-        s"graft-delta: timestamp column stored as $other")
-    }
-  }
-
-  /** Decimal from any of parquet's three physical encodings (int32 for
-    * precision ≤9, int64 ≤18, binary/fixed beyond — plus the legacy
-    * all-binary format), rescaled from the FILE's declared scale to the
-    * log schema's. */
-  private def readDecimal(g: Group, idx: Int, occ: Int, d: DecimalType): Decimal = {
-    val pt = g.getType.getType(idx).asPrimitiveType()
-    val fileScale = pt.getLogicalTypeAnnotation match {
-      case dec: DecimalLogicalTypeAnnotation => dec.getScale
-      case _ => d.scale
-    }
-    val bd = pt.getPrimitiveTypeName match {
-      case INT32 => java.math.BigDecimal.valueOf(g.getInteger(idx, occ).toLong, fileScale)
-      case INT64 => java.math.BigDecimal.valueOf(g.getLong(idx, occ), fileScale)
-      case BINARY | FIXED_LEN_BYTE_ARRAY =>
-        new java.math.BigDecimal(
-          new java.math.BigInteger(g.getBinary(idx, occ).getBytes), fileScale)
-      case other => throw new IllegalStateException(
-        s"graft-delta: decimal column stored as $other")
-    }
-    Decimal(BigDecimal(bd), d.precision, d.scale)
-  }
-
-  /** Hive-path percent-escaping, undone — applied ONCE at the
-    * path→logical boundary ([[DeltaTable]]'s staging walk,
-    * [[DeltaMicroBatchStream.partValuesFromPath]]) so
-    * `ts=2024-01-01 00%3A00%3A00` round-trips; actions then store the
-    * logical value per the Delta protocol. */
-  private[delta] def unescapePathName(s: String): String = {
-    if (s.indexOf('%') < 0) return s
-    val sb = new java.lang.StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        try {
-          sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-          i += 3
-        } catch { case _: NumberFormatException => sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
-  /** Typed value from a LOGICAL (already-unescaped) partition string —
-    * the form add/cdc actions store per the Delta protocol and the form
-    * [[DeltaMicroBatchStream.partValuesFromPath]] returns. Escaping is
-    * a PATH concern only; a value that legitimately contains `%3A`
-    * must not be collapsed to `:` here. */
-  def parsePartition(raw: String, t: DataType,
-                     zone: java.time.ZoneId = java.time.ZoneOffset.UTC): Any =
-    if (raw == null || raw == "__HIVE_DEFAULT_PARTITION__") null
-    else {
-      val v = raw
-      t match {
-        case BooleanType => v.toBoolean
-        case ByteType => v.toByte
-        case ShortType => v.toShort
-        case IntegerType => v.toInt
-        case LongType => v.toLong
-        case FloatType => v.toFloat
-        case DoubleType => v.toDouble
-        case StringType => UTF8String.fromString(v)
-        case DateType => java.time.LocalDate.parse(v).toEpochDay.toInt
-        case TimestampType =>
-          // Hive path format `yyyy-MM-dd HH:mm:ss[.f…]`, session zone
-          val ldt = java.time.LocalDateTime.parse(v.replace(' ', 'T'))
-          val inst = ldt.atZone(zone).toInstant
-          Math.addExact(Math.multiplyExact(inst.getEpochSecond, 1000000L),
-            inst.getNano / 1000L)
-        case TimestampNTZType =>
-          // zoneless wall-clock: micros in the UTC frame, symmetric
-          // with the sink's renderPartitionValue
-          val ldt = java.time.LocalDateTime.parse(v.replace(' ', 'T'))
-          Math.addExact(Math.multiplyExact(
-            ldt.toEpochSecond(java.time.ZoneOffset.UTC), 1000000L),
-            ldt.getNano / 1000L)
-        case d: DecimalType =>
-          Decimal(BigDecimal(new java.math.BigDecimal(v)), d.precision, d.scale)
-        case other => throw new IllegalStateException(s"graft-delta: $other")
-      }
-    }
 }

@@ -750,9 +750,9 @@ object DeltaTable {
       val dst = new Path(dstDir, name)
       require(fs.rename(p.getPath, dst), s"delta: rename failed for $dst")
       val st = fs.getFileStatus(dst)
-      val pvals = partValuesOf(rel)
-      addAction(if (rel.isEmpty) name else s"$rel/$name",
-        st.getLen, st.getModificationTime, footerStats(dst, conf), pvals,
+      val relPath = if (rel.isEmpty) name else s"$rel/$name"
+      addAction(relPath, st.getLen, st.getModificationTime,
+        footerStats(dst, conf), PartitionPath.partValuesFromPath(relPath),
         dataChange)
     }
     fs.delete(staging, true)
@@ -797,19 +797,6 @@ object DeltaTable {
       }
     walk(staging, "")
   }
-
-  /** Hive-dir segments → partitionValues map. Values are UNESCAPED to
-    * the logical form — the Delta protocol stores partitionValues as
-    * logical values (delta-spark and other readers take them from the
-    * action verbatim); percent-escaping belongs only to the file PATH.
-    * A `lang=a%3Ab/` segment therefore records `lang -> "a:b"`, which
-    * is what predicate literals and [[DataSkipping]] compare against. */
-  private def partValuesOf(rel: String): Map[String, String] =
-    rel.split("/").filter(_.nonEmpty).map { seg =>
-      val i = seg.indexOf('=')
-      seg.substring(0, i) ->
-        DeltaRowReader.unescapePathName(seg.substring(i + 1))
-    }.toMap
 
   /** Longest string the stats record verbatim. Past it the column's
     * string stats are DROPPED for that file (conservative: stats-less
@@ -2787,7 +2774,7 @@ object DeltaTable {
         require(fs.rename(p.getPath, dst), s"delta: rename failed for $dst")
         val path = if (rel.isEmpty) s"_change_data/$name" else s"_change_data/$rel/$name"
         Some(DeltaLog.cdcAction(path, fs.getFileStatus(dst).getLen,
-          partValuesOf(rel)))
+          PartitionPath.partValuesFromPath(path)))
       }
     }
     fs.delete(staging, true)

@@ -11,6 +11,7 @@ import org.apache.spark.sql.connector.write.{DeltaBatchWrite, DeltaWrite, DeltaW
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** Spark-native row-level DML (SPARK-35801's `SupportsRowLevelOperations`
   * framework): SQL DELETE / UPDATE / MERGE work WITHOUT
@@ -332,7 +333,7 @@ private[delta] class GraftRowLevelBatchWrite(
     GraftRowLevelWriterFactory(table, marksDir,
       ColumnMapping.physicalWriteSchema(rowSchema, Some(logSchema)),
       ColumnMapping.physicalCols(partCols, Some(logSchema)).toArray,
-      new SerializableHadoopConf(spark.sessionState.newHadoopConf()),
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()),
       spark.sessionState.conf.sessionLocalTimeZone,
       if (rowSchema.fields.isEmpty) Seq.empty
       else SinkConstraints.bind(spark, rowSchema, initHead),
@@ -564,7 +565,7 @@ private[delta] class GraftRowLevelBatchWrite(
 
 private[delta] case class GraftRowLevelWriterFactory(
     table: String, marksDir: String, rowSchema: StructType,
-    partCols: Array[String], conf: SerializableHadoopConf, zone: String,
+    partCols: Array[String], conf: SerializableConfiguration, zone: String,
     constraints: Seq[(String, String,
       org.apache.spark.sql.catalyst.expressions.Expression)],
     fileIdx: Int, posIdx: Int,

@@ -257,49 +257,53 @@ class DeltaStreamSourceSpec extends SparkSpec {
     assert(normalize(spark.read.parquet(outp)) === normalize(DeltaTable.read(spark, t)))
   }
 
-  test("DeltaRowReader type matrix: partition parse round-trips, null sentinel, unescape") {
-    import graft.sources.delta.{DeltaMicroBatchStream, DeltaRowReader}
+  test("partition-path type matrix: parse round-trips, null sentinel, unescape; parquet type gate") {
+    import graft.sources.delta.PartitionPath
     import org.apache.spark.sql.types._
     val utc = java.time.ZoneOffset.UTC
     // parsePartition takes LOGICAL values (the form actions store per
     // the protocol); Hive-path escaping is undone once, at the
     // path→logical boundary (partValuesFromPath)
-    assert(DeltaMicroBatchStream.partValuesFromPath(
+    assert(PartitionPath.partValuesFromPath(
       "ts=2024-01-02 03%3A04%3A05/part-x.parquet")
       === Map("ts" -> "2024-01-02 03:04:05"))
-    assert(DeltaRowReader.parsePartition("2024-01-02 03:04:05", TimestampType, utc)
+    assert(PartitionPath.parsePartition("2024-01-02 03:04:05", TimestampType, utc)
       === java.time.Instant.parse("2024-01-02T03:04:05Z").getEpochSecond * 1000000L)
     // a value that legitimately contains a %XX sequence must survive
     // parsePartition verbatim (no double-unescape)
-    assert(DeltaRowReader.parsePartition("a%3Ab", StringType, utc)
+    assert(PartitionPath.parsePartition("a%3Ab", StringType, utc)
       === org.apache.spark.unsafe.types.UTF8String.fromString("a%3Ab"))
     // session-zone semantics: the same wall-clock string in Paris is 1h earlier UTC
     val paris = java.time.ZoneId.of("Europe/Paris")
-    assert(DeltaRowReader.parsePartition("2024-01-02 03:04:05", TimestampType, paris)
+    assert(PartitionPath.parsePartition("2024-01-02 03:04:05", TimestampType, paris)
       === java.time.Instant.parse("2024-01-02T02:04:05Z").getEpochSecond * 1000000L)
     // NTZ is zoneless: same micros whatever the session zone
-    assert(DeltaRowReader.parsePartition("2024-01-02 03:04:05", TimestampNTZType, paris)
-      === DeltaRowReader.parsePartition("2024-01-02 03:04:05", TimestampNTZType, utc))
-    assert(DeltaRowReader.parsePartition("7", ByteType, utc) === 7.toByte)
-    assert(DeltaRowReader.parsePartition("300", ShortType, utc) === 300.toShort)
-    assert(DeltaRowReader.parsePartition("2024-03-05", DateType, utc)
+    assert(PartitionPath.parsePartition("2024-01-02 03:04:05", TimestampNTZType, paris)
+      === PartitionPath.parsePartition("2024-01-02 03:04:05", TimestampNTZType, utc))
+    assert(PartitionPath.parsePartition("7", ByteType, utc) === 7.toByte)
+    assert(PartitionPath.parsePartition("300", ShortType, utc) === 300.toShort)
+    assert(PartitionPath.parsePartition("2024-03-05", DateType, utc)
       === java.time.LocalDate.of(2024, 3, 5).toEpochDay.toInt)
-    assert(DeltaRowReader.parsePartition("12.50", DecimalType(10, 2), utc)
+    assert(PartitionPath.parsePartition("12.50", DecimalType(10, 2), utc)
       === org.apache.spark.sql.types.Decimal("12.50"))
-    assert(DeltaRowReader.parsePartition("__HIVE_DEFAULT_PARTITION__", TimestampType, utc) === null)
-    assert(DeltaRowReader.parsePartition(null, DateType, utc) === null)
-    assert(DeltaRowReader.supported(TimestampType) && DeltaRowReader.supported(DateType)
-      && DeltaRowReader.supported(DecimalType(38, 6)) && DeltaRowReader.supported(BinaryType))
-    // nested types over the scalar lattice are IN (recursively); a
-    // nested unreadable leaf still poisons the whole column
-    assert(DeltaRowReader.supported(ArrayType(FloatType)) &&
-      DeltaRowReader.supported(MapType(StringType, LongType)) &&
-      DeltaRowReader.supported(StructType(Seq(
-        StructField("a", ArrayType(ArrayType(ShortType))),
-        StructField("b", MapType(StringType, TimestampNTZType))))))
-    assert(!DeltaRowReader.supported(CalendarIntervalType) &&
-      !DeltaRowReader.supported(ArrayType(CalendarIntervalType)) &&
-      !DeltaRowReader.supported(MapType(StringType, NullType)))
+    assert(PartitionPath.parsePartition("__HIVE_DEFAULT_PARTITION__", TimestampType, utc) === null)
+    assert(PartitionPath.parsePartition(null, DateType, utc) === null)
+    // the type gate asks what the shared parquet reader reads: a log
+    // whose schema carries an interval column refuses at schema
+    // resolution, before any file is planned
+    val t = java.nio.file.Files.createTempDirectory("dstream_gate").toString + "/t"
+    DeltaTable.write(Seq((1L, "a")).toDF("k", "iv"), t, SaveMode.Append)
+    val v0 = java.nio.file.Paths.get(s"$t/_delta_log/00000000000000000000.json")
+    val log = new String(java.nio.file.Files.readAllBytes(v0), "UTF-8")
+    val stringIv = "\\\"name\\\":\\\"iv\\\",\\\"type\\\":\\\"string\\\""
+    assert(log.contains(stringIv), log)
+    java.nio.file.Files.write(v0,
+      log.replace(stringIv, stringIv.replace("string", "interval")).getBytes("UTF-8"))
+    val e = intercept[IllegalArgumentException] {
+      spark.readStream.format("graft-delta").load(t)
+    }
+    assert(e.getMessage.contains("unsupported column type interval for iv"),
+      e.getMessage)
   }
 
   test("mid-stream mergeSchema evolution refuses loudly; restart adopts the new schema exactly-once") {
@@ -433,4 +437,59 @@ class DeltaStreamSourceSpec extends SparkSpec {
       s"partition columns must restore through the cdc actions: $got")
   }
 
+  test("a micro-batch bin-packs many small files and reads them columnar") {
+    import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val root = java.nio.file.Files.createTempDirectory("dstream_pack").toString
+    val t = s"$root/t"; val outp = s"$root/out"
+    DeltaTable.write(spark.range(0, 12, 1, 12)
+      .selectExpr("id AS k", "concat('s', id) AS s"), t, SaveMode.Append)
+    val files = DeltaTable.read(spark, t).inputFiles.length
+    assert(files === 12, "one data file per write task")
+    val q = spark.readStream.format("graft-delta").load(t)
+      .writeStream.format("parquet").option("path", outp)
+      .option("checkpointLocation", s"$root/chk")
+      .trigger(Trigger.ProcessingTime(0)).start()
+    try {
+      q.processAllAvailable()
+      val scans = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan.collect { case s: MicroBatchScanExec => s }
+      assert(scans.size === 1)
+      // the batch scan's planning: small files share input partitions
+      // instead of one partition per file
+      assert(scans.head.inputPartitions.size < files,
+        s"${scans.head.inputPartitions.size} partitions for $files files")
+      assert(scans.head.supportsColumnar, "the stream must read vectorized")
+    } finally q.stop()
+    assert(spark.read.parquet(outp).collect()
+      .map(r => (r.getAs[Long]("k"), r.getAs[String]("s"))).toSet ===
+      (0L until 12L).map(i => (i, s"s$i")).toSet)
+  }
+
+  test("readChangeFeed stream derives deletes of an overwritten partitioned table from the removed files' paths") {
+    val root = java.nio.file.Files.createTempDirectory("dstream_cdfd").toString
+    val t = s"$root/t"; val outp = s"$root/out"
+    // `a:b` lands in a path-escaped `lang=a%3Ab/` directory
+    DeltaTable.write(Seq((1, "fr"), (2, "a:b"), (3, "fr")).toDF("id", "lang"),
+      t, SaveMode.Append, partitionBy = Seq("lang"))                              // v0
+    // no change data feed on this table: the overwrite commits no cdc
+    // files, so its changes derive from its add and remove actions
+    DeltaTable.write(Seq((4, "de")).toDF("id", "lang"), t, SaveMode.Overwrite,
+      partitionBy = Seq("lang"))                                                 // v1
+    val q = spark.readStream.format("graft-delta")
+      .option("readChangeFeed", "true").load(t)
+      .writeStream.format("parquet").option("path", outp)
+      .option("checkpointLocation", s"$root/chk")
+      .trigger(Trigger.AvailableNow()).start()
+    assert(q.awaitTermination(60000), "available-now query must terminate")
+    assert(q.exception.isEmpty, s"${q.exception}")
+    val got = spark.read.parquet(outp)
+      .collect().map(r => (r.getAs[Int]("id"), r.getAs[String]("lang"),
+        r.getAs[String]("_change_type"), r.getAs[Long]("_commit_version"))).toSet
+    assert(got === Set(
+      (1, "fr", "insert", 0L), (2, "a:b", "insert", 0L), (3, "fr", "insert", 0L),
+      (4, "de", "insert", 1L),
+      (1, "fr", "delete", 1L), (2, "a:b", "delete", 1L), (3, "fr", "delete", 1L)),
+      s"derived deletes must restore their partition values from the path: $got")
+  }
 }

@@ -86,11 +86,14 @@ class XlsxSourceSpec extends SparkSpec {
 
   // Minimal SpreadsheetML writer for synthetic-workbook cases: the source
   // only needs the shared-string table + sheet grids, so that's all the
-  // zip carries.
+  // zip carries. `shared` entries are one `<t>` each; `richShared`
+  // entries follow them in the table, each a rich-text `<si>` of
+  // formatted `<r>` runs. Text is XML as written (escape entities).
   private def writeWorkbook(
       name: String,
       sheets: Map[String, String],
-      shared: Seq[String] = Nil): String = {
+      shared: Seq[String] = Nil,
+      richShared: Seq[Seq[String]] = Nil): String = {
     val f = java.nio.file.Files.createTempDirectory("xlsx_syn").resolve(name)
     val zos = new java.util.zip.ZipOutputStream(java.nio.file.Files.newOutputStream(f))
     def put(entry: String, content: String): Unit = {
@@ -98,9 +101,10 @@ class XlsxSourceSpec extends SparkSpec {
       zos.write(content.getBytes("UTF-8"))
       zos.closeEntry()
     }
-    if (shared.nonEmpty)
-      put("xl/sharedStrings.xml",
-        s"""<?xml version="1.0"?><sst>${shared.map(s => s"<si><t>$s</t></si>").mkString}</sst>""")
+    val si = shared.map(s => s"<si><t>$s</t></si>") ++ richShared.map(runs =>
+      runs.map(t => s"<r><rPr><b/></rPr><t>$t</t></r>").mkString("<si>", "", "</si>"))
+    if (si.nonEmpty)
+      put("xl/sharedStrings.xml", s"""<?xml version="1.0"?><sst>${si.mkString}</sst>""")
     sheets.foreach { case (sheet, rowsXml) =>
       put(s"xl/worksheets/$sheet.xml",
         s"""<?xml version="1.0"?><worksheet><sheetData>$rowsXml</sheetData></worksheet>""")
@@ -176,6 +180,40 @@ class XlsxSourceSpec extends SparkSpec {
     val r = df.collect()
     assert(r.length === 1)
     assert(r(0).getString(0) === "7" && r(0).getString(1) === "Vélo/Trottinette")
+  }
+
+  test("synthetic workbook: header=false keeps the first row as data under generated names") {
+    val p = writeWorkbook("nohdr.xlsx", Map("sheet1" ->
+      (s"""<row>${inline("A1", "name")}${inline("B1", "qty")}</row>""" +
+        s"""<row>${inline("A2", "ab")}<c r="B2"><v>42</v></c></row>""")))
+    val df = spark.read.format("xlsx").option("header", "false").load(p)
+    assert(df.schema.fieldNames.toSeq === Seq("c0", "c1"))
+    assert(df.collect().map(r => (r.getString(0), r.getString(1))).toSeq ===
+      Seq(("name", "qty"), ("ab", "42")))
+  }
+
+  test("synthetic workbook: a rich-text shared string reads as its runs concatenated") {
+    val p = writeWorkbook("rich.xlsx", Map("sheet1" ->
+      ("""<row><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c></row>""" +
+        """<row><c r="A2" t="s"><v>2</v></c><c r="B2" t="s"><v>0</v></c></row>""")),
+      shared = Seq("mode"), richShared = Seq(Seq("dé", "placement"), Seq("Vélo", "/", "Trottinette")))
+    val df = spark.read.format("xlsx").load(p)
+    assert(df.schema.fieldNames.toSeq === Seq("mode", "déplacement"))
+    val r = df.collect()
+    assert(r.length === 1)
+    assert(r(0).getString(0) === "Vélo/Trottinette" && r(0).getString(1) === "mode")
+  }
+
+  test("synthetic workbook: XML entities decode in inline and shared strings") {
+    val p = writeWorkbook("entities.xlsx", Map("sheet1" ->
+      (s"""<row>${inline("A1", "unit")}${inline("B1", "cmp")}</row>""" +
+        s"""<row>${inline("A2", "R&amp;D")}<c r="B2" t="s"><v>0</v></c></row>""")),
+      shared = Seq("a &lt; b &amp;&amp; c"), richShared = Seq(Seq("x &lt;", " y")))
+    val r = spark.read.format("xlsx").load(p).collect()
+    assert(r.length === 1)
+    assert(r(0).getString(0) === "R&D" && r(0).getString(1) === "a < b && c")
+    assert(XlsxParse.sharedStrings(
+      spark.sparkContext.hadoopConfiguration, p) === IndexedSeq("a < b && c", "x < y"))
   }
 
   test("cell-reference decoding handles multi-letter columns") {
