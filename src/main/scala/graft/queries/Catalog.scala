@@ -655,7 +655,7 @@ object Catalog {
   /** String data skipping (q88): `documents` written to a scratch Delta
     * table range-partitioned by `source` (so each file's add-action
     * carries tight STRING bounds), then read back via
-    * [[graft.sources.delta.DeltaTable.readRangeString]] over a range
+    * [[graft.sources.delta.DeltaTable.readWhere]] over a range
     * that string-sorts AROUND the numeric suffixes ('src0' <= s <=
     * 'src12' covers src0, src1, src10..src12 — not src2..src9), and
     * aggregated. The oracle applies the same predicate to the raw
@@ -678,7 +678,8 @@ object Catalog {
       val docs = table(spark, dir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"))
       DeltaTable.write(docs.repartitionByRange(4, col("source")), t, SaveMode.Append)
-      val agg = DeltaTable.readRangeString(spark, t, "source", "src0", "src12")
+      val agg = DeltaTable.readWhere(spark, t,
+          col("source") >= "src0" && col("source") <= "src12")
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
       val rows = agg.collect().toSeq

@@ -10,7 +10,8 @@ import DeltaLog.{AddFile, FileStats}
 /** Generic predicate-vs-stats file skipping: decide, from an add
   * action's per-file statistics alone, whether a data file MAY contain
   * rows satisfying a Catalyst predicate — the engine behind
-  * [[DeltaTable.delete]]/[[DeltaTable.update]] candidate selection (the
+  * [[DeltaTable.readWhere]]'s pruning and [[DeltaTable.delete]]/
+  * [[DeltaTable.update]] candidate selection (the
   * same role delta-spark's `DataSkippingReader` plays over its stats
   * columns; re-derived here from the public protocol's
   * numRecords/minValues/maxValues/nullCount fields, `PROTOCOL.md`
@@ -30,7 +31,11 @@ import DeltaLog.{AddFile, FileStats}
   * rows — rows where the comparison is NULL fail both the original and
   * the negation, so the rewrite is skip-safe). Columns resolve by name
   * against the integral (int/long/date/timestamp-µs) or string bounds;
-  * comparisons on columns with neither are conservative.
+  * comparisons on columns with neither are conservative. Widened
+  * literals unwrap: `id >= 10L` on an INT `id` analyzes to
+  * `CAST(id AS BIGINT) >= 10L`, which Spark's own
+  * `UnwrapCastInBinaryComparison` rewrites to `id >= 10` before the
+  * bounds see it (likewise `IN` over a cast column).
   *
   * At 100 TB this is the difference between a DELETE that rewrites the
   * table and one that rewrites the handful of files whose bounds
@@ -147,19 +152,21 @@ object DataSkipping {
     * with the table schema) and then Catalyst's folding rules —
     * which also buys exactly the normalizations skipping wants:
     * literal casts fold (`id = 4` on a LONG column → `Literal(4L)`),
+    * a column widened to a wider literal's type unwraps
+    * (`CAST(id AS BIGINT) >= 10L` on an INT column → `id >= 10`),
     * NOT pushes inward (`NOT(id >= 5)` → `id < 5`), and
     * null-propagation collapses always-NULL comparisons to a NULL
     * literal (provably empty). Driver-side plan work only — no job. */
   def resolvePredicate(spark: org.apache.spark.sql.SparkSession,
                        schema: StructType,
                        pred: org.apache.spark.sql.Column): Expression = {
-    import org.apache.spark.sql.catalyst.optimizer.{BooleanSimplification, ConstantFolding, NullPropagation, SimplifyCasts}
+    import org.apache.spark.sql.catalyst.optimizer.{BooleanSimplification, ConstantFolding, NullPropagation, SimplifyCasts, UnwrapCastInBinaryComparison}
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
     val analyzed = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       .filter(pred).queryExecution.analyzed
     val simplified = Seq(SimplifyCasts, NullPropagation, ConstantFolding,
-        BooleanSimplification)
+        UnwrapCastInBinaryComparison, BooleanSimplification)
       .foldLeft(analyzed)((p, r) => r.asInstanceOf[
         org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]].apply(p))
     simplified.collectFirst { case f: Filter => f.condition }
@@ -322,7 +329,9 @@ object DataSkipping {
       !hiBelow && !loAbove
     }).getOrElse(true)
 
-  private def utf8Lte(a: String, b: String): Boolean =
+  /** a <= b in unsigned UTF-8 byte order — parquet's and Spark's shared
+    * string order (UTF-16 `String.compareTo` disagrees past the BMP). */
+  private[delta] def utf8Lte(a: String, b: String): Boolean =
     java.util.Arrays.compareUnsigned(
       a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) <= 0

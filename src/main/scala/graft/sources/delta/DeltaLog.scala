@@ -175,7 +175,7 @@ object DeltaLog {
   }
 
   /** One JSON commit's parsed actions (the shared shape [[snapshot]],
-    * [[DeltaTable.changesSince]], and [[DeltaTable.history]] consume —
+    * [[DeltaTable.changesOrRebase]], and [[DeltaTable.describeHistory]] consume —
     * one parser, one place to track the protocol). */
   private[delta] final case class CommitActions(
       adds: Seq[AddFile],
@@ -764,28 +764,23 @@ object DeltaLog {
       }
   }
 
-  /** Driver-bounded partition-pruned file listing — the documented
-    * escape hatch for SCALE.md's snapshot driver-memory ceiling (a 100 TB
-    * table at small-file granularity has millions of add entries; a full
-    * driver replay holds them all). Here the CHECKPOINT side of the
-    * snapshot stays a DataFrame: partition predicates and the (small, by
-    * construction — checkpoints bound it) post-checkpoint JSON tail's
-    * removes apply BEFORE collection, so the driver materializes only the
-    * PRUNED file list. Tables without a checkpoint fall back to the
-    * driver replay — correct at every scale, optimal below the ceiling.
+  /** Driver-bounded partition-pruned snapshot — the escape hatch for
+    * SCALE.md's snapshot driver-memory ceiling (a 100 TB table at
+    * small-file granularity has millions of add entries; a full driver
+    * replay holds them all), and what [[DeltaBatchScan]] plans from. The
+    * CHECKPOINT side stays a DataFrame: partition equalities and the
+    * (small, by construction — checkpoints bound it) post-checkpoint
+    * JSON tail's removes apply BEFORE collection, so the driver
+    * materializes only the PRUNED file list. Tables without a checkpoint
+    * fall back to the driver replay — correct at every scale, optimal
+    * below the ceiling. `files` matches `snapshot(...).files` filtered by
+    * `partitionFilter` exactly (spec-pinned): the JSON tail replays in
+    * order driver-side (O(commits-since-checkpoint), not O(files)),
+    * distinguishing removes of tail-added files from removes of
+    * checkpointed files.
     *
-    * Semantics match `snapshot(...).files` filtered by `partitionFilter`
-    * exactly (spec-pinned): the JSON tail replays in order driver-side
-    * (it is O(commits-since-checkpoint), not O(files)), distinguishing
-    * removes of tail-added files from removes of checkpointed files.
-    */
-  def prunedFiles(spark: SparkSession, table: String,
-                  partitionFilter: Map[String, String]): Seq[AddFile] =
-    prunedSnapshot(spark, table, partitionFilter).files
-
-  /** [[prunedFiles]] plus the schema/partitioning metadata. One log
-    * listing serves the `asOf` validation and the JSON tail; the tail
-    * replays once ([[replayTail]]); the protocol gate, schema, id and
+    * One log listing serves the `asOf` validation and the JSON tail; the
+    * tail replays once ([[replayTail]]); the protocol gate, schema, id and
     * partition columns come from [[checkpointState]] (cached, so after
     * a first read the only Spark work is the pruned add collect) with
     * the tail's overrides on top; and the live checkpoint adds come off

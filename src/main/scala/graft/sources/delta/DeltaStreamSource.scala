@@ -16,15 +16,16 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Structured Streaming SOURCE over the from-scratch Delta log
   * (`spark.readStream.format("graft-delta").load(table)`) — the
   * consuming half of a Delta-to-Delta pipeline as a first-class
-  * streaming source, completing what [[DeltaTable.changesSince]] offers
-  * as a pull API. delta-spark's streaming source has the same contract
+  * streaming source: the refusing counterpart of the pull API
+  * [[DeltaTable.changesOrRebase]], which rebases where this refuses.
+  * delta-spark's streaming source has the same contract
   * (`spark/SaveDelta.scala:157-163` writes the table this would tail).
   *
   * Offsets ARE log versions: `latestOffset` lists the log (a few KB of
   * metadata — no data IO), and a micro-batch (start, end] reads the
   * files ADDED in those commits with `dataChange=true`. Maintenance
   * commits (OPTIMIZE/compaction) are skipped exactly like
-  * `changesSince`; a data-changing REMOVE
+  * `changesOrRebase`; a data-changing REMOVE
   * (overwrite/merge) fails the batch loudly — an append-only tailer
   * cannot represent it (upstream's ignoreChanges contract). Offsets
   * live in the query's checkpoint, so restarts resume exactly-once:
@@ -559,7 +560,7 @@ private[delta] class DeltaMicroBatchStream(table: String, schema: StructType,
       end.asInstanceOf[DeltaOffset].version)
     if (ev <= sv) return Array.empty
     val vs = DeltaLog.versions(spark, table).filter(v => v > sv && v <= ev)
-    // same reconstruction contract as changesSince: the batch's range
+    // same reconstruction contract as changesOrRebase: the batch's range
     // must be dense, and (plain mode) data-changing removes cannot be
     // tailed — CDF mode is exactly how those become representable
     require(vs == (sv + 1 to ev),

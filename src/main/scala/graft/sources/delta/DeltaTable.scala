@@ -219,37 +219,6 @@ object DeltaTable {
     }
   }
 
-  /** Partition-pruned read: only files whose `partitionValues` match
-    * every (column → value) in `filter` are opened — the log IS the
-    * partition index, no directory listing of pruned partitions.
-    *
-    * Replay strategy is DATA-DRIVEN: past
-    * `spark.graft.delta.distributedReplayThreshold` checkpoint rows
-    * (default 200k — SCALE.md's "a few hundred thousand live files"
-    * driver-memory guidance) the read routes through
-    * [[readPartitionsDistributed]], whose pruning runs on the checkpoint
-    * DataFrame so the driver materializes only the pruned list; below it,
-    * the driver replay skips the pruning job. The row count comes from
-    * `_last_checkpoint`'s size field (metadata-only) — a 1M-file table
-    * picks the distributed path without a code change. Both paths are
-    * spec-pinned result-identical. */
-  def readPartitions(spark: SparkSession, table: String,
-                     filter: Map[String, String]): DataFrame =
-    if (chooseDistributedReplay(spark, table))
-      readPartitionsDistributed(spark, table, filter)
-    else {
-      val s = snapshot(spark, table)
-      require(!s.isEmpty, s"delta: $table has no commits")
-      require(filter.keySet.subsetOf(s.partitionColumns.toSet),
-        s"delta: ${filter.keySet} not all partition columns ${s.partitionColumns}")
-      val schema = logSchema(s, table)
-      val m = ColumnMapping.physMap(schema)
-      val physFilter = filter.map { case (k, v) => m.getOrElse(k, k) -> v }
-      val files = s.files.filter(f =>
-        physFilter.forall { case (k, v) => f.partitionValues.get(k).contains(v) })
-      readFiles(spark, table, schema, s.partitionColumns, files)
-    }
-
   /** True when the newest checkpoint's row count exceeds the
     * session's distributed-replay threshold — the crossing is spec-pinned
     * from both sides. Tables without a checkpoint always replay
@@ -720,7 +689,7 @@ object DeltaTable {
     * into the table root under collision-free names. Each file's `add`
     * action carries the protocol's per-file stats (numRecords + min/max
     * of the integer columns, read from the parquet FOOTER — metadata IO,
-    * no data scan) — what [[merge]] / [[readRange]] data-skip on. */
+    * no data scan) — what [[merge]] / [[readWhere]] data-skip on. */
   private[delta] def stageData(df: DataFrame, schema: StructType, tbl: Path,
                         fs: org.apache.hadoop.fs.FileSystem,
                         partitionBy: Seq[String] = Seq.empty,
@@ -815,7 +784,7 @@ object DeltaTable {
     * long, date, timestamp micros, and small decimals' unscaled longs);
     * UTF8-annotated BINARY columns record string bounds (parquet's
     * byte-lexicographic order — the same order Spark compares strings
-    * in, so [[readRangeString]] bounds agree with predicates). */
+    * in, so [[readWhere]]'s string bounds agree with predicates). */
   private def footerStats(file: Path,
                           conf: org.apache.hadoop.conf.Configuration): Option[FileStats] =
     try {
@@ -868,8 +837,8 @@ object DeltaTable {
                 if (mn.length > MaxStatsStringLen || mx.length > MaxStatsStringLen)
                   sdrop += name
                 else {
-                  smins += name -> smins.get(name).filter(utf8Lte(_, mn)).getOrElse(mn)
-                  smaxs += name -> smaxs.get(name).filter(utf8Lte(mx, _)).getOrElse(mx)
+                  smins += name -> smins.get(name).filter(DataSkipping.utf8Lte(_, mn)).getOrElse(mn)
+                  smaxs += name -> smaxs.get(name).filter(DataSkipping.utf8Lte(mx, _)).getOrElse(mx)
                 }
               }
             }
@@ -881,13 +850,6 @@ object DeltaTable {
           nulls.toMap))
       } finally reader.close()
     } catch { case _: Exception => None }
-
-  /** a <= b in unsigned UTF-8 byte order — parquet's and Spark's shared
-    * string order (UTF-16 `String.compareTo` disagrees past the BMP). */
-  private def utf8Lte(a: String, b: String): Boolean =
-    java.util.Arrays.compareUnsigned(
-      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) <= 0
 
   private def writeInternal(df: DataFrame, table: String, mode: SaveMode,
                             txn: Option[(String, Long)],
@@ -1178,12 +1140,6 @@ object DeltaTable {
     val pc = partCols.map(c => m.getOrElse(c, c))
     f => DataSkipping.partitionPredicateValue(f, e, ps, pc)
   }
-
-  private def overlaps(f: AddFile, keyCol: String, lo: Long, hi: Long): Boolean =
-    f.stats.flatMap(s =>
-      for { mn <- s.minValues.get(keyCol); mx <- s.maxValues.get(keyCol) }
-        yield !(mx < lo || mn > hi)
-    ).getOrElse(true) // no stats → conservatively in range
 
   /** MERGE (upsert by key) through the log — the Delta operation the
     * reference's CDC-upsert pipeline maps to (`MERGE INTO ... WHEN
@@ -2892,56 +2848,25 @@ object DeltaTable {
     }
   }
 
-  /** [[readPartitions]] for tables past SCALE.md's snapshot
-    * driver-memory ceiling: partition pruning happens ON the checkpoint
-    * DataFrame ([[DeltaLog.prunedFiles]]) so the driver holds only the
-    * pruned file list, never the full add set. Result-identical to
-    * [[readPartitions]] (spec-pinned); prefer the plain form below a few
-    * hundred thousand live files — it skips the pruning job. */
-  def readPartitionsDistributed(spark: SparkSession, table: String,
-                                filter: Map[String, String]): DataFrame = {
-    val s = DeltaLog.prunedSnapshot(spark, table, filter)
-    require(filter.keySet.subsetOf(s.partitionColumns.toSet),
-      s"delta: ${filter.keySet} not all partition columns ${s.partitionColumns}")
-    readFiles(spark, table, logSchema(s, table), s.partitionColumns, s.files)
-  }
-
-  /** [[readPartitions]] over a SET of values of one partition column —
-    * one snapshot (one log replay) for the whole probe set, where a
-    * per-value loop would replay the log once per value. */
-  def readPartitionsIn(spark: SparkSession, table: String,
-                       keyCol: String, values: Seq[String]): DataFrame = {
-    // candidate selection routes like DML's (round 14): past the replay
-    // threshold the matching files come off the checkpoint frame
-    val distributed = chooseDistributedReplay(spark, table)
-    val s =
-      if (distributed) DeltaLog.metaSnapshot(spark, table)
-      else snapshot(spark, table)
-    require(!s.isEmpty, s"delta: $table has no commits")
-    require(s.partitionColumns.contains(keyCol),
-      s"delta: $keyCol is not a partition column of ${s.partitionColumns}")
-    val schema = logSchema(s, table)
-    val physKey = ColumnMapping.physMap(schema).getOrElse(keyCol, keyCol)
-    val vs = values.toSet
-    val files = selectCandidates(spark, table, s, distributed,
-      f => f.partitionValues.get(physKey).exists(vs), "readPartitionsIn", degradeOnOverflow = true)
-    readFiles(spark, table, schema, s.partitionColumns, files)
-  }
-
-  /** General predicate-pruned read — the user-facing form of the DML
-    * candidate selection: files whose add-action stats AND
-    * partitionValues prove no row can match `predicate` are never
-    * opened ([[DataSkipping.mayMatchWithPartitions]] — stats-less files
-    * read conservatively); the row-level filter still applies on what
-    * remains. Subsumes [[readRange]]/[[readRangeString]]/
-    * [[readPartitions]] for arbitrary predicates: supported shapes
-    * skip, anything else degrades to a full scan with the filter —
-    * never a wrong result. */
+  /** The filtered read — the user-facing form of the DML candidate
+    * selection. Candidates prune from metadata first: files whose
+    * add-action stats AND partitionValues prove no row can match
+    * `predicate` are never opened ([[DataSkipping.mayMatchWithPartitions]];
+    * the log is the partition index, and stats-less files read
+    * conservatively). The exact row-level filter then applies to what
+    * remains. A partition equality or `isin`, a numeric or string
+    * range, and any other supported shape prune; a column widened to a
+    * wider literal's type (`col("id") >= 10L` on an INT `id`) prunes
+    * like its own type; anything else degrades to a full scan with the
+    * filter — never a wrong result.
+    *
+    * Replay strategy is data-driven: past
+    * `spark.graft.delta.distributedReplayThreshold` checkpoint rows the
+    * skipper runs on the checkpoint frame ([[candidatesDistributed]]) so
+    * the driver materializes only the candidates; below it the driver
+    * replay skips that job. Both sides are spec-pinned result-identical. */
   def readWhere(spark: SparkSession, table: String,
                 predicate: Column): DataFrame = {
-    // the user-facing form of DML candidate selection routes exactly
-    // like it (round 14): skipper on the checkpoint frame past the
-    // replay threshold, O(straddling files) on the driver
     val distributed = chooseDistributedReplay(spark, table)
     val s =
       if (distributed) DeltaLog.metaSnapshot(spark, table)
@@ -2955,92 +2880,15 @@ object DeltaTable {
       .filter(predicate)
   }
 
-  /** Data-skipping range read: files whose stats exclude [lo, hi] are
-    * never opened (stats-less files read conservatively); the row-level
-    * residual filter still applies. */
-  def readRange(spark: SparkSession, table: String, keyCol: String,
-                lo: Long, hi: Long): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val distributed = chooseDistributedReplay(spark, table)
-    val s =
-      if (distributed) DeltaLog.metaSnapshot(spark, table)
-      else snapshot(spark, table)
-    require(!s.isEmpty, s"delta: $table has no commits")
-    val schema = logSchema(s, table)
-    val physKey = ColumnMapping.physMap(schema).getOrElse(keyCol, keyCol)
-    val files = selectCandidates(spark, table, s, distributed,
-      overlaps(_, physKey, lo, hi), "readRange", degradeOnOverflow = true)
-    readFiles(spark, table, schema, s.partitionColumns, files)
-      .filter(col(keyCol) >= lo && col(keyCol) <= hi)
-  }
-
-  /** [[readRange]] over a STRING key: files whose string stats exclude
-    * [lo, hi] (UTF-8 byte order — the order Spark's `>=`/`<=` on
-    * strings uses) are never opened; stats-less files, including those
-    * whose bounds exceeded the recording cap at write time, read
-    * conservatively. The row-level residual filter still applies. */
-  def readRangeString(spark: SparkSession, table: String, keyCol: String,
-                      lo: String, hi: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val distributed = chooseDistributedReplay(spark, table)
-    val s =
-      if (distributed) DeltaLog.metaSnapshot(spark, table)
-      else snapshot(spark, table)
-    require(!s.isEmpty, s"delta: $table has no commits")
-    val schema = logSchema(s, table)
-    val physKey = ColumnMapping.physMap(schema).getOrElse(keyCol, keyCol)
-    val files = selectCandidates(spark, table, s, distributed, f =>
-      f.stats.flatMap(st =>
-        for { mn <- st.minStrings.get(physKey); mx <- st.maxStrings.get(physKey) }
-          yield utf8Lte(lo, mx) && utf8Lte(mn, hi)
-      ).getOrElse(true), "readRangeString", degradeOnOverflow = true) // no stats -> conservatively in range
-    readFiles(spark, table, schema, s.partitionColumns, files)
-      .filter(col(keyCol) >= lit(lo) && col(keyCol) <= lit(hi))
-  }
-
   /** Incremental tail read — the consuming half of a Delta-to-Delta
-    * pipeline (delta-spark's streaming source reads exactly this: files
-    * ADDED after the reader's last seen version). Returns the rows of
-    * every DATA-CHANGING add in versions (`sinceVersion`, head] plus the
-    * head version to record as the new cursor. Maintenance commits
-    * ([[compactFiles]]/[[optimize]]: dataChange=false adds + removes)
-    * are SKIPPED — their rows were already delivered from the files they
-    * rearranged. Data-changing removes (overwrite/merge) cannot be
-    * represented as appends and raise (the reader must re-read the full
-    * snapshot — upstream's ignoreChanges opt-in). */
-  def changesSince(spark: SparkSession, table: String,
-                   sinceVersion: Long): (DataFrame, Long) = {
-    // metadata-only: the tail read needs the head VERSION and schema,
-    // never the manifest — a 10M-file table's incremental consumer polls
-    // this per batch (round 14)
-    val head = DeltaLog.metaSnapshot(spark, table)
-    require(!head.isEmpty, s"delta: $table has no commits")
-    // bound the window by the HEAD we return as the cursor — a commit
-    // landing between the snapshot and the log listing must wait for the
-    // next poll, or its rows would be delivered now AND re-delivered
-    // after the stale cursor (duplicate ingestion)
-    val allVs = versions(spark, table)
-    val newVersions = allVs
-      .filter(v => v > sinceVersion && v <= head.version)
-    // versions are DENSE sequential integers, so the tail this cursor
-    // must read is exactly (sinceVersion, head]; anything missing from
-    // it — log-retention cleaning past the cursor, a damaged log —
-    // means unread commits are gone: raise, never silently skip rows
-    require(newVersions == (sinceVersion + 1 to head.version),
-      s"delta: $table's log is missing commits in ($sinceVersion, " +
-        s"${head.version}] (retained: $newVersions) — this cursor's " +
-        "unread commits are gone; re-read the full snapshot")
-    val commits = newVersions.map(DeltaLog.readCommit(spark, table, _))
-    require(commits.forall(_.dataChangingRemoves == 0),
-      s"delta: $table was overwritten/merged inside ($sinceVersion, ${head.version}] — " +
-        "append-only tailing cannot represent removes; re-read the full snapshot")
-    (readFiles(spark, table, logSchema(head, table), head.partitionColumns,
-      commits.flatMap(_.adds).filter(_.dataChange)), head.version)
-  }
-
-  /** [[changesSince]] that DEGRADES to a rebase instead of raising:
-    * same append-only tail and cursor semantics, but when the window
-    * cannot be represented as appends — a data-changing remove
+    * pipeline: the rows of every DATA-CHANGING add in versions
+    * (`sinceVersion`, head] plus the head version to record as the new
+    * cursor. The window is bounded by that head, so a commit landing
+    * mid-read waits for the next poll instead of being delivered twice.
+    * Maintenance commits ([[compactFiles]]/[[optimize]]: dataChange=false
+    * adds + removes) are SKIPPED — their rows were already delivered from
+    * the files they rearranged. When the window cannot be represented as
+    * appends — a data-changing remove
     * (overwrite / row-level DML / merge / restore) landed in it, or log
     * cleaning dropped unread commits past the cursor — it returns the
     * FULL head snapshot with `rebase = true`, telling the consumer to
@@ -3062,8 +2910,8 @@ object DeltaTable {
     // the rebase read PINS at the version returned as the cursor — a
     // commit racing in between the snapshot and the read would
     // otherwise be baked into this rebase AND re-delivered by the next
-    // tick's window (the same double-delivery changesSince's
-    // head-bounded window exists to prevent)
+    // tick's window (the same double delivery the head-bounded window
+    // exists to prevent)
     if (!dense)
       return (read(spark, table, Some(head.version)), head.version, true)
     val commits = newVersions.map(DeltaLog.readCommit(spark, table, _))
@@ -3077,7 +2925,7 @@ object DeltaTable {
   /** A maintenance rewrite: remove `olds`, add the staged rewrite of
     * `df`, all actions dataChange=false — the protocol's marker that the
     * commit REARRANGES rows without changing them, which is what lets
-    * [[changesSince]] tailers skip it instead of wedging (upstream
+    * [[changesOrRebase]] tailers skip it instead of wedging (upstream
     * OPTIMIZE does exactly this). Losing the commit race drops the
     * staged files and defers to the caller's next maintenance tick. */
   private def maintenanceRewrite(spark: SparkSession, table: String,
@@ -3111,7 +2959,7 @@ object DeltaTable {
     * carry over with no action, so the cost is O(small files), not
     * O(table): exactly what a micro-batch-append table needs periodically
     * (every 30 s commit leaves one small file; a day leaves ~3k). All
-    * actions are dataChange=false, so [[changesSince]] tailers skip the
+    * actions are dataChange=false, so [[changesOrRebase]] tailers skip the
     * commit. Readers see either layout, never a mix; time travel keeps
     * the old files. Single-writer maintenance op like [[optimize]]. */
   def compactFiles(spark: SparkSession, table: String,
@@ -3149,9 +2997,9 @@ object DeltaTable {
   /** OPTIMIZE ZORDER BY on the log: rewrite the table's data files along
     * the z-curve of `zorderBy` ([[graft.operators.ZOrder.layoutN]]) in
     * ONE atomic remove+add commit, all actions dataChange=false
-    * ([[changesSince]] tailers skip it). Each rewritten file then carries
+    * ([[changesOrRebase]] tailers skip it). Each rewritten file then carries
     * TIGHT add-action min/max stats on every z-order column, so
-    * [[readRange]] / [[merge]] skip aggressively on any of them —
+    * [[readWhere]] / [[merge]] skip aggressively on any of them —
     * delta-spark's `OPTIMIZE ... ZORDER BY`, executed on the from-scratch
     * log. Readers see either the old layout or the new one, never a mix;
     * time travel below the optimize still reads the original files.
@@ -3260,15 +3108,6 @@ object DeltaTable {
     }
     result
   }
-
-  /** Version history as (version, n_adds, n_removes) — the debugging /
-    * audit view (`DESCRIBE HISTORY`'s skeleton; [[describeHistory]] is
-    * the full form). */
-  def history(spark: SparkSession, table: String): Seq[(Long, Int, Int)] =
-    versions(spark, table).map { v =>
-      val c = DeltaLog.readCommit(spark, table, v)
-      (v, c.adds.size, c.removes.size)
-    }
 
   /** One history row per retained commit. */
   final case class HistoryEntry(version: Long, operation: String,

@@ -176,7 +176,8 @@ private[xlsx] object XlsxParse {
   }
 
   /** `xl/sharedStrings.xml`: one entry per `<si>`, concatenating its `<t>`
-    * runs (rich-text cells store several). */
+    * runs (rich-text cells store several). The `<t>` inside an `<rPh>`
+    * phonetic run is a reading hint (furigana), not cell text: skipped. */
   def sharedStrings(conf: Configuration, path: String): IndexedSeq[String] =
     openEntry(conf, path, "xl/sharedStrings.xml") match {
       case None => IndexedSeq.empty
@@ -186,19 +187,22 @@ private[xlsx] object XlsxParse {
           val out = mutable.ArrayBuffer.empty[String]
           val sb = new StringBuilder
           var inT = false
+          var inPh = false
           while (r.hasNext) {
             r.next() match {
               case XMLStreamConstants.START_ELEMENT =>
                 r.getLocalName match {
                   case "si" => sb.clear()
                   case "t" => inT = true
+                  case "rPh" => inPh = true
                   case _ =>
                 }
-              case XMLStreamConstants.CHARACTERS if inT => sb.append(r.getText)
+              case XMLStreamConstants.CHARACTERS if inT && !inPh => sb.append(r.getText)
               case XMLStreamConstants.END_ELEMENT =>
                 r.getLocalName match {
                   case "si" => out += sb.toString
                   case "t" => inT = false
+                  case "rPh" => inPh = false
                   case _ =>
                 }
               case _ =>
@@ -233,6 +237,7 @@ private[xlsx] object XlsxParse {
     private var cellType = ""
     private var nextCol = 0
     private var capture = false
+    private var inPh = false // inside an inline string's <rPh> phonetic run
     private var pending: Array[String] = _
     private var closed = false
 
@@ -268,12 +273,14 @@ private[xlsx] object XlsxParse {
                 cellType = Option(r.getAttributeValue(null, "t")).getOrElse("")
                 sb.clear()
               case "v" | "t" => capture = true
+              case "rPh" => inPh = true
               case _ =>
             }
-          case XMLStreamConstants.CHARACTERS if capture => sb.append(r.getText)
+          case XMLStreamConstants.CHARACTERS if capture && !inPh => sb.append(r.getText)
           case XMLStreamConstants.END_ELEMENT =>
             r.getLocalName match {
               case "v" | "t" => capture = false
+              case "rPh" => inPh = false
               case "c" =>
                 val raw = sb.toString
                 val v = cellType match {

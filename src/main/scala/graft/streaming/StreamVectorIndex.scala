@@ -104,8 +104,8 @@ object StreamVectorIndex {
       return Seq.empty[(Long, Int, Double)].toDF("nid", "rnk", "cosine")
     }
     // only the probed cell partitions are opened (log-indexed pruning)
-    val candidates = DeltaTable.readPartitionsIn(
-      spark, indexPath, "cell", cells.map(_.toString).toSeq)
+    val candidates = DeltaTable.readWhere(
+      spark, indexPath, col("cell").isin(cells.map(_.toString).toSeq: _*))
       .select(col("vec_id"), col("embedding"))
     val qn2 = qv.map(x => x * x).sum // 64 elems < 2^52: exact in a long
     val scored = VectorSearch.withNorm(candidates)

@@ -46,7 +46,7 @@ class ColumnMappingSpec extends SparkSpec {
     // predicate reads + partition reads translate for stats/partition keys
     assert(DeltaTable.readWhere(spark, t, col("label") === "d")
       .select("id").head().getLong(0) === 4L)
-    assert(DeltaTable.readPartitions(spark, t, Map("lang" -> "fr")).count() === 2)
+    assert(DeltaTable.readWhere(spark, t, col("lang") === "fr").count() === 2)
 
     // DML on the renamed column
     DeltaTable.update(spark, t, col("label") === "a", Map("label" -> lit("A")))
@@ -70,12 +70,12 @@ class ColumnMappingSpec extends SparkSpec {
     DeltaTable.renameColumn(spark, t, "lang", "language")
     val s = DeltaLog.snapshot(spark, t)
     assert(s.partitionColumns === Seq("language"))
-    assert(DeltaTable.readPartitions(spark, t, Map("language" -> "de"))
+    assert(DeltaTable.readWhere(spark, t, col("language") === "de")
       .select("id").head().getLong(0) === 2L)
     // appends partition under the new logical / old physical name
     DeltaTable.write(Seq((3L, "de")).toDF("id", "language"),
       t, SaveMode.Append, partitionBy = Seq("language"))
-    assert(DeltaTable.readPartitions(spark, t, Map("language" -> "de"))
+    assert(DeltaTable.readWhere(spark, t, col("language") === "de")
       .count() === 2)
   }
 

@@ -345,15 +345,25 @@ class DeletionVectorSpec extends SparkSpec {
     assert(DeltaLog.snapshot(spark, t).files
       .exists(_.dv.exists(_.cardinality == 2L)))
     assert(ids(t) === (3 to 6).toSet ++ (1 to 6).toSet)
-    // distributed (checkpoint-DataFrame) replay carries it too
+    // distributed (checkpoint-DataFrame) replay carries it too: below and
+    // above the threshold, readWhere and the graft-delta scan (which
+    // plans from DeltaLog.prunedSnapshot) read the same DV-filtered rows
     val pruned = DeltaLog.prunedSnapshot(spark, t, Map("p" -> "0"))
     assert(pruned.files.exists(_.dv.exists(_.cardinality == 2L)))
-    assert(DeltaTable.readPartitionsDistributed(spark, t, Map("p" -> "0"))
-      .select("id").collect().map(_.getInt(0)).toSet === (3 to 6).toSet)
+    def p0(): Set[Int] = DeltaTable.readWhere(spark, t, col("p") === 0)
+      .select("id").collect().map(_.getInt(0)).toSet
+    assert(p0() === (3 to 6).toSet)
+    val rows = DeltaLog.checkpointRows(spark, t).get
+    spark.conf.set("spark.graft.delta.distributedReplayThreshold", (rows - 1).toString)
+    try {
+      assert(DeltaTable.chooseDistributedReplay(spark, t))
+      assert(p0() === (3 to 6).toSet)
+      assert(spark.read.format("graft-delta").load(t).where(col("p") === 0)
+        .select("id").collect().map(_.getInt(0)).toSet === (3 to 6).toSet)
+    } finally spark.conf.unset("spark.graft.delta.distributedReplayThreshold")
     // a DELETE after the checkpoint still merges correctly
     DeltaTable.delete(spark, t, col("p") === 0 && col("id") === 3)
-    assert(DeltaTable.readPartitions(spark, t, Map("p" -> "0"))
-      .select("id").collect().map(_.getInt(0)).toSet === (4 to 6).toSet)
+    assert(p0() === (4 to 6).toSet)
   }
 
   test("one sidecar holds many vectors at distinct offsets") {
@@ -836,10 +846,24 @@ class DeletionVectorSpec extends SparkSpec {
   test("append tailing refuses a DV commit; snapshot re-read stays exact") {
     val t = tmp()
     dvTable(t, 1 to 10)
-    val (_, v0) = DeltaTable.changesSince(spark, t, -1L)
+    val (_, v0, _) = DeltaTable.changesOrRebase(spark, t, -1L)
     DeltaTable.delete(spark, t, col("id") <= 3)
-    val e = intercept[Exception] { DeltaTable.changesSince(spark, t, v0) }
-    assert(e.getMessage.contains("overwritten/merged"))
+    // the batch tail cannot fold a DV commit as appends: it rebases onto
+    // the DV-filtered head snapshot
+    val (whole, v1, rebase) = DeltaTable.changesOrRebase(spark, t, v0)
+    assert(rebase && v1 === v0 + 1)
+    assert(whole.collect().map(_.getInt(0)).toSet === (4 to 10).toSet)
+    // the graft-delta stream, the refusing tail, fails the DV commit
+    val root = java.nio.file.Files.createTempDirectory("dv_tail").toString
+    val q = spark.readStream.format("graft-delta").option("startingVersion", v0.toString)
+      .load(t).writeStream.format("parquet").option("path", s"$root/out")
+      .option("checkpointLocation", s"$root/chk")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      try q.awaitTermination(60000) finally q.stop()
+    }
+    assert(e.getMessage.contains("overwritten"),
+      s"the plain stream must refuse a DV commit: ${e.getMessage}")
     assert(ids(t) === (4 to 10).toSet)
   }
 }

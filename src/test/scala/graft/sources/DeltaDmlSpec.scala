@@ -117,7 +117,7 @@ class DeltaDmlSpec extends SparkSpec {
       (i, if (i == 5) "five" else s"v$i", s"p${i % 2}")).toSet
     assert(got === want)
     // partition pruning still works over the rewritten files
-    val p1 = DeltaTable.readPartitions(spark, t, Map("p" -> "p1")).collect()
+    val p1 = DeltaTable.readWhere(spark, t, col("p") === "p1").collect()
       .map(_.getInt(0)).toSet
     assert(p1 === (5 to 19 by 2).toSet)
   }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
@@ -13,6 +14,20 @@ class DeltaSpec extends SparkSpec {
 
   private def tmp() =
     java.nio.file.Files.createTempDirectory("delta").toString + "/t"
+
+  /** Run `body` with the distributed-replay threshold one below `t`'s
+    * checkpoint row count: reads select candidates on the checkpoint
+    * frame, and the candidate cap (the same threshold) still holds any
+    * candidate set smaller than the checkpoint, so nothing degrades to
+    * the driver replay. */
+  private def distributed[A](t: String)(body: => A): A = {
+    val rows = DeltaLog.checkpointRows(spark, t).get
+    spark.conf.set("spark.graft.delta.distributedReplayThreshold", (rows - 1).toString)
+    try {
+      assert(DeltaTable.chooseDistributedReplay(spark, t))
+      body
+    } finally spark.conf.unset("spark.graft.delta.distributedReplayThreshold")
+  }
 
   test("append commits are versioned; reads see the union; SQL via registerView") {
     val t = tmp()
@@ -35,8 +50,8 @@ class DeltaSpec extends SparkSpec {
     // VERSION AS OF 0 still sees the pre-overwrite table
     assert(DeltaTable.read(spark, t, versionAsOf = Some(0L))
       .collect().map(r => (r.getInt(0), r.getString(1))).toSet === Set((1, "old")))
-    val (v1, adds, removes) = DeltaTable.history(spark, t).last
-    assert(v1 === 1L && removes >= 1 && adds >= 1,
+    val h = DeltaTable.describeHistory(spark, t).head
+    assert(h.version === 1L && h.nRemoves >= 1 && h.nAdds >= 1,
       "overwrite must carry removes and adds in one commit")
   }
 
@@ -182,7 +197,7 @@ class DeltaSpec extends SparkSpec {
       .map(r => (r.getInt(0), r.getString(1))).toSet === Set((1, "a"), (2, "b")))
   }
 
-  test("add actions carry protocol-shaped stats; readRange skips excluded files") {
+  test("add actions carry protocol-shaped stats; a readWhere range skips excluded files") {
     val t = tmp()
     DeltaTable.write((1 to 100).map(i => (i, i.toLong * 2)).toDF("id", "v")
       .coalesce(1), t, SaveMode.Append)
@@ -193,13 +208,14 @@ class DeltaSpec extends SparkSpec {
     val lo = files.flatMap(_.stats).map(_.minValues("id")).min
     assert(lo === 1L)
     // range read of the low file only: correct rows, and the pruned scan
-    // must reference exactly one data file
-    val df = DeltaTable.readRange(spark, t, "id", 10L, 20L)
+    // must reference exactly one data file — with LONG bounds on the INT
+    // id, so the analyzer's widening cast must not defeat the skipping
+    val df = DeltaTable.readWhere(spark, t, col("id") >= 10L && col("id") <= 20L)
     assert(df.collect().map(_.getInt(0)).sorted.toSeq === (10 to 20).toSeq)
     assert(df.inputFiles.length === 1, "stats pruning must skip the high file")
   }
 
-  test("string stats: add actions carry string bounds; readRangeString skips excluded files") {
+  test("string stats: add actions carry string bounds; a readWhere string range skips excluded files") {
     val t = tmp()
     DeltaTable.write((1 to 50).map(i => (i, f"src_a$i%02d")).toDF("id", "src")
       .coalesce(1), t, SaveMode.Append)
@@ -208,7 +224,8 @@ class DeltaSpec extends SparkSpec {
     val files = DeltaLog.snapshot(spark, t).files
     assert(files.forall(_.stats.exists(_.minStrings.contains("src"))),
       "adds must carry string bounds")
-    val df = DeltaTable.readRangeString(spark, t, "src", "src_a10", "src_a20")
+    val df = DeltaTable.readWhere(spark, t,
+      col("src") >= "src_a10" && col("src") <= "src_a20")
     assert(df.collect().map(_.getString(1)).sorted.toSeq ===
       (10 to 20).map(i => f"src_a$i%02d"))
     assert(df.inputFiles.length === 1, "string stats pruning must skip the m-file")
@@ -232,7 +249,7 @@ class DeltaSpec extends SparkSpec {
     assert(files.forall(_.stats.exists(_.minValues.contains("id"))),
       "the integral column keeps its bounds")
     // stats-less string column: every file reads, the residual filter decides
-    val got = DeltaTable.readRangeString(spark, t, "s", "a", "b")
+    val got = DeltaTable.readWhere(spark, t, col("s") >= "a" && col("s") <= "b")
     assert(got.collect().map(_.getInt(0)).toSeq === Seq(1))
     assert(got.inputFiles.length === 2, "no bounds -> conservative full read")
   }
@@ -253,7 +270,7 @@ class DeltaSpec extends SparkSpec {
       .collect().map(r => (r.getInt(0), r.getString(1), r.getDouble(2))).toSet
     assert(got === Set((1, "fr", 1.0), (2, "de", 2.0), (3, "fr", 3.0), (4, "de", 4.0)))
     // pruned read opens ONLY the fr files
-    val fr = DeltaTable.readPartitions(spark, t, Map("lang" -> "fr"))
+    val fr = DeltaTable.readWhere(spark, t, col("lang") === "fr")
     assert(fr.collect().map(_.getInt(0)).toSet === Set(1, 3))
     assert(fr.inputFiles.forall(_.contains("lang=fr")),
       "pruned read must not touch other partitions")
@@ -278,35 +295,36 @@ class DeltaSpec extends SparkSpec {
       && f.partitionValues.get("lang").isDefined),
       "merged rewrites must re-stage into hive dirs with partitionValues")
     // id=3 moved fr → de: no live fr file may still hold it
-    val fr2 = DeltaTable.readPartitions(spark, t, Map("lang" -> "fr"))
+    val fr2 = DeltaTable.readWhere(spark, t, col("lang") === "fr")
     assert(fr2.collect().map(_.getInt(0)).toSet === Set(1))
   }
 
-  test("changesSince tails appended files only; overwrites force a re-read") {
+  test("changesOrRebase tails appended files only; overwrites force a rebase") {
     val t = tmp()
     DeltaTable.write(Seq((1, "a")).toDF("id", "s"), t, SaveMode.Append)   // v0
     DeltaTable.write(Seq((2, "b")).toDF("id", "s"), t, SaveMode.Append)   // v1
     DeltaTable.write(Seq((3, "c")).toDF("id", "s"), t, SaveMode.Append)   // v2
-    val (delta, cursor) = DeltaTable.changesSince(spark, t, sinceVersion = 0L)
+    val (delta, cursor, rebase) = DeltaTable.changesOrRebase(spark, t, sinceVersion = 0L)
     assert(delta.collect().map(_.getInt(0)).toSet === Set(2, 3))
-    assert(cursor === 2L)
+    assert(cursor === 2L && !rebase)
     // caught up: empty tail from the cursor
-    val (empty, c2) = DeltaTable.changesSince(spark, t, cursor)
-    assert(empty.count() === 0L && c2 === 2L)
+    val (empty, c2, r2) = DeltaTable.changesOrRebase(spark, t, cursor)
+    assert(empty.count() === 0L && c2 === 2L && !r2)
     // a COMPACTION in the window is dataChange=false: the tailer skips it
     // (its rows were already delivered) instead of wedging or re-reading
     DeltaTable.compactFiles(spark, t, smallerThanBytes = Long.MaxValue)
-    val (afterCompact, c3) = DeltaTable.changesSince(spark, t, cursor)
+    val (afterCompact, c3, r3) = DeltaTable.changesOrRebase(spark, t, cursor)
     assert(afterCompact.count() === 0L, "compaction rows must not re-deliver")
-    assert(c3 === 3L)
+    assert(c3 === 3L && !r3)
     DeltaTable.write(Seq((4, "d")).toDF("id", "s"), t, SaveMode.Append)
-    val (fresh, _) = DeltaTable.changesSince(spark, t, c3)
-    assert(fresh.collect().map(_.getInt(0)).toSeq === Seq(4))
-    // an overwrite in the window cannot be represented as appends
+    val (fresh, _, r4) = DeltaTable.changesOrRebase(spark, t, c3)
+    assert(fresh.collect().map(_.getInt(0)).toSeq === Seq(4) && !r4)
+    // an overwrite in the window cannot be represented as appends: the
+    // whole head snapshot comes back as a rebase
     DeltaTable.write(Seq((9, "z")).toDF("id", "s"), t, SaveMode.Overwrite)
-    intercept[IllegalArgumentException] {
-      DeltaTable.changesSince(spark, t, c3)
-    }
+    val (whole, c5, r5) = DeltaTable.changesOrRebase(spark, t, c3)
+    assert(r5, "an overwrite in the window must rebase")
+    assert(c5 === 5L && whole.collect().map(_.getInt(0)).toSeq === Seq(9))
   }
 
   test("incremental MV on the Delta log: exactly-once, time travel, compaction-proof replays") {
@@ -488,7 +506,7 @@ class DeltaSpec extends SparkSpec {
     val s = DeltaLog.snapshot(spark, t)
     assert(s.partitionColumns === Seq("lang"))
     assert(s.files.forall(_.partitionValues.contains("lang")))
-    val fr = DeltaTable.readPartitions(spark, t, Map("lang" -> "fr"))
+    val fr = DeltaTable.readWhere(spark, t, col("lang") === "fr")
     assert(fr.collect().map(_.getInt(0)).toSeq === Seq(1))
     assert(fr.inputFiles.forall(_.contains("lang=fr")))
   }
@@ -505,7 +523,7 @@ class DeltaSpec extends SparkSpec {
     val after = DeltaLog.snapshot(spark, t)
     assert(after.files.size === 2, s"one file per lang: ${after.files.map(_.path)}")
     assert(after.files.map(_.partitionValues("lang")).toSet === Set("fr", "de"))
-    val fr = DeltaTable.readPartitions(spark, t, Map("lang" -> "fr"))
+    val fr = DeltaTable.readWhere(spark, t, col("lang") === "fr")
     assert(fr.collect().map(_.getInt(0)).toSet === Set(1, 3))
   }
 
@@ -560,7 +578,8 @@ class DeltaSpec extends SparkSpec {
     val rows = (0 until 400).map(i => (i % 97, (i * 31) % 89, s"r$i"))
     DeltaTable.write(rows.take(200).toDF("x", "y", "s").coalesce(1), t, SaveMode.Append)
     DeltaTable.write(rows.drop(200).toDF("x", "y", "s").coalesce(1), t, SaveMode.Append)
-    val preFiles = DeltaTable.readRange(spark, t, "x", 0L, 5L).inputFiles.length
+    def narrow = DeltaTable.readWhere(spark, t, col("x") >= 0L && col("x") <= 5L)
+    val preFiles = narrow.inputFiles.length
     assert(preFiles === 2, "pre-optimize: every file spans the x range")
     DeltaTable.optimize(spark, t, Seq("x", "y"), nFiles = 8)
     // contents identical, laid out as nFiles z-ordered files
@@ -569,7 +588,7 @@ class DeltaSpec extends SparkSpec {
     assert(got === rows.toSet)
     assert(DeltaLog.snapshot(spark, t).files.size === 8)
     // stats are now tight on x: a narrow range opens a strict subset
-    val postFiles = DeltaTable.readRange(spark, t, "x", 0L, 5L).inputFiles.length
+    val postFiles = narrow.inputFiles.length
     assert(postFiles < 8, s"z-order must skip files, opened $postFiles of 8")
     // time travel below the optimize reads the original layout
     assert(DeltaTable.read(spark, t, versionAsOf = Some(1L)).count() === 400L)
@@ -726,7 +745,10 @@ class DeltaSpec extends SparkSpec {
     val t = tmp()
     // checkpointed history: two partitioned appends, then a checkpoint,
     // then a tail append AND a tail compaction (removes reaching back
-    // into the checkpoint) — the shapes prunedFiles must replay
+    // into the checkpoint) — the shapes the distributed replay must
+    // replay. Above the threshold readWhere selects on the checkpoint
+    // frame and the graft-delta scan pushes the partition equality into
+    // DeltaLog.prunedSnapshot; both must match the driver replay.
     def df(ids: Range, p: String) =
       ids.map(i => (i.toLong, p)).toDF("id", "p")
     DeltaTable.write(df(0 until 10, "a"), t, SaveMode.Append, partitionBy = Seq("p"))
@@ -734,15 +756,21 @@ class DeltaSpec extends SparkSpec {
     DeltaLog.checkpoint(spark, t)
     DeltaTable.write(df(20 until 30, "a"), t, SaveMode.Append)
     DeltaTable.compactFiles(spark, t, smallerThanBytes = Long.MaxValue)
+    def ids(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getLong(0)).toSet
     for (part <- Seq("a", "b")) {
-      val driver = DeltaTable.readPartitions(spark, t, Map("p" -> part))
-        .collect().map(_.getLong(0)).toSet
-      val dist = DeltaTable.readPartitionsDistributed(spark, t, Map("p" -> part))
-        .collect().map(_.getLong(0)).toSet
-      assert(dist === driver, s"partition $part diverged")
+      val driver = ids(DeltaTable.readWhere(spark, t, col("p") === part))
+      assert(driver.nonEmpty)
+      distributed(t) {
+        assert(ids(DeltaTable.readWhere(spark, t, col("p") === part)) === driver,
+          s"partition $part diverged")
+        assert(ids(spark.read.format("graft-delta").load(t).where(col("p") === part)
+          .select("id")) === driver, s"graft-delta scan of partition $part diverged")
+      }
     }
-    assert(DeltaTable.readPartitionsDistributed(spark, t, Map("p" -> "a"))
-      .inputFiles.forall(_.contains("p=a")), "pruning must not open other partitions")
+    distributed(t) {
+      assert(DeltaTable.readWhere(spark, t, col("p") === "a")
+        .inputFiles.forall(_.contains("p=a")), "pruning must not open other partitions")
+    }
   }
 
   test("replay strategy is data-driven: checkpoint row count vs the threshold, both sides") {
@@ -764,10 +792,10 @@ class DeltaSpec extends SparkSpec {
       spark.conf.set("spark.graft.delta.distributedReplayThreshold", rows.toString)
       assert(!DeltaTable.chooseDistributedReplay(spark, t))
       // ABOVE the crossing: rows > threshold picks the distributed path,
-      // and the routed readPartitions stays result-identical
+      // and the routed readWhere stays result-identical
       spark.conf.set("spark.graft.delta.distributedReplayThreshold", (rows - 1).toString)
       assert(DeltaTable.chooseDistributedReplay(spark, t))
-      assert(DeltaTable.readPartitions(spark, t, Map("p" -> "a"))
+      assert(DeltaTable.readWhere(spark, t, col("p") === "a")
         .collect().map(_.getLong(0)).toSet === (0 until 10).map(_.toLong).toSet)
     } finally spark.conf.unset("spark.graft.delta.distributedReplayThreshold")
     // default threshold (200k): this small table stays driver-side
@@ -876,14 +904,14 @@ class DeltaSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       DeltaTable.read(spark, t, versionAsOf = Some(0L))
     }
-    // a tailer whose cursor predates the horizon must raise, not skip:
+    // a tailer whose cursor predates the horizon must rebase, not skip:
     // commits (cursor, min-retained) are gone and their rows unreadable
-    intercept[IllegalArgumentException] {
-      DeltaTable.changesSince(spark, t, sinceVersion = -1L)
-    }
-    // a tailer at or past the horizon still works
-    val (delta, v) = DeltaTable.changesSince(spark, t, sinceVersion = 1L)
-    assert(v === 2L && delta.collect().map(_.getLong(0)).toSeq === Seq(3L))
+    val (whole, v0, rebase) = DeltaTable.changesOrRebase(spark, t, sinceVersion = -1L)
+    assert(rebase && v0 === 2L)
+    assert(whole.collect().map(_.getLong(0)).toSet === Set(1L, 2L, 3L))
+    // a tailer at or past the horizon still tails
+    val (delta, v, r) = DeltaTable.changesOrRebase(spark, t, sinceVersion = 1L)
+    assert(!r && v === 2L && delta.collect().map(_.getLong(0)).toSeq === Seq(3L))
   }
 
   test("describeHistory surfaces commitInfo operations, newest first") {
@@ -1024,11 +1052,15 @@ class DeltaSpec extends SparkSpec {
     assert(DeltaLog.commit(spark, t, head.version + 2, Seq(
       DeltaLog.removeAction(victim.path, 2L))))
     val part = victim.partitionValues("p")
-    val driver = DeltaTable.readPartitions(spark, t, Map("p" -> part))
-      .collect().map(_.getLong(0)).toSet
-    val dist = DeltaTable.readPartitionsDistributed(spark, t, Map("p" -> part))
-      .collect().map(_.getLong(0)).toSet
-    assert(dist === driver, s"resurrected rows: ${dist.diff(driver)}")
+    def ids(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getLong(0)).toSet
+    val driver = ids(DeltaTable.readWhere(spark, t, col("p") === part))
+    distributed(t) {
+      val dist = ids(DeltaTable.readWhere(spark, t, col("p") === part))
+      assert(dist === driver, s"resurrected rows: ${dist.diff(driver)}")
+      val scan = ids(spark.read.format("graft-delta").load(t)
+        .where(col("p") === part).select("k"))
+      assert(scan === driver, s"graft-delta scan resurrected rows: ${scan.diff(driver)}")
+    }
   }
 
   test("schema evolution re-emits metaData with the TABLE's id, not a fresh one") {

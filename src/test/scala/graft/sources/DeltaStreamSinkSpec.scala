@@ -2,6 +2,7 @@ package graft.sources.delta
 
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.SparkSpec
@@ -71,7 +72,7 @@ class DeltaStreamSinkSpec extends SparkSpec {
     assert(head.partitionColumns === Seq("lang"))
     assert(head.files.forall(f => f.path.startsWith("lang=")
       && f.partitionValues.contains("lang")))
-    assert(DeltaTable.readPartitions(spark, t, Map("lang" -> "fr"))
+    assert(DeltaTable.readWhere(spark, t, col("lang") === "fr")
       .collect().map(_.getInt(0)).toSet === Set(1, 3))
     // a second stream with NO partitionBy adopts the table's partitioning
     val mem2 = MemoryStream[(Int, String)]

@@ -356,19 +356,23 @@ class DistributedDmlSpec extends SparkSpec {
       DeltaTable.readWhere(spark, t, col("k") === 3L).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     def viaRange(): Set[Long] =
-      DeltaTable.readRange(spark, t, "id", 100L, 110L).collect()
-        .map(_.getLong(0)).toSet
-    def viaIn(): Set[Long] =
-      DeltaTable.readPartitionsIn(spark, t, "k", Seq("2", "5")).collect()
-        .map(_.getLong(0)).toSet
+      DeltaTable.readWhere(spark, t, col("id") >= 100L && col("id") <= 110L)
+        .collect().map(_.getLong(0)).toSet
+    // string literals on the numeric partition: the analyzer's cast
+    // must not defeat the pruning, on either side of the threshold
+    def inRead = DeltaTable.readWhere(spark, t, col("k").isin("2", "5"))
+    def viaIn(): Set[Long] = inRead.collect().map(_.getLong(0)).toSet
     val (w0, r0, i0) = (viaWhere(), viaRange(), viaIn())
+    assert(inRead.inputFiles.length === 2, "isin must open only k=2 and k=5")
     withThreshold(files) {
       assert(DeltaTable.chooseDistributedReplay(spark, t))
       assert(viaWhere() === w0)
       assert(viaRange() === r0)
       assert(viaIn() === i0)
+      assert(inRead.inputFiles.length === 2, "isin must open only k=2 and k=5")
     }
-    assert(w0.nonEmpty && r0 === (100L to 110L).toSet && i0.nonEmpty)
+    assert(w0.nonEmpty && r0 === (100L to 110L).toSet &&
+      i0 === (0L until 400L).filter(i => i % 8 == 2 || i % 8 == 5).toSet)
   }
 
   test("distributed shallow CLONE commits the exact add set the driver path does") {

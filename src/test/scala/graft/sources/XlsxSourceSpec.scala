@@ -93,7 +93,8 @@ class XlsxSourceSpec extends SparkSpec {
       name: String,
       sheets: Map[String, String],
       shared: Seq[String] = Nil,
-      richShared: Seq[Seq[String]] = Nil): String = {
+      richShared: Seq[Seq[String]] = Nil,
+      phoneticShared: Seq[(String, String)] = Nil): String = {
     val f = java.nio.file.Files.createTempDirectory("xlsx_syn").resolve(name)
     val zos = new java.util.zip.ZipOutputStream(java.nio.file.Files.newOutputStream(f))
     def put(entry: String, content: String): Unit = {
@@ -102,7 +103,8 @@ class XlsxSourceSpec extends SparkSpec {
       zos.closeEntry()
     }
     val si = shared.map(s => s"<si><t>$s</t></si>") ++ richShared.map(runs =>
-      runs.map(t => s"<r><rPr><b/></rPr><t>$t</t></r>").mkString("<si>", "", "</si>"))
+      runs.map(t => s"<r><rPr><b/></rPr><t>$t</t></r>").mkString("<si>", "", "</si>")) ++
+      phoneticShared.map { case (t, reading) => s"<si><t>$t</t>${phonetic(reading)}</si>" }
     if (si.nonEmpty)
       put("xl/sharedStrings.xml", s"""<?xml version="1.0"?><sst>${si.mkString}</sst>""")
     sheets.foreach { case (sheet, rowsXml) =>
@@ -114,6 +116,10 @@ class XlsxSourceSpec extends SparkSpec {
   }
   private def inline(ref: String, v: String) =
     s"""<c r="$ref" t="inlineStr"><is><t>$v</t></is></c>"""
+  /** An `<rPh>` phonetic run (a furigana reading hint) plus its
+    * properties, as Excel writes them after a string's own text. */
+  private def phonetic(reading: String) =
+    s"""<rPh sb="0" eb="1"><t>$reading</t></rPh><phoneticPr fontId="1"/>"""
 
   test("synthetic workbook: inline strings and raw numbers") {
     val p = writeWorkbook("inline.xlsx", Map("sheet1" ->
@@ -214,6 +220,21 @@ class XlsxSourceSpec extends SparkSpec {
     assert(r(0).getString(0) === "R&D" && r(0).getString(1) === "a < b && c")
     assert(XlsxParse.sharedStrings(
       spark.sparkContext.hadoopConfiguration, p) === IndexedSeq("a < b && c", "x < y"))
+  }
+
+  test("synthetic workbook: phonetic runs are not cell text, in inline and shared strings") {
+    val p = writeWorkbook("phonetic.xlsx", Map("sheet1" ->
+      (s"""<row>${inline("A1", "city")}<c r="B1" t="s"><v>0</v></c></row>""" +
+        s"""<row><c r="A2" t="inlineStr"><is><t>東京</t>${phonetic("トウキョウ")}</is></c>""" +
+        """<c r="B2" t="s"><v>1</v></c></row>""")),
+      shared = Seq("ward"), phoneticShared = Seq("渋谷" -> "シブヤ"))
+    val df = spark.read.format("xlsx").load(p)
+    assert(df.schema.fieldNames.toSeq === Seq("city", "ward"))
+    val r = df.collect()
+    assert(r.length === 1)
+    assert(r(0).getString(0) === "東京" && r(0).getString(1) === "渋谷")
+    assert(XlsxParse.sharedStrings(
+      spark.sparkContext.hadoopConfiguration, p) === IndexedSeq("ward", "渋谷"))
   }
 
   test("cell-reference decoding handles multi-letter columns") {
